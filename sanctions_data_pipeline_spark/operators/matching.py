@@ -58,7 +58,7 @@ def variant_match(candidates: DataFrame, key_cols: list[str],
 
 
 def _scan_chunk(vals: list[str], elig: list[bool], carry: str,
-                nxt_after: str) -> tuple[list[str], str]:
+                nxt_after: str) -> list[str]:
     """Sequential agreeing-fill scan of ONE contiguous chunk.
 
     Faithful to the reference's in-place row loop (main.py:950-1028):
@@ -68,7 +68,7 @@ def _scan_chunk(vals: list[str], elig: list[bool], carry: str,
     carry back over the row's own value, so later rows see it.
 
     Returns per-row fill values ('' = not filled; only meaningful for
-    eligible rows) and the outgoing carry.
+    eligible rows).
     """
     n = len(vals)
     nxt = [""] * n
@@ -83,7 +83,7 @@ def _scan_chunk(vals: list[str], elig: list[bool], carry: str,
             cells[i] = carry           # fill; carry value unchanged
         elif vals[i]:
             carry = vals[i]
-    return cells, carry
+    return cells
 
 
 def _chunk_transition(vals: list[str], elig: list[bool],
@@ -126,113 +126,166 @@ def _chunk_transition(vals: list[str], elig: list[bool],
     return v, (sim(v) if v is not None else None), sim(None)
 
 
-def agreeing_fill_scan(df: DataFrame, order_col: str, value: Column,
-                       eligible: Column, base: Column, out_col: str,
-                       n_chunks: int | None = None) -> DataFrame:
-    """Distributed, exact implementation of the reference's sequential
-    agreeing-neighbor fill loop (main.py:950-1028) — NO unpartitioned
-    window, no driver-side row loop.
+def _chunk_summary(vals: list[str], elig: list[bool]) -> tuple | None:
+    """What the rest of the sequence needs to know about a chunk, or
+    None when the chunk has no non-empty value (its carry transition
+    is then the identity).
 
-    Three chunk-local passes over deterministic contiguous chunks of
-    the global ``order_col`` order (boundaries from approxQuantile, so
-    every pass sees identical chunks without caching):
+    The next value after the chunk matters for the carry at ONE row
+    only: the last non-empty row (rows after it are empty, and rows
+    before it see a value inside the chunk). So the summary is
+    ``(first, last, last_eligible, v, out_v, out_gen)``: the first and
+    last non-empty values, whether the last one may fill, and the
+    :func:`_chunk_transition` of the rows before it."""
+    filled = [i for i, x in enumerate(vals) if x]
+    if not filled:
+        return None
+    k = filled[-1]
+    return (vals[filled[0]], vals[k], bool(elig[k]),
+            *_chunk_transition(vals[:k], elig[:k], vals[k]))
 
-    1. per-chunk first non-empty value      (tiny partial-agg shuffle)
-    2. per-chunk carry-transition summary   (slim applyInPandas)
-    3. per-chunk sequential fill            (applyInPandas, full rows)
 
-    Driver state is O(n_chunks) summaries; the transitions compose
-    exactly because each chunk's carry function is the identity on at
-    most one value and constant otherwise (see _chunk_transition).
-    ``value`` is the scanned array ('' = empty), ``eligible`` marks
-    rows the fill loop may write, ``base`` is the output for
-    non-eligible rows. ``order_col`` must be numeric and unique.
-    """
+def _compose(summaries: dict[int, tuple | None]) -> dict[int, tuple[str, str]]:
+    """Chunk id -> (incoming carry, nearest non-empty value after the
+    chunk), from every chunk's :func:`_chunk_summary` in chunk order."""
+    ids = sorted(summaries)
+    nxt_after, cur = {}, ""
+    for k in reversed(ids):
+        nxt_after[k] = cur
+        if summaries[k] is not None:
+            cur = summaries[k][0]
+    bounds, carry = {}, ""
+    for k in ids:
+        bounds[k] = (carry, nxt_after[k])
+        if summaries[k] is None:
+            continue
+        _, last, last_elig, v, out_v, out_gen = summaries[k]
+        mid = out_v if v is not None and carry == v else out_gen
+        if mid is None:
+            mid = carry
+        fills = last_elig and mid and nxt_after[k] and mid == nxt_after[k]
+        carry = mid if fills else last
+    return bounds
+
+
+def _apply_passes(vals: list[str], elig: list[bool], base: list[str],
+                  bounds: list[tuple[str, str]]):
+    """Run one agreeing-fill pass per (incoming carry, next value after
+    the chunk) pair over a chunk. Each pass after the first re-scans
+    the previous pass's output, where a row eligible before and still
+    empty is eligible again (the reference's third pass). Returns the
+    next pass's (values, eligibility, base); the base is the output."""
+    for carry, nxt_after in bounds:
+        cells = _scan_chunk(vals, elig, carry, nxt_after)
+        base = [c if e else b for c, e, b in zip(cells, elig, base)]
+        vals, elig = base, [e and not b for e, b in zip(elig, base)]
+    return vals, elig, base
+
+
+def _chunks(batches, order_col: str):
+    """Each chunk of one partition's rows in scan order, with the
+    boundaries composed so far and the next pass's inputs."""
     import pandas as pd
 
-    spark = df.sparkSession
-    if n_chunks is None:
-        n_chunks = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    with_cols = (
-        df.withColumn("__v", F.coalesce(value, F.lit("")))
-        .withColumn("__e", eligible.cast("boolean"))
-        .withColumn("__base", F.coalesce(base, F.lit("")))
-    )
-    integral = dict(df.dtypes).get(order_col) in ("tinyint", "smallint", "int", "bigint")
-    probs = [i / n_chunks for i in range(1, n_chunks)]
-    bounds = with_cols.approxQuantile(order_col, probs, 0.001) if probs else []
-    bounds = sorted({int(b) if integral else b for b in bounds})
-    if bounds:
-        barr = F.array(*[F.lit(b) for b in bounds])
-        chunk = F.size(F.filter(barr, lambda b: F.col(order_col) > b))
-    else:
-        chunk = F.lit(0)
-    with_cols = with_cols.withColumn("__chunk", chunk.cast("int"))
-
-    # pass 1: first non-empty value per chunk (map-side combinable min_by)
-    first_ne = {
-        r["__chunk"]: r["fv"]
-        for r in with_cols.filter(F.col("__v") != "")
-        .groupBy("__chunk").agg(F.min_by("__v", order_col).alias("fv"))
-        .collect()
-    }
-    n_slots = max([n_chunks] + [c + 1 for c in first_ne])
-    nxt_after = [""] * n_slots
-    cur = ""
-    for k in range(n_slots - 1, -1, -1):
-        nxt_after[k] = cur
-        if first_ne.get(k, ""):
-            cur = first_ne[k]
-
-    # pass 2: carry-transition summary per chunk
-    def summarize(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        cid = int(key[0])
+    frames = [f for f in batches if len(f)]
+    if not frames:
+        return
+    for _, pdf in pd.concat(frames, ignore_index=True).groupby("__chunk"):
         pdf = pdf.sort_values(order_col)
-        v, out_v, out_gen = _chunk_transition(
-            list(pdf["__v"]), list(pdf["__e"].fillna(False)), nxt_after[cid])
-        return pd.DataFrame([{"__chunk": cid, "v": v,
-                              "out_v": out_v, "out_gen": out_gen}])
+        bounds = (list(zip(pdf["__carry"].iat[0], pdf["__nxt"].iat[0]))
+                  if "__carry" in pdf else [])
+        yield pdf, bounds, _apply_passes(
+            list(pdf["__v"]), list(pdf["__e"].eq(True)),
+            list(pdf["__base"]), bounds)
 
-    summaries = {
-        r["__chunk"]: (r["v"], r["out_v"], r["out_gen"])
-        for r in with_cols.select("__chunk", order_col, "__v", "__e")
-        .groupBy("__chunk")
-        .applyInPandas(summarize,
-                       "__chunk int, v string, out_v string, out_gen string")
-        .collect()
-    }
-    carry = ""
-    carry_in = [""] * n_slots
-    for k in range(n_slots):
-        carry_in[k] = carry
-        v, out_v, out_gen = summaries.get(k, (None, None, None))
-        if v is not None and carry == v:
-            carry = out_v if out_v is not None else carry
-        else:
-            carry = out_gen if out_gen is not None else carry
 
-    # pass 3: chunk-local sequential fill with exact boundary state
+def agreeing_fill_scan(df: DataFrame, order_col: str, value: Column,
+                       eligible: Column, base: Column, out_col: str,
+                       third_pass: bool = False) -> DataFrame:
+    """Distributed, exact implementation of the reference's sequential
+    agreeing-neighbor fill loop (main.py:950-1028), as ONE lazy plan:
+    building it starts no Spark job, and the whole scan runs inside the
+    caller's action.
+
+    ``value`` is the scanned string ('' = empty), ``eligible`` marks
+    rows the fill loop may write (NULL = not eligible), ``base`` is the
+    output for non-eligible rows. ``order_col`` must be numeric and
+    unique. The plan:
+
+    1. one range exchange cuts the rows into contiguous chunks of the
+       ``order_col`` order, one per shuffle partition; every later step
+       reads this one exchange, so the input lineage runs once;
+    2. one Arrow pass per chunk emits a constant-size summary
+       (:func:`_chunk_summary`);
+    3. one single-partition step composes the summaries in chunk order
+       into each chunk's incoming carry and next value
+       (:func:`_compose` — exact, because a chunk's carry function is
+       the identity on at most one value and constant otherwise, see
+       :func:`_chunk_transition`);
+    4. the per-chunk sequential scan (:func:`_scan_chunk`) runs over
+       the chunk's rows broadcast-joined with its composed boundary.
+
+    ``third_pass=True`` re-scans the output in the same chunks (the
+    reference's third pass, main.py:995-1028): a row eligible and
+    still empty after the first scan is eligible again, over the first
+    scan's output values. Its summaries come from the first scan's
+    kernel, and the final kernel applies both scans (see
+    :func:`_apply_passes`).
+    """
+    import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
-    out_schema = StructType(
-        list(with_cols.schema.fields) + [StructField(out_col, StringType())])
 
-    def fill(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        cid = int(key[0])
-        pdf = pdf.sort_values(order_col)
-        cells, _ = _scan_chunk(
-            list(pdf["__v"]), list(pdf["__e"].fillna(False)),
-            carry_in[cid], nxt_after[cid])
-        pdf = pdf.copy()
-        elig = pdf["__e"].fillna(False).to_numpy()
-        pdf[out_col] = [c if e else b for c, e, b
-                        in zip(cells, elig, pdf["__base"])]
-        return pdf
-
-    return (
-        with_cols.groupBy("__chunk").applyInPandas(fill, out_schema)
-        .drop("__v", "__e", "__base", "__chunk")
+    n_chunks = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    rows = (
+        df.select("*", F.coalesce(value, F.lit("")).alias("__v"),
+                  eligible.cast("boolean").alias("__e"),
+                  F.coalesce(base, F.lit("")).alias("__base"))
+        .repartitionByRange(n_chunks, order_col)
+        .select("*", F.spark_partition_id().alias("__chunk"))
     )
+    summary_schema = ("__chunk int, first string, last string, "
+                      "last_elig boolean, v string, out_v string, "
+                      "out_gen string, __carry array<string>, "
+                      "__nxt array<string>")
+    fields = ["first", "last", "last_elig", "v", "out_v", "out_gen"]
+
+    def summarize(batches):
+        for pdf, bounds, (vals, elig, _) in _chunks(batches, order_col):
+            s = _chunk_summary(vals, elig) or (None,) * len(fields)
+            yield pd.DataFrame([{
+                "__chunk": int(pdf["__chunk"].iat[0]), **dict(zip(fields, s)),
+                "__carry": [c for c, _ in bounds],
+                "__nxt": [a for _, a in bounds],
+            }])
+
+    def compose(pdf):
+        recs = pdf.to_dict("records")
+        bounds = _compose({
+            int(r["__chunk"]): None if r["first"] is None
+            else tuple(r[f] for f in fields) for r in recs})
+        return pd.DataFrame([{
+            "__chunk": k, "__carry": [*r["__carry"], bounds[k][0]],
+            "__nxt": [*r["__nxt"], bounds[k][1]],
+        } for r in recs for k in [int(r["__chunk"])]])
+
+    # Broadcasting the carries keeps the rows in their range partitions:
+    # the kernels run on the one exchange, with no second shuffle.
+    carries = None
+    for _ in range(2 if third_pass else 1):
+        src = rows if carries is None else F.broadcast(carries).join(rows, "__chunk")
+        carries = (src.mapInPandas(summarize, summary_schema).groupBy()
+                   .applyInPandas(compose, "__chunk int, __carry array<string>, "
+                                           "__nxt array<string>"))
+
+    out_fields = list(df.schema.fields) + [StructField(out_col, StringType())]
+    keep = [f.name for f in df.schema.fields]
+
+    def fill(batches):
+        for pdf, _, (_, _, out) in _chunks(batches, order_col):
+            yield pdf[keep].assign(**{out_col: out})
+
+    return (F.broadcast(carries).join(rows, "__chunk")
+            .mapInPandas(fill, StructType(out_fields)))
 
 
 def neighbor_fill(df: DataFrame, order_col: str, name_col: str,
@@ -247,13 +300,18 @@ def neighbor_fill(df: DataFrame, order_col: str, name_col: str,
     writes back into ``rem2_candidates``) and AFTER (original values)
     in the global row order, filled only when the two agree.
 
-    Distributed via :func:`agreeing_fill_scan` — chunk-local scans with
-    exact boundary-state exchange, no unpartitioned window.
+    Returns a lazy DataFrame: building it starts no Spark job. The fill
+    is the :func:`agreeing_fill_scan` plan — one range exchange into
+    contiguous chunks, per-chunk summaries composed in one
+    single-partition step, then one chunk kernel — so the input
+    lineage runs once, inside the caller's action.
 
     ``third_pass=True`` additionally applies the reference's third pass
     (main.py:995-1028): duplicates still empty adopt the nearest
     non-empty OUTPUT cells (again sequential, earlier third-pass writes
-    visible) when prev == next.
+    visible) when prev == next. It shares the chunks of pass 2: the
+    pass-3 summaries come from the pass-2 kernel, and the final kernel
+    applies pass 2 and then pass 3 to each chunk.
 
     ``flag_col`` marks rows whose final value differs from their own
     candidate (came from neighbor inference). ``state_col`` emits the
@@ -262,26 +320,21 @@ def neighbor_fill(df: DataFrame, order_col: str, name_col: str,
     'conflict' (red: duplicate left empty — pass-3 fills clear it).
     """
     n_occ = F.count(F.lit(1)).over(W.partitionBy(name_col))
-    df2 = df.withColumn("__n_occ", n_occ)
+    df2 = df.select("*", n_occ.alias("__n_occ"))
     dup = (F.col(name_col) != "UNKNOWN") & (F.col("__n_occ") > 1)
     base2 = (F.when(F.col(name_col) == "UNKNOWN", F.lit(""))
              .otherwise(F.coalesce(F.col(cand_col), F.lit(""))))
-    out = agreeing_fill_scan(df2, order_col, F.col(cand_col), dup, base2, out_col)
-    if third_pass:
-        elig3 = dup & (F.col("__p2") == "")
-        out = agreeing_fill_scan(
-            out.withColumnRenamed(out_col, "__p2"), order_col,
-            F.col("__p2"), elig3, F.col("__p2"), out_col).drop("__p2")
+    out = agreeing_fill_scan(df2, order_col, F.col(cand_col), dup, base2,
+                             out_col, third_pass=third_pass)
+    cols = [F.col(c) for c in df.columns + [out_col]]
     if flag_col:
         inferred = ((F.col(out_col) != "")
                     & (F.col(out_col) != F.coalesce(F.col(cand_col), F.lit(""))))
-        out = out.withColumn(
-            flag_col, F.when(inferred, 1).otherwise(0).cast("bigint"))
+        cols.append(F.when(inferred, 1).otherwise(0).cast("bigint").alias(flag_col))
     if state_col:
-        out = out.withColumn(
-            state_col,
+        cols.append(
             F.when(F.col(out_col) != "", F.lit("filled"))
             .when((F.col(name_col) == "UNKNOWN") | (F.col("__n_occ") == 1),
                   F.lit("empty_unique"))
-            .otherwise(F.lit("conflict")))
-    return out.drop("__n_occ")
+            .otherwise(F.lit("conflict")).alias(state_col))
+    return out.select(*cols)

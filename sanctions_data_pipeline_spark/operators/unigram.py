@@ -259,10 +259,7 @@ def em_piece_counts(words_df, word_col: str, count_col: str,
 
         acc: Counter = Counter()
         for pdf in batches:
-            for w, c in zip(pdf[word_col], pdf[count_col]):
-                ci = int(c)
-                for piece in _viterbi_costs_py(w, costs):
-                    acc[piece] += ci
+            _count_pieces(zip(pdf[word_col], pdf[count_col]), costs, acc)
         if acc:
             import pandas as _pd
             yield _pd.DataFrame({"piece": list(acc.keys()),
@@ -284,11 +281,19 @@ def em_piece_counts_py(rows, model: dict[str, float]) -> dict[str, int]:
 
     costs = {p: -math.log(v) for p, v in sorted(model.items())}
     acc: Counter = Counter()
+    _count_pieces(rows, costs, acc)
+    return dict(acc)
+
+
+def _count_pieces(rows, costs: dict[str, float], acc) -> None:
+    """Add each ``(word, count)`` row's segmentation to ``acc``. A NULL
+    word has no pieces, as the JVM explode of its NULL array had none."""
     for w, c in rows:
+        if w is None:
+            continue
         ci = int(c)
         for piece in _viterbi_costs_py(w, costs):
             acc[piece] += ci
-    return dict(acc)
 
 
 def viterbi_char_margin_ok_py(words, model: dict[str, float],
@@ -299,8 +304,17 @@ def viterbi_char_margin_ok_py(words, model: dict[str, float],
     (AND is order-free, so batch partials vs one pass agree); returns
     None when no word was valid, mirroring bool_and over no rows."""
     costs = {p: -math.log(v) for p, v in sorted(model.items())}
-    ok = None
+    return _margin_ok(words, costs, tol, None)
+
+
+def _margin_ok(words, costs: dict[str, float], tol: float,
+               ok: bool | None) -> bool | None:
+    """Fold the words into ``ok`` (None = no valid word yet). A NULL
+    word is skipped: its JVM cost sums were NULL, which bool_and
+    ignores."""
     for w in words:
+        if w is None:
+            continue
         vit = 0.0
         valid = True
         for piece in _viterbi_costs_py(w, costs):
@@ -342,27 +356,7 @@ def viterbi_char_margin_ok(words_df, word_col: str,
 
         ok = None
         for pdf in batches:
-            for w in pdf[word_col]:
-                vit = 0.0
-                valid = True
-                for piece in _viterbi_costs_py(w, costs):
-                    pc = costs.get(piece)
-                    if pc is None:
-                        valid = False
-                        break
-                    vit = vit + pc
-                if valid:
-                    ch = 0.0
-                    for g in w:
-                        gc = costs.get(g)
-                        if gc is None:
-                            valid = False
-                            break
-                        ch = ch + gc
-                if not valid:
-                    continue
-                word_ok = vit <= ch + tol
-                ok = word_ok if ok is None else (ok and word_ok)
+            ok = _margin_ok(pdf[word_col], costs, tol, ok)
         if ok is not None:
             yield _pd.DataFrame({"ok": [bool(ok)]})
 

@@ -5,8 +5,11 @@ The reference iterates entity XML files on the driver and writes Excel
 cells one by one; here every per-entity step is an array expression over
 the typed entity row (no explode/reshuffle until the REM2 match), the
 PDF mapping is a broadcast dimension, and the only global-order step
-(duplicate neighbor-fill, passes 2+3) runs as chunk-local sequential
-scans with exact boundary-state exchange — no unpartitioned window.
+(duplicate neighbor-fill, passes 2+3) is one lazy plan: a range
+exchange into contiguous chunks, per-chunk summaries composed in one
+single-partition step, then a chunk kernel that applies both passes —
+no unpartitioned window. Building the table starts no Spark job; the
+entity lineage runs once, inside the sink's action.
 """
 
 from __future__ import annotations

@@ -254,3 +254,14 @@ def test_round7_ops_tolerate_empty_tables(spark, sf_dir, tmp_path):
                               for r in stump)
     dq = {r.check_name: r for r in qs["dq_expectations"](spark, d).collect()}
     assert len(dq) == 6 and dq["row_count_positive"].passed is False
+
+
+def test_neighbor_fill_on_empty_and_single_row(spark):
+    from sanctions_data_pipeline_spark.operators.matching import neighbor_fill
+
+    schema = "row_id int, full_name string, cand string"
+    for rows, want in (([], []), ([(1, "A", "X")], ["X"])):
+        out = neighbor_fill(spark.createDataFrame(rows, schema), "row_id",
+                            "full_name", "cand", state_col="state",
+                            third_pass=True)
+        assert [r.filled for r in out.collect()] == want

@@ -50,6 +50,20 @@ def test_pdf_chunker_and_fields(spark):
     assert by_name["Maria Lopez"].numbers == "EU.5555.0"
 
 
+def test_pipeline_build_starts_no_job(spark):
+    """Building the whole pipeline, neighbor fill included, runs no
+    Spark job: everything executes in the sink's action."""
+    sc = spark.sparkContext
+    group = "pipeline-build"
+    sc.setJobGroup(group, "build only")
+    try:
+        out = run_pipeline(spark, XML, _pdf_texts(spark))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out.count() == 6
+
+
 def test_pdf_decode_roundtrips_fixture(spark):
     """Real PDF bytes -> text via the vendored extractor: the decoded
     text chunk/parses identically to the pre-extracted .txt fixture

@@ -3,11 +3,13 @@ neighbor fill, checked against hand-computed reference behavior."""
 
 from __future__ import annotations
 
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from sanctions_data_pipeline_spark.functions.gender import infer_gender
 from sanctions_data_pipeline_spark.operators.matching import (
-    build_variant_mapping, neighbor_fill, variant_match,
+    _apply_passes, _chunk_summary, _compose, build_variant_mapping,
+    neighbor_fill, variant_match,
 )
 from sanctions_data_pipeline_spark.plans import registry
 
@@ -143,10 +145,11 @@ def test_neighbor_fill_reference_semantics(spark):
     assert got[8] == ""
 
 
-def _ref_passes(names, cands):
+def _ref_passes(names, cands, third_pass=True):
     """Pure-python replay of the reference loops (main.py:950-1028):
     pass 2 over candidates (fills overwrite the working array, visible
-    to later rows), pass 3 over cells (same in-place visibility)."""
+    to later rows), pass 3 over cells (same in-place visibility).
+    ``third_pass=False`` returns the cells after pass 2."""
     total = len(names)
     cands = list(cands)
     cells = [None] * total
@@ -176,6 +179,8 @@ def _ref_passes(names, cands):
                 cands[idx] = prev
             else:
                 cells[idx] = ""
+    if not third_pass:
+        return cells
     for idx in range(total):
         fn = names[idx]
         if fn == "UNKNOWN" or cells[idx] or occ[fn] <= 1:
@@ -233,6 +238,125 @@ def test_neighbor_fill_randomized_vs_reference_loop(spark):
         cands = [rng.choice(val_pool) for _ in range(n)]
         assert _spark_passes(spark, names, cands) == _ref_passes(names, cands), \
             (names, cands)
+
+    # the chunk count is the shuffle-partition count: one chunk, and
+    # more chunks than rows (every row its own chunk)
+    names = [rng.choice(name_pool) for _ in range(40)]
+    cands = [rng.choice(val_pool) for _ in range(40)]
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in (1, 2 * len(names)):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            assert _spark_passes(spark, names, cands) == \
+                _ref_passes(names, cands), (parts, names, cands)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+def _ref_fill(vals, elig, base, passes):
+    """The reference loops over any (value, eligibility, base) columns:
+    an eligible row takes the nearest non-empty working value before it
+    when it equals the nearest one after it (fills are visible to later
+    rows); a second pass re-scans the cells for eligible rows still
+    empty. NULL eligibility is not eligible."""
+    n = len(vals)
+
+    def scan(arr, idx, step):
+        j = idx + step
+        while 0 <= j < n and not arr[j]:
+            j += step
+        return arr[j] if 0 <= j < n else ""
+
+    work, cells = list(vals), list(base)
+    for idx in range(n):
+        if elig[idx]:
+            prev, nxt = scan(work, idx, -1), scan(work, idx, 1)
+            cells[idx] = prev if prev and prev == nxt else ""
+            if cells[idx]:
+                work[idx] = prev
+    for idx in range(n if passes == 2 else 0):
+        if elig[idx] and not cells[idx]:
+            prev, nxt = scan(cells, idx, -1), scan(cells, idx, 1)
+            if prev and prev == nxt:
+                cells[idx] = prev
+    return cells
+
+
+def _chunked_fill(vals, elig, base, cuts, passes):
+    """The neighbor-fill plan without Spark: chunks cut at ``cuts``, one
+    summary per chunk that has rows, composition, then the chunk
+    kernel; chunks with no rows take no part, as in the range
+    exchange."""
+    chunks = [(k, slice(a, b)) for k, (a, b)
+              in enumerate(zip([0, *cuts], [*cuts, len(vals)])) if b > a]
+    bounds = {k: [] for k, _ in chunks}
+    for _ in range(passes):
+        summaries = {}
+        for k, sl in chunks:
+            v, e, _ = _apply_passes(vals[sl], elig[sl], base[sl], bounds[k])
+            summaries[k] = _chunk_summary(v, e)
+        for k, b in _compose(summaries).items():
+            bounds[k].append(b)
+    return [x for k, sl in chunks
+            for x in _apply_passes(vals[sl], elig[sl], base[sl], bounds[k])[2]]
+
+
+@st.composite
+def _fill_case(draw, elig_pool):
+    n = draw(st.integers(0, 30))
+    vals = draw(st.lists(st.sampled_from(["", "", "X", "Y", "Z"]),
+                         min_size=n, max_size=n))
+    elig = draw(st.lists(st.sampled_from(elig_pool), min_size=n, max_size=n))
+    names = draw(st.lists(st.sampled_from(["A", "B", "C", "UNKNOWN"]),
+                          min_size=n, max_size=n))
+    cuts = sorted(draw(st.lists(st.integers(0, n), max_size=8)))
+    return names, vals, elig, cuts
+
+
+@given(_fill_case([True, False]))
+@settings(max_examples=300, deadline=None)
+def test_chunk_algebra_equals_reference_passes(case):
+    """Summaries -> composition -> chunk kernel over any contiguous
+    split (empty chunks, chunks with 0, 1 or more values) reproduce
+    the reference's pass 2 and pass 3 over the whole sequence."""
+    names, cands, _, cuts = case
+    occ = {x: names.count(x) for x in names}
+    dup = [x != "UNKNOWN" and occ[x] > 1 for x in names]
+    base = ["" if x == "UNKNOWN" else c for x, c in zip(names, cands)]
+    for passes in (1, 2):
+        assert _chunked_fill(cands, dup, base, cuts, passes) == \
+            _ref_passes(names, cands, third_pass=passes == 2)
+
+
+@given(_fill_case([True, False, None]), st.data())
+@settings(max_examples=300, deadline=None)
+def test_chunk_algebra_null_eligibility(case, data):
+    """The same law for any base column, with NULL eligibility."""
+    _, vals, elig, cuts = case
+    base = data.draw(st.lists(st.sampled_from(["", "X", "W"]),
+                              min_size=len(vals), max_size=len(vals)))
+    for passes in (1, 2):
+        assert _chunked_fill(vals, elig, base, cuts, passes) == \
+            _ref_fill(vals, elig, base, passes)
+
+
+def test_neighbor_fill_starts_no_job(spark):
+    """Building neighbor_fill (both passes) runs no Spark job: the fill
+    runs inside the caller's action."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(1, "A", "X"), (2, "A", ""), (3, "B", "X")],
+                               "row_id int, full_name string, cand string")
+    group = "neighbor-fill-build"
+    sc.setJobGroup(group, "build only")
+    try:
+        out = neighbor_fill(df, "row_id", "full_name", "cand",
+                            out_col="rem2", state_col="rem2_state",
+                            third_pass=True)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r.rem2 for r in out.orderBy("row_id").collect()] == \
+        _ref_passes(["A", "A", "B"], ["X", "", "X"]) == ["", "X", "X"]
 
 
 def test_fixture_queries_run(spark):

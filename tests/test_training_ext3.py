@@ -1786,6 +1786,35 @@ def test_em_piece_counts_arrow_path_equals_jvm_path(spark, sf_dir):
     assert arrow_ok == jvm_ok
 
 
+def test_unigram_arrow_paths_skip_null_words(spark):
+    """A NULL word has no pieces and no margin verdict — on the Arrow
+    workers, in the driver-side replays and in the JVM form they
+    replaced — instead of crashing the Python worker."""
+    from pyspark.sql import functions as F
+
+    from sanctions_data_pipeline_spark.operators import unigram as ug
+
+    model = {"ab": 0.4, "a": 0.2, "b": 0.2, "c": 0.2}
+    rows = [("abc", 2), (None, 5), ("ab", 1)]
+    words = spark.createDataFrame(rows, "w string, c bigint")
+    arrow = {r.piece: int(r.n) for r in
+             ug.em_piece_counts(words, "w", "c", model).collect()}
+    jvm = {r.piece: int(r.n) for r in
+           ug.segment_words(words, "w", model).groupBy("piece")
+           .agg(F.sum("c").alias("n")).collect()}
+    assert arrow == jvm == ug.em_piece_counts_py(rows, model) \
+        == {"ab": 3, "c": 2}
+    assert ug.viterbi_char_margin_ok(words, "w", model).collect()[0][0] \
+        is True
+    assert ug.viterbi_char_margin_ok_py([w for w, _ in rows], model) is True
+
+    nulls = spark.createDataFrame([(None, 1)], "w string, c bigint")
+    assert ug.em_piece_counts(nulls, "w", "c", model).collect() == []
+    assert ug.viterbi_char_margin_ok(nulls, "w", model).collect()[0][0] \
+        is None
+    assert ug.viterbi_char_margin_ok_py([None], model) is None
+
+
 def test_segment_words_join_path_tolerates_duplicate_words(spark):
     """The broadcast-join path must accept duplicate word rows (the
     literal path always did) — map_from_entries crashed with
