@@ -37,7 +37,9 @@ warm-repeat methodology comparable across rounds).
 
 The full per-query detail (min/cold/median + noise metadata) is also
 written to bench_detail.json next to this file — the judge-readable
-artifact that never depends on the stdout tail window.
+artifact that never depends on the stdout tail window. A subset run
+(``python bench.py q1 ...``) writes bench_detail.subset.json instead,
+so it never overwrites the full run's record.
 """
 
 from __future__ import annotations
@@ -216,7 +218,8 @@ def main() -> None:
                        cal_per_pass=cal_per_pass, colds=colds)
     # judge-readable artifact independent of the stdout tail window
     detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_detail.json")
+        os.path.dirname(os.path.abspath(__file__)),
+        "bench_detail.subset.json" if selected else "bench_detail.json")
     try:
         with open(detail_path, "w") as f:
             f.write(lines[0] + "\n")

@@ -408,48 +408,6 @@ def window_audio(media_df: DataFrame, frame_len: int = 256,
         _win, AUDIO_WINDOW_SCHEMA)
 
 
-def decode_features_arrow(media_df: DataFrame) -> DataFrame:
-    """The :func:`decode_features` kernel on ``mapInArrow``: record
-    batches cross into Python as raw pyarrow — no pandas conversion on
-    either edge — which matters exactly here, where the payload column
-    is large binary and the pandas hop would copy every buffer into
-    Python objects. Output is row-identical to decode_features (pinned
-    by tests)."""
-
-    def decode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        import pyarrow as pa
-
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            mtypes = batch.column("media_type").to_pylist()
-            bufs = batch.column("media").to_pylist()
-            cols = {name: [] for name in
-                    ("doc_id", "media_type", "n_bytes", "width", "height",
-                     "n_frames", "features")}
-            for doc_id, mtype, buf in zip(doc_ids, mtypes, bufs):
-                w, h, nf, feats = _fake_decode(mtype, buf)
-                cols["doc_id"].append(doc_id)
-                cols["media_type"].append(mtype)
-                cols["n_bytes"].append(len(buf))
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["n_frames"].append(nf)
-                cols["features"].append(feats)
-            yield pa.RecordBatch.from_pydict({
-                "doc_id": pa.array(cols["doc_id"], pa.int64()),
-                "media_type": pa.array(cols["media_type"], pa.string()),
-                "n_bytes": pa.array(cols["n_bytes"], pa.int64()),
-                "width": pa.array(cols["width"], pa.int32()),
-                "height": pa.array(cols["height"], pa.int32()),
-                "n_frames": pa.array(cols["n_frames"], pa.int32()),
-                "features": pa.array(cols["features"],
-                                     pa.list_(pa.float64())),
-            })
-
-    return media_df.select("doc_id", "media_type", "media") \
-                   .mapInArrow(decode, DECODE_SCHEMA)
-
-
 def spectral_features(media_df: DataFrame, frame_len: int = 256,
                       hop_len: int = 128) -> DataFrame:
     """Per-doc FFT spectral profile of the int16-PCM interpretation:

@@ -4,6 +4,14 @@ All shuffle-conscious: signatures (md5 / minhash / simhash) are computed
 map-side in one projection so the shuffle moves ~16-byte keys, never
 document text; candidate generation joins only within buckets.
 
+The MinHash-LSH and SimHash cores take one ``hash`` parameter (see
+:data:`HASH_BITS`): ``"xxhash64"`` (the default) is the fast JVM path;
+``"md5_32"`` is the DuckDB-portable :func:`md5_32` idiom, under which
+signatures, fingerprints and verification replay verbatim as SQL, so
+the registry's ``*_portable`` entries carry exact oracles. Everything
+but the hash (banding, pigeonhole buckets, collapse-first, the
+candidate-only verify) is the same code in both configurations.
+
 At 100 TB: exact dedup shuffles |docs| hash keys; MinHash-LSH shuffles
 |docs|x bands band-signatures; verification joins fetch text for the
 candidate pairs only (a tiny fraction of the corpus).
@@ -14,6 +22,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from sanctions_data_pipeline_spark.functions.hof import let
+
+
+# signature hash -> its bit width (SimHash fingerprint width)
+HASH_BITS = {"xxhash64": 64, "md5_32": 32}
+
+
+def md5_32(col) -> Column:
+    """First 32 bits of md5 as a non-negative bigint — bit-identical to
+    DuckDB's ``('0x' || substr(md5(x), 1, 8))::BIGINT``."""
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
+
+
+def _is_md5(hash: str) -> bool:
+    if hash not in HASH_BITS:
+        raise ValueError(f"hash must be one of {list(HASH_BITS)}, got {hash!r}")
+    return hash == "md5_32"
 
 
 def normalized_text(col: Column) -> Column:
@@ -45,13 +69,19 @@ def word_shingles(text_col: Column, k: int = 3) -> Column:
     ))).otherwise(F.array().cast("array<string>"))
 
 
-def shingle_hashes(text_col: Column, k: int = 3) -> Column:
+def shingle_hashes(text_col: Column, k: int = 3,
+                   hash: str = "xxhash64") -> Column:
     """Distinct k-word shingles as 64-bit hashes: each token string is
     xxhash64'd ONCE (let-bound), then shingle i is the xxhash64 of its
     k token hashes — no per-shingle string building. Set-equivalent to
     ``transform(word_shingles(...), xxhash64)`` modulo hash collisions
     (distinct trigram <-> distinct hash), which is what Jaccard / MinHash
-    consume; ~3x cheaper on the corpus-wide hot path."""
+    consume; ~3x cheaper on the corpus-wide hot path.
+
+    ``hash="md5_32"``: :func:`md5_32` of each space-joined shingle
+    string, the form a SQL engine replays verbatim."""
+    if _is_md5(hash):
+        return F.array_distinct(F.transform(word_shingles(text_col, k), md5_32))
     toks = F.split(normalized_text(text_col), " ")
     return let(
         F.transform(toks, lambda t: F.xxhash64(t)),
@@ -467,11 +497,13 @@ def _containment_core(sets: DataFrame, block_cols: list[str],
 
 
 def _minhash_wide(docs: DataFrame, n_hashes: int, k: int,
-                  id_col: str, text_col: str) -> DataFrame:
+                  id_col: str, text_col: str,
+                  hash: str = "xxhash64") -> DataFrame:
     """(id, m0..m{n-1}) minhash columns: shingle-hash explode + n_hashes
     ``min(xxhash64(hs, j))`` aggregates — whole-stage codegen end to
     end, with map-side partial combine so the shuffle carries
-    ~|docs| x (n_hashes+1) longs, not |shingles| rows.
+    ~|docs| x (n_hashes+1) longs, not |shingles| rows. Under
+    ``hash="md5_32"`` the j-th hash is ``md5_32(j || ':' || hs)``.
 
     (An earlier HOF-expression form — transform/array_min lambdas — ran
     interpreted at ~120 us/doc; this runs ~10x faster and scales the
@@ -482,11 +514,17 @@ def _minhash_wide(docs: DataFrame, n_hashes: int, k: int,
     # an under-split local scan (no-op at cluster scale, see catalog)
     docs = widen_small_scan(docs, id_col)
     ex = docs.select(
-        F.col(id_col), F.explode(shingle_hashes(F.col(text_col), k)).alias("hs"),
+        F.col(id_col),
+        F.explode(shingle_hashes(F.col(text_col), k, hash)).alias("hs"),
     )
+
+    def seeded(h: int) -> Column:
+        if _is_md5(hash):
+            return md5_32(F.concat_ws(":", F.lit(h), F.col("hs")))
+        return F.xxhash64("hs", F.lit(h))
+
     return ex.groupBy(id_col).agg(*[
-        F.min(F.xxhash64("hs", F.lit(h))).alias(f"m{h}")
-        for h in range(n_hashes)
+        F.min(seeded(h)).alias(f"m{h}") for h in range(n_hashes)
     ])
 
 
@@ -506,7 +544,8 @@ def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 32, bands: int = 8,
                       threshold: float = 0.5, k: int = 3,
                       id_col: str = "doc_id",
                       text_col: str = "text",
-                      max_bucket: int | None = None) -> DataFrame:
+                      max_bucket: int | None = None,
+                      hash: str = "xxhash64") -> DataFrame:
     """MinHash + LSH banding + exact-Jaccard verification.
 
     rows-per-band r = n_hashes/bands; a pair becomes a candidate when
@@ -534,17 +573,22 @@ def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 32, bands: int = 8,
     :func:`minhash_lsh_pairs_quarantined` to receive the spilled
     bucket list alongside the pairs. None (default) = uncapped, the
     registered-oracle behavior.
+
+    ``hash`` picks the shingle and signature hash (see
+    :data:`HASH_BITS`); the band key is xxhash64 over the band's r
+    minhashes in both configurations. ``hash="md5_32"`` is the
+    SQL-replayable form (dd_minhash_lsh_portable).
     """
     return minhash_lsh_pairs_quarantined(
         docs, n_hashes, bands, threshold, k, id_col, text_col,
-        max_bucket)[0]
+        max_bucket, hash)[0]
 
 
 def minhash_lsh_pairs_quarantined(
         docs: DataFrame, n_hashes: int = 32, bands: int = 8,
         threshold: float = 0.5, k: int = 3,
         id_col: str = "doc_id", text_col: str = "text",
-        max_bucket: int | None = 64,
+        max_bucket: int | None = 64, hash: str = "xxhash64",
 ) -> tuple[DataFrame, DataFrame | None]:
     """Capped variant of :func:`minhash_lsh_pairs` whose OUTPUT
     CONTRACT is ``(pairs, quarantine)``: pairs as usual (minus
@@ -558,39 +602,33 @@ def minhash_lsh_pairs_quarantined(
     quarantine ``None``."""
     if _dup_mass_low(docs, text_col):
         return _minhash_lsh_core(docs, n_hashes, bands, threshold,
-                                 k, id_col, text_col, max_bucket)
+                                 k, id_col, text_col, max_bucket, hash)
     groups = _text_groups(docs, [], id_col, text_col)
     reps = groups.select(F.col("rep").alias(id_col),
                          F.col("rep_text").alias(text_col))
     rep_pairs, quarantine = _minhash_lsh_core(
-        reps, n_hashes, bands, threshold, k, id_col, text_col, max_bucket)
+        reps, n_hashes, bands, threshold, k, id_col, text_col, max_bucket,
+        hash)
     # docs with no shingles carry no signature and pair with nothing
     within = _within_group_pairs(
-        groups.filter(F.size(shingle_hashes(F.col("rep_text"), k)) > 0),
+        groups.filter(F.size(shingle_hashes(F.col("rep_text"), k, hash)) > 0),
         [F.lit(1.0).alias("jac")])
     cross = _expand_rep_pairs(rep_pairs, groups, ["jac"])
     return within.unionByName(cross), quarantine
 
 
-def _minhash_lsh_pairs_direct(docs: DataFrame, n_hashes: int, bands: int,
-                              threshold: float, k: int,
-                              id_col: str, text_col: str) -> DataFrame:
-    """The banding pipeline proper, uncapped (see minhash_lsh_pairs)."""
-    return _minhash_lsh_core(docs, n_hashes, bands, threshold, k,
-                             id_col, text_col, None)[0]
-
-
 def _minhash_lsh_core(docs: DataFrame, n_hashes: int, bands: int,
                       threshold: float, k: int, id_col: str, text_col: str,
-                      max_bucket: int | None,
+                      max_bucket: int | None, hash: str = "xxhash64",
                       ) -> tuple[DataFrame, DataFrame | None]:
-    """Banding + (optional) hot-bucket cap + candidate join + verify."""
+    """The banding pipeline proper (see minhash_lsh_pairs): banding +
+    (optional) hot-bucket cap + candidate join + verify."""
     r = n_hashes // bands
     # banded (below) feeds both sides of the candidate self-join (and
     # the hot-bucket depth agg + anti join when capped): persist the
     # signature table so the shingle explode + n_hashes min-aggregates
     # run once, not 2-4x (shared-subtree discipline, |docs| x 33 longs)
-    wide = _minhash_wide(docs, n_hashes, k, id_col, text_col).persist()
+    wide = _minhash_wide(docs, n_hashes, k, id_col, text_col, hash).persist()
     # band sig = one codegen'd xxhash64 over the band's r minhash
     # columns; the explode ships (band_id, 8-byte sig) rows only
     banded = wide.select(
@@ -619,7 +657,8 @@ def _minhash_lsh_core(docs: DataFrame, n_hashes: int, bands: int,
     # both verify joins read sh — persist so the candidate re-shingle
     # pass (semi-join + shingle_hashes) runs once, not twice
     sh = needed.select(F.col(id_col),
-                       shingle_hashes(F.col(text_col), k).alias("sh")).persist()
+                       shingle_hashes(F.col(text_col), k, hash).alias("sh")
+                       ).persist()
     verified = (
         cand.join(sh.withColumnRenamed(id_col, "i").withColumnRenamed("sh", "sh_i"), "i")
         .join(sh.withColumnRenamed(id_col, "j").withColumnRenamed("sh", "sh_j"), "j")
@@ -672,47 +711,57 @@ def simhash(text_col: Column, n_bits: int = 64) -> Column:
 
 def simhash_fingerprints(docs: DataFrame, id_col: str = "doc_id",
                          text_col: str = "text",
-                         n_bits: int = 64) -> DataFrame:
+                         hash: str = "xxhash64") -> DataFrame:
     """SimHash as a token-explode + n_bits conditional-sum aggregation.
 
     Same fingerprint as :func:`simhash`, but whole-stage-codegen'd
     column math instead of interpreted higher-order array folds (~5x
     faster measured). The explode shuffles (id, 8-byte hash) rows and
     hash-aggregates with map-side partial combine, so the shuffle that
-    reaches the wire is ~|docs| x (n_bits+1) longs, not |tokens| rows.
+    reaches the wire is ~|docs| x 17 longs, not |tokens| rows.
+    ``hash`` is the per-token hash; the fingerprint has its width
+    (:data:`HASH_BITS`: 64 bits, or 32 under ``"md5_32"``).
     """
     from sanctions_data_pipeline_spark.catalog import widen_small_scan
     # normalize+split+explode+hash is the CPU-heavy map stage:
     # parallelize an under-split local scan (no-op at cluster scale)
     docs = widen_small_scan(docs, id_col)
+    n_bits = HASH_BITS[hash]
     pows = [(1 << b) if b < 63 else -(2 ** 63) for b in range(n_bits)]
     toks = docs.select(
         F.col(id_col),
         F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("t"),
-    ).select(F.col(id_col), F.xxhash64("t").alias("ht"))
+    ).select(F.col(id_col),
+             (md5_32("t") if _is_md5(hash) else F.xxhash64("t")).alias("ht"))
 
-    # Bit-counters are PACKED four to a long in 16-bit lanes: aggregate
-    # column g holds the set-bit counts of hash bits g, g+16, g+32,
-    # g+48. 16 sum-aggregates instead of 64 — a quarter of the agg
-    # state and of the generated code (the 64-agg form spent more time
-    # in janino than in the data at bench scale). Lanes cannot carry
-    # into each other below 65536 tokens per document; bit b is a
-    # majority bit iff 2*count > n_tokens (count of +1s minus count of
-    # -1s positive), identical to summing signed +/-1 per token.
+    # Bit-counters are PACKED n_bits/16 to a long (16-bit lanes at 64
+    # bits, 32-bit lanes at 32): aggregate column g holds the set-bit
+    # counts of hash bits g, g+16, ... — 16 sum-aggregates instead of
+    # n_bits (the 64-agg form spent more time in janino than in the
+    # data at bench scale). Lanes cannot carry into each other below
+    # 2^width tokens per document; bit b is a majority bit iff
+    # 2*count > n_tokens (count of +1s minus count of -1s positive),
+    # identical to summing signed +/-1 per token.
+    lanes = n_bits // 16
+    width = 64 // lanes
+
     def lane(b: int) -> Column:
         return F.shiftright(F.col("ht"), b).bitwiseAND(F.lit(1).cast("long"))
 
+    def packed(g: int) -> Column:
+        acc = lane(g)
+        for m in range(1, lanes):
+            acc = acc + F.shiftleft(lane(g + 16 * m), width * m)
+        return acc
+
     counts = toks.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_toks"),
-        *[F.sum(lane(g) + F.shiftleft(lane(g + 16), 16)
-                + F.shiftleft(lane(g + 32), 32)
-                + F.shiftleft(lane(g + 48), 48)).alias(f"g{g}")
-          for g in range(16)]
+        *[F.sum(packed(g)).alias(f"g{g}") for g in range(16)]
     )
     fp = F.lit(0).cast("long")
     for j, p in enumerate(pows):
-        cnt = F.shiftright(F.col(f"g{j % 16}"), (j // 16) * 16) \
-               .bitwiseAND(F.lit(0xFFFF).cast("long"))
+        cnt = F.shiftright(F.col(f"g{j % 16}"), (j // 16) * width) \
+               .bitwiseAND(F.lit((1 << width) - 1).cast("long"))
         fp = fp.bitwiseOR(
             F.when(cnt * 2 > F.col("n_toks"), F.lit(p).cast("long"))
              .otherwise(F.lit(0).cast("long")))
@@ -759,7 +808,8 @@ def simhash_chunk_keys(max_hamming: int = 3, n_bits: int = 64,
 
 
 def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
-                  id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+                  id_col: str = "doc_id", text_col: str = "text",
+                  hash: str = "xxhash64") -> DataFrame:
     """Near-dup pairs by SimHash hamming distance — EXACT for
     hamming <= max_hamming via composite two-chunk pigeonhole buckets
     (see :func:`simhash_chunk_keys`), verified with bit_count. The
@@ -770,13 +820,19 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     machinery above): identical normalized texts have identical
     fingerprints, so the K-clique is emitted as narrow hamming-0
     explodes and fingerprinting + the bucket join run on distinct
-    texts only."""
+    texts only.
+
+    ``hash`` is the token hash and sets the fingerprint width (see
+    :func:`simhash_fingerprints`); ``hash="md5_32"`` is the
+    SQL-replayable 32-bit form (dd_simhash_portable)."""
     if _dup_mass_low(docs, text_col):
-        return _simhash_pairs_direct(docs, max_hamming, id_col, text_col)
+        return _simhash_pairs_direct(docs, max_hamming, id_col, text_col,
+                                     hash)
     groups = _text_groups(docs, [], id_col, text_col)
     reps = groups.select(F.col("rep").alias(id_col),
                          F.col("rep_text").alias(text_col))
-    rep_pairs = _simhash_pairs_direct(reps, max_hamming, id_col, text_col)
+    rep_pairs = _simhash_pairs_direct(reps, max_hamming, id_col, text_col,
+                                      hash)
     # null-text docs carry no fingerprint in the direct path (explode
     # of split(null) emits nothing) — exclude their group (md5(null)
     # keys them under a single NULL __key) from the clique emission
@@ -787,15 +843,17 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
 
 
 def _simhash_pairs_direct(docs: DataFrame, max_hamming: int,
-                          id_col: str, text_col: str) -> DataFrame:
+                          id_col: str, text_col: str,
+                          hash: str = "xxhash64") -> DataFrame:
     """The pigeonhole-bucket pipeline proper (see simhash_pairs)."""
     # chunked (below) feeds both sides of the bucket self-join: persist
     # the fingerprint table so the token explode + 16 packed-lane sums
     # run once, not twice (shared-subtree discipline, |docs| x 2 longs)
-    sh = simhash_fingerprints(docs, id_col, text_col).persist()
+    sh = simhash_fingerprints(docs, id_col, text_col, hash).persist()
     chunked = sh.select(
         id_col, "sh",
-        F.posexplode(F.array(*simhash_chunk_keys(max_hamming)))
+        F.posexplode(F.array(*simhash_chunk_keys(max_hamming,
+                                                 HASH_BITS[hash])))
          .alias("combo_id", "combo_val"),
     )
     left = chunked.select(F.col(id_col).alias("i"), F.col("sh").alias("sh_i"),

@@ -1,70 +1,18 @@
 """Iterative graph algorithms on DataFrames (beyond connected
 components — see operators/dedup.py:connected_components for CC).
 
-PageRank here is the classic damped power iteration expressed as
-join+agg rounds. Scale shape per round: one shuffle joining the edge
-list with the (id, rank) table on src, one keyed agg on dst — both over
-long/double pairs, never over payload data. The rank table is persisted
-per round (lineage depth 1) so AQE replans from materialized sizes and
-broadcasts it while it fits.
+PageRank (:func:`fold_pagerank`) is the damped power iteration
+expressed as join+agg rounds, with each node's neighbor sum taken as a
+SORTED fold so the result is bit-identical across engines. Scale shape
+per round: one shuffle joining the edge list with the (node, rank)
+table on src, one keyed agg on dst — both over long/double pairs,
+never over payload data. Rounds chain lazily; the bounded iteration
+count keeps the lineage short.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
-             n_iters: int = 8, damping: float = 0.85) -> DataFrame:
-    """Damped PageRank over a directed edge list -> (id, rank).
-
-    Assumes no dangling nodes (every node has out-degree >= 1) — true
-    for symmetric co-occurrence graphs, which is this operator's
-    intended input. Ranks sum to ~1 (up to float association order).
-    """
-    e = edges.select(F.col(src).cast("long").alias("src"),
-                     F.col(dst).cast("long").alias("dst")).persist()
-    nodes = (e.select(F.col("src").alias("id"))
-             .union(e.select(F.col("dst").alias("id")))
-             .distinct().persist())
-    n = nodes.count()
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # pre-divide each edge's contribution weight once instead of per round
-    weighted = (e.join(outdeg, "src")
-                .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
-                .persist())
-    weighted.count()  # materialize before the loop
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).persist()
-    base = (1.0 - damping) / n
-
-    def step(r: DataFrame) -> DataFrame:
-        contribs = (weighted.join(r, weighted.src == r.id)
-                    .groupBy(F.col("dst").alias("nid"))
-                    .agg(F.sum(F.col("rank") * F.col("w")).alias("c")))
-        return (nodes.join(contribs, nodes.id == contribs.nid, "left")
-                .select("id",
-                        (F.lit(base)
-                         + F.lit(damping) * F.coalesce("c", F.lit(0.0)))
-                        .alias("rank")))
-
-    # Two propagations per materialized checkpoint: lineage stays two
-    # rounds deep (still AQE-replannable from cached stats) and the
-    # action count halves — fixed job overhead dominates these
-    # long-skinny iterations far more than the data does.
-    done = 0
-    while done < n_iters:
-        span = min(2, n_iters - done)
-        chain = ranks
-        for _ in range(span):
-            chain = step(chain)
-        chain = chain.persist()
-        chain.count()  # cut lineage; AQE sees materialized stats
-        ranks.unpersist()
-        ranks = chain
-        done += span
-    e.unpersist()
-    weighted.unpersist()
-    return ranks
 
 
 def fold_pagerank(edges: DataFrame, iters: int = 2,
@@ -73,9 +21,8 @@ def fold_pagerank(edges: DataFrame, iters: int = 2,
     """PageRank whose per-node neighbor sums are SORTED sequential
     folds — bit-identical across engines, so bounded-iteration callers
     (gr_pagerank, pr_copurchase) carry exact unrolled SQL oracles.
-    :func:`pagerank` is the long-run twin (partition-order F.sum,
-    pre-divided edge weights, two-hop checkpointing) for iteration
-    counts where an unrolled oracle stops being practical.
+    Rounds chain lazily in one plan, so ``iters`` is meant to stay
+    small (the registry runs 2).
 
     ``teleport`` is passed as an EXPLICIT constant rather than computed
     as ``1.0 - damping``: Python evaluates ``1.0 - 0.85`` to
@@ -170,7 +117,7 @@ def bfs_layers(edges: DataFrame, seeds: DataFrame, max_hops: int = 6,
                 .withColumn("layer", F.lit(hop)))
 
     # Two hops per materialized checkpoint (same action-halving as
-    # pagerank/connected components): the second hop lazily excludes
+    # connected components): the second hop lazily excludes
     # the first hop's additions, ONE count on the merged set both
     # materializes it and detects convergence by size delta. Growing
     # an already-empty frontier is a no-op join — cheaper than an

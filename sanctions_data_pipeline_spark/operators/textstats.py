@@ -76,36 +76,6 @@ def fingerprint(col: Column) -> Column:
     return F.md5(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")))
 
 
-def compression_ratio_udf():
-    """Vectorized zlib compression-ratio UDF (deflate level 6).
-
-    Compressibility is the classic "is this text boilerplate/spam"
-    signal (highly repetitive text compresses far below ~0.4): it is
-    genuinely NOT expressible as column expressions, so this is one of
-    the few sanctioned Python hops — an Arrow-batched pandas_udf
-    (one zlib call per row inside a batch, no per-row serialization),
-    not a row-at-a-time Python UDF.
-    """
-    import zlib
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _ratio(texts):
-        def one(s):
-            if s is None:
-                return None
-            raw = s.encode("utf-8")
-            if not raw:
-                return 1.0
-            return round(len(zlib.compress(raw, 6)) / len(raw), 6)
-        return texts.map(one)
-
-    # the module uses `from __future__ import annotations`, which turns
-    # inline hints into strings pandas_udf's inference can't read —
-    # attach real Series annotations instead
-    _ratio.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return pandas_udf(_ratio, "double")
 
 
 def compression_audit_udf():

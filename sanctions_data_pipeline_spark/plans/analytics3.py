@@ -1,26 +1,26 @@
-"""Round-5 additions (SURVEY.md §2): PORTABLE-HASH near-dup pipelines.
+"""Round-5 additions (SURVEY.md §2): PORTABLE-HASH near-dup entries.
 
 The production near-dup headliners (dd_minhash_lsh, dd_simhash in
 plans/training_data.py) hash with xxhash64 — the fast JVM path, but
 one with no DuckDB twin, so they are rows-only entries: the banding /
 pigeonhole CANDIDATE GENERATION itself has never earned a driver
-hash-green row (VERDICT r04 "Next round" item 7). The two ops here
-run the same mechanisms end to end on the portable md5 idiom
-(``('0x' || substr(md5(x), 1, 8))::BIGINT`` == Spark
-``conv(substring(md5(x), 1, 8), 16, 10)``, the q_cms_topk /
-mix_dsir_weights pattern), so DuckDB replicates the ENTIRE pipeline —
-signatures, band buckets, candidate join, verification — and the
-driver can hash-compare the final pair lists.
+hash-green row (VERDICT r04 "Next round" item 7). The two entries here
+run the SAME operators/dedup.py cores in their ``hash="md5_32"``
+configuration (``('0x' || substr(md5(x), 1, 8))::BIGINT`` == Spark
+``conv(substring(md5(x), 1, 8), 16, 10)``, :func:`dedup.md5_32`, the
+q_cms_topk / mix_dsir_weights pattern), so DuckDB replicates the
+pipeline — signatures, band buckets, candidate join, verification —
+and the final pair lists hash-compare across engines. Only the hash
+(and with it the SimHash width) differs from the headliners: one
+implementation per mechanism, pinned by the oracles here.
 
-They are mechanism proofs, not the scale path: md5 costs ~10x
-xxhash64 per call, so production dedup stays on the xxhash headliners
-(identical plan shape — banded equi-join buckets, never an all-pairs
-join); these portable twins pin that the shared mechanism is right.
-
-Scale notes (same as the headliners): the only shuffles are the
-(band/bucket key) equi-joins over 8-byte-key rows and the final
-distinct over true near-pairs; signatures aggregate map-side off one
-scan of the corpus.
+Cost of the hash alone (same core, same parameters; 4-core host,
+sf0.1, best of 3 warm runs, cache cleared before each):
+minhash_lsh_pairs at 32 hashes / 8 bands takes 1.28 s under xxhash64
+and 5.33 s under md5_32 (~4x: 32 string-concat + md5 calls per
+shingle), so MinHash stays on xxhash64 at scale; simhash_pairs(h=3)
+takes 2.06 s at 64 bits and 1.51 s under md5_32, whose 32-bit
+fingerprint is cheaper but a looser hamming<=3 criterion.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from sanctions_data_pipeline_spark.catalog import load_table
 from sanctions_data_pipeline_spark.data import sanctions_fixture as fx
 from sanctions_data_pipeline_spark.functions import names as nm
+from sanctions_data_pipeline_spark.operators import dedup as dd
 from sanctions_data_pipeline_spark.operators import textstats as tx
 from sanctions_data_pipeline_spark.plans.helpers import (
     SQL_REVENUE, drate, dsum, dval, lcount, pround6, sql_dsum, sql_pround6,
@@ -40,23 +41,19 @@ _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 _TOKS = f"string_split({_NORM}, ' ')"
 
 
-def _md5_32(col) -> F.Column:
-    """First 32 bits of md5 as a bigint — bit-identical to DuckDB's
-    ('0x' || substr(md5(x), 1, 8))::BIGINT."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
-
-
 # ---------------------------------------------------------------------------
-# dd_minhash_lsh_portable — MinHash + LSH banding with md5 hashing so
-# the whole pipeline (shingle sets -> 8 minhashes -> 4 two-row band
-# signatures -> bucket equi-join -> exact-Jaccard verify) is replayed
-# verbatim by DuckDB. Same banding mechanism as dd_minhash_lsh
-# (reference: standard MinHash-LSH; Leskovec et al., MMDS ch.3), jac
-# computed over the 32-bit-hashed 3-shingle SETS (set Jaccard is
-# invariant under injective-in-practice hashing, and both engines
-# hash identically so even a collision cannot diverge them).
+# dd_minhash_lsh_portable — dedup.minhash_lsh_pairs with md5 hashing
+# (shingle sets -> 8 minhashes -> 4 two-row band signatures -> bucket
+# equi-join -> exact-Jaccard verify), replayed by DuckDB. Banding as in
+# standard MinHash-LSH (Leskovec et al., MMDS ch.3); jac is computed
+# over the 32-bit-hashed 3-shingle SETS (set Jaccard is invariant
+# under injective-in-practice hashing, and both engines hash
+# identically so even a collision cannot diverge them). The oracle keys
+# a band by the string m_a || ':' || m_b, dedup by xxhash64(m_a, m_b):
+# the same buckets up to a 64-bit collision, whose extra candidate the
+# exact-Jaccard verify would still have to pass.
 # ---------------------------------------------------------------------------
-_MH_N, _MH_BANDS, _MH_R, _MH_K, _MH_T = 8, 4, 2, 3, 0.5
+_MH_N, _MH_BANDS, _MH_K, _MH_T = 8, 4, 3, 0.5
 
 _MINHASH_PORTABLE_ORACLE = f"""
 WITH arr AS (
@@ -102,90 +99,15 @@ WHERE CAST(len(list_intersect(a.ls, b.ls)) AS DOUBLE)
 @register("dd_minhash_lsh_portable", headline=True,
           oracle=_MINHASH_PORTABLE_ORACLE)
 def dd_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sanctions_data_pipeline_spark.operators import dedup as dd
-
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    if dd._dup_mass_low(docs, "text"):
-        return _minhash_portable_pairs(docs)
-    # collapse-first (round 9, the operators/dedup.py pair-family
-    # discipline): identical normalized text -> identical md5 shingle
-    # set, signatures and bands; run the banding pipeline on one rep
-    # per group, emit within-group cliques as jac-1.0 explodes
-    groups = dd._text_groups(docs, [], "doc_id", "text")
-    reps = groups.select(F.col("rep").alias("doc_id"),
-                         F.col("rep_text").alias("text"))
-    rep_pairs = _minhash_portable_pairs(reps)
-    within = dd._within_group_pairs(
-        groups.filter(F.size(tx.tokens(F.col("rep_text"))) >= _MH_K),
-        [F.lit(1.0).alias("jac")])
-    cross = dd._expand_rep_pairs(rep_pairs, groups, ["jac"])
-    return within.unionByName(cross)
-
-
-def _minhash_portable_pairs(docs: DataFrame,
-                            max_bucket: int | None = None) -> DataFrame:
-    """The md5-portable banding pipeline proper (see
-    dd_minhash_lsh_portable). ``max_bucket`` applies the
-    operators/dedup.py hot-bucket cap to the band-bucket join (the
-    registered oracle runs uncapped; capped use returns pairs only —
-    consume dedup.cap_hot_buckets directly for the quarantine)."""
-    from sanctions_data_pipeline_spark.catalog import widen_small_scan
-
-    # md5 shingling is the CPU-heavy map stage: parallelize an
-    # under-split local scan (no-op at cluster scale)
-    docs = widen_small_scan(docs, "doc_id")
-    arr = docs.select("doc_id", tx.tokens(F.col("text")).alias("t")) \
-              .filter(F.size("t") >= _MH_K)
-    # 3-shingles as strings, hashed to portable 32-bit ids; the
-    # shingle SET (distinct) feeds both the signatures and the verify —
-    # persist so tokenize + md5 + distinct run once, not twice
-    sh = arr.select(
-        "doc_id",
-        F.explode(F.expr(
-            "transform(sequence(0, size(t) - 3),"
-            " i -> concat(t[i], ' ', t[i+1], ' ', t[i+2]))")).alias("s"),
-    ).select("doc_id", _md5_32(F.col("s")).alias("hs")).distinct().persist()
-    # sig feeds both sides of the band-bucket self-join via banded:
-    # persist so the _MH_N md5 min-aggregates run once, not twice
-    sig = sh.groupBy("doc_id").agg(*[
-        F.min(_md5_32(F.concat_ws(":", F.lit(h), F.col("hs")))).alias(f"m{h}")
-        for h in range(_MH_N)
-    ]).persist()
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(F.array(*[
-            F.concat_ws(":", F.col(f"m{2 * b}"), F.col(f"m{2 * b + 1}"))
-            for b in range(_MH_BANDS)
-        ])).alias("b", "bsig"),
-    )
-    if max_bucket is not None:
-        from sanctions_data_pipeline_spark.operators import dedup as dd
-        banded, _ = dd.cap_hot_buckets(banded, ["b", "bsig"], max_bucket)
-    left = banded.select(F.col("doc_id").alias("i"), "b", "bsig")
-    right = banded.select(F.col("doc_id").alias("j"), "b", "bsig")
-    cand = (left.join(right, ["b", "bsig"])
-            .filter(F.col("i") < F.col("j"))
-            .select("i", "j").distinct())
-    # both verify joins read sets — persist so the collect_set shuffle
-    # over the shingle stream runs once, not twice
-    sets = sh.groupBy("doc_id").agg(
-        F.collect_set("hs").alias("ls")).persist()
-    jac = (F.size(F.array_intersect("ls_i", "ls_j")).cast("double")
-           / F.size(F.array_union("ls_i", "ls_j")).cast("double"))
-    return (
-        cand.join(sets.select(F.col("doc_id").alias("i"),
-                              F.col("ls").alias("ls_i")), "i")
-        .join(sets.select(F.col("doc_id").alias("j"),
-                          F.col("ls").alias("ls_j")), "j")
-        .filter(jac >= _MH_T)
-        .select("i", "j", F.round(jac, 6).alias("jac"))
-    )
+    return dd.minhash_lsh_pairs(docs, n_hashes=_MH_N, bands=_MH_BANDS,
+                                threshold=_MH_T, k=_MH_K, hash="md5_32")
 
 
 # ---------------------------------------------------------------------------
-# dd_simhash_portable — 32-bit SimHash with md5 token hashing +
-# exact hamming<=3 retrieval via the same composite two-chunk
-# pigeonhole as dd_simhash (c = h+2 = 5 disjoint chunks of the
+# dd_simhash_portable — dedup.simhash_pairs with md5 token hashing: a
+# 32-bit SimHash + exact hamming<=3 retrieval via the composite
+# two-chunk pigeonhole (c = h+2 = 5 disjoint chunks of the
 # fingerprint; <=h flips leave >=2 chunks untouched, so every true
 # pair shares at least one of the C(5,2)=10 (chunk_i, chunk_j)
 # composites — exact recall, bucket-bounded join). DuckDB replays
@@ -235,81 +157,9 @@ WHERE l.doc_id < r.doc_id AND bit_count(xor(l.fp, r.fp)) <= {_SH_H}
 
 @register("dd_simhash_portable", oracle=_SIMHASH_PORTABLE_ORACLE)
 def dd_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sanctions_data_pipeline_spark.operators import dedup as dd
-
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    if dd._dup_mass_low(docs, "text"):
-        return _simhash_portable_pairs(docs)
-    # collapse-first (round 9, the operators/dedup.py pair-family
-    # discipline): identical normalized text -> identical md5 token
-    # stream and fingerprint; hamming-0 cliques emitted as explodes
-    groups = dd._text_groups(docs, [], "doc_id", "text")
-    reps = groups.select(F.col("rep").alias("doc_id"),
-                         F.col("rep_text").alias("text"))
-    rep_pairs = _simhash_portable_pairs(reps)
-    # zero-token docs carry no fingerprint in the direct path (the
-    # token explode emits nothing) — exclude their groups from the
-    # clique emission, mirroring the minhash twin's guard above
-    within = dd._within_group_pairs(
-        groups.filter(F.size(tx.tokens(F.col("rep_text"))) > 0),
-        [F.lit(0).cast("bigint").alias("hamming")])
-    cross = dd._expand_rep_pairs(rep_pairs, groups, ["hamming"])
-    return within.unionByName(cross)
-
-
-def _simhash_portable_pairs(docs: DataFrame) -> DataFrame:
-    """The md5-portable pigeonhole pipeline proper (see
-    dd_simhash_portable)."""
-    from sanctions_data_pipeline_spark.catalog import widen_small_scan
-
-    # tokenize + per-token md5 is the CPU-heavy map stage: parallelize
-    # an under-split local scan (no-op at cluster scale)
-    docs = widen_small_scan(docs, "doc_id")
-    th = docs.select(
-        "doc_id",
-        F.explode(tx.tokens(F.col("text"))).alias("tok"),
-    ).select("doc_id", _md5_32(F.col("tok")).alias("th"))
-    # 32 majority bits; counts aggregate map-side, the shuffle carries
-    # (doc_id, 32 longs) per doc — same shape as simhash_fingerprints
-    counts = th.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(F.shiftright(F.col("th"), b).bitwiseAND(F.lit(1).cast("long")))
-          .alias(f"c{b}") for b in range(_SH_BITS)]
-    )
-    fp = None
-    for b in range(_SH_BITS):
-        bit = F.when(F.col(f"c{b}") * 2 > F.col("n"),
-                     F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
-        fp = bit if fp is None else fp + bit
-    # chunked (below) feeds both sides of the bucket self-join: persist
-    # the fingerprint table so the md5 bit-count aggregation runs once
-    fps = counts.select("doc_id", fp.alias("fp")).persist()
-
-    def chunk(k: int):
-        mask = (1 << _SH_WIDTHS[k]) - 1
-        return F.shiftright(F.col("fp"), _SH_OFFSETS[k]) \
-                .bitwiseAND(F.lit(mask).cast("long"))
-
-    chunked = fps.select(
-        "doc_id", "fp",
-        F.posexplode(F.array(*[
-            chunk(a) * F.lit(1 << _SH_SHIFT) + chunk(b)
-            for a, b in _SH_COMBOS
-        ])).alias("c", "cval"),
-    )
-    left = chunked.select(F.col("doc_id").alias("i"),
-                          F.col("fp").alias("fp_i"), "c", "cval")
-    right = chunked.select(F.col("doc_id").alias("j"),
-                           F.col("fp").alias("fp_j"), "c", "cval")
-    return (
-        left.join(right, ["c", "cval"])
-        .filter(F.col("i") < F.col("j"))
-        .select("i", "j",
-                F.bit_count(F.col("fp_i").bitwiseXOR(F.col("fp_j")))
-                 .cast("bigint").alias("hamming"))
-        .filter(F.col("hamming") <= _SH_H)
-        .distinct()
-    )
+    pairs = dd.simhash_pairs(docs, _SH_H, hash="md5_32")
+    return pairs.withColumn("hamming", F.col("hamming").cast("bigint"))
 
 
 # ---------------------------------------------------------------------------
@@ -447,7 +297,7 @@ def tt_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select(
         "source",
         F.size(tx.tokens(F.col("text"))).cast("bigint").alias("nt"),
-        (_md5_32(F.col("source")) % _GROUP_KFOLD_K).alias("fold"))
+        (dd.md5_32(F.col("source")) % _GROUP_KFOLD_K).alias("fold"))
     return d.groupBy("fold").agg(
         F.countDistinct("source").cast("bigint").alias("n_sources"),
         lcount("n_docs"),
@@ -1896,7 +1746,6 @@ def io_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
                         os.path.basename(sf_dir.rstrip("/")),
                         f"codecs_pid{os.getpid()}")
     out = None
-    md5_32 = F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("bigint")
     for codec in _CODECS:
         p = os.path.join(base, codec)
         docs.write.mode("overwrite").option("compression", codec).parquet(p)
@@ -1904,7 +1753,8 @@ def io_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(lcount("n_docs"),
                      F.sum(F.length("text")).cast("bigint")
                      .alias("total_chars"),
-                     F.sum(md5_32).cast("bigint").alias("content_sum"))
+                     F.sum(dd.md5_32("text")).cast("bigint")
+                     .alias("content_sum"))
                 .select(F.lit(codec).alias("codec"), "n_docs",
                         "total_chars", "content_sum"))
         out = back if out is None else out.unionByName(back)
@@ -1963,13 +1813,12 @@ def io_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     (spark.read.parquet(small).repartition(n_out)
      .write.mode("overwrite").parquet(compacted))
 
-    md5_32 = F.conv(F.substring(F.md5(F.col("event_id").cast("string")),
-                                1, 8), 16, 10).cast("bigint")
     out = None
     for layout, p in [("small_files", small), ("compacted", compacted)]:
         agg = (spark.read.parquet(p)
                .agg(lcount("n_rows"),
-                    F.sum(md5_32).cast("bigint").alias("id_sum"),
+                    F.sum(dd.md5_32(F.col("event_id").cast("string")))
+                    .cast("bigint").alias("id_sum"),
                     F.count_distinct(F.col("user_id")).cast("bigint")
                     .alias("n_users"))
                .select(F.lit(layout).alias("layout"), "n_rows",
@@ -2194,8 +2043,6 @@ GROUP BY g.doc_id
 @register("tx_ngram_novelty", headline=True, oracle=_NOVELTY_ORACLE)
 def tx_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sanctions_data_pipeline_spark.catalog import widen_small_scan
-    from sanctions_data_pipeline_spark.operators import dedup as dd
-
     # tokenize + gram explode is the CPU-heavy map stage: parallelize
     # an under-split local scan (no-op at scale)
     docs = widen_small_scan(
@@ -2473,17 +2320,6 @@ SELECT CAST((SELECT count(*) FROM probe) AS BIGINT) AS n_probed,
 """
 
 
-def _bloom_bits(key_col, tag: str):
-    """k md5-derived bit indices for a key — identical algebra to the
-    oracle's ('0x' || substr(md5(...),1,8))::BIGINT % m."""
-    cols = []
-    for i in range(_BLOOM_K):
-        h = F.conv(F.substring(F.md5(F.concat(
-            F.lit(f"b{i}:"), key_col.cast("string"))), 1, 8), 16, 10)
-        cols.append((h.cast("bigint") % _BLOOM_M).alias(f"bit_{i}"))
-    return cols
-
-
 @register("dd_bloom_prejoin", oracle=_BLOOM_ORACLE)
 def dd_bloom_prejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = load_table(spark, sf_dir, "supplier")
@@ -2646,7 +2482,10 @@ FROM merged m JOIN full_r f ON m.pri = f.pri
 def q_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     mx = orders.agg(F.max("o_orderdate").alias("d"))
-    o = orders.crossJoin(F.broadcast(mx))
+    # base (< d) and delta (= d) both exclude NULL-date orders, as in
+    # the oracle; only the full recompute counts them
+    o = (orders.filter(F.col("o_orderdate").isNotNull())
+         .crossJoin(F.broadcast(mx)))
     rev4 = (F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 4)
             * 10000).cast("bigint")
 

@@ -121,25 +121,3 @@ def compact_parquet(spark, in_path: str, out_path: str,
     n = max(1, math.ceil(total / target_bytes))
     df.repartition(n).write.mode(mode).parquet(out_path)
     return n
-
-
-def write_observed(df: DataFrame, path: str, fmt: str = "parquet",
-                   mode: str = "overwrite",
-                   partition_by: list[str] | None = None) -> dict:
-    """Write with INLINE data-quality metrics via ``df.observe`` —
-    row count and null counts ride along with the write job itself
-    (no second scan to validate the output, which at 100 TB would
-    double the pipeline's cost). Returns the observed metrics dict.
-    """
-    from pyspark.sql import Observation, functions as F
-
-    obs = Observation("write_metrics")
-    first_col = df.columns[0]
-    instrumented = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col(first_col).isNull(), 1).otherwise(0))
-         .alias(f"n_null_{first_col}"))
-    write_output(instrumented, path, fmt=fmt, mode=mode,
-                 partition_by=partition_by)
-    return obs.get

@@ -547,67 +547,6 @@ def chained_window_agg(events: DataFrame, inner: str = "15 minutes",
                     "event_type", "n_events", "total_value"))
 
 
-def tws_available() -> bool:
-    """transformWithStateInPandas speaks protobuf to its state server;
-    absent google.protobuf the Python runner crashes at init."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def user_running_stats_tws(events: DataFrame) -> DataFrame:
-    """The modern twin of :func:`user_running_stats` on Spark 4's
-    ``transformWithStateInPandas`` API: typed ValueState, explicit
-    processor lifecycle (init/handleInputRows/close), RocksDB-backed
-    state, and (unlike applyInPandasWithState) composability with
-    timers/TTL and multiple state variables.
-
-    GATED: requires ``google.protobuf`` (the runner's state-server
-    protocol), absent from this image — call :func:`tws_available`
-    first; the parity test skips when it is missing. Output and state
-    contents are identical to the applyInPandasWithState path.
-    """
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs google.protobuf (absent in "
-            "this image); use user_running_stats (applyInPandasWithState)")
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("agg", "n bigint, mx double")
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, mx = (self._state.get() if self._state.exists() else (0, None))
-            for pdf in rows:
-                n += len(pdf)
-                if len(pdf):
-                    m = float(pdf["value"].max())
-                    mx = m if mx is None else max(mx, m)
-            self._state.update((n, mx))
-            yield pd.DataFrame({"user_id": [int(key[0])],
-                                "n_events": [n], "max_value": [mx]})
-
-        def close(self) -> None:
-            pass
-
-    spark = events.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    return events.groupBy("user_id").transformWithStateInPandas(
-        RunningStats(),
-        "user_id bigint, n_events bigint, max_value double",
-        "Update", "None")
-
-
 def zscore_window_agg(events: DataFrame, window_len: str = "1 hour",
                       watermark: str = "2 hours",
                       z: float = 2.0) -> DataFrame:

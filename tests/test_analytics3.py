@@ -944,6 +944,32 @@ def test_q_incremental_mv_merge_equals_recompute(spark):
     assert {r.priority: r.n_merged for r in rows} == dict(want)
 
 
+def test_q_incremental_mv_excludes_null_dates(spark, tmp_path,
+                                              oracle_problems):
+    """NULL-date orders belong to neither the base (< max date) nor the
+    delta (= max date) rollup, only to the full recompute, so their
+    priority shows them as a negative diff_rows — as in the oracle."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    orders = load_table(spark, SF, "orders")
+    null_rows = orders.limit(2).select(
+        (F.col("o_orderkey") + 10 ** 9).alias("o_orderkey"), "o_custkey",
+        "o_orderstatus", "o_totalprice",
+        F.lit(None).cast(orders.schema["o_orderdate"].dataType)
+        .alias("o_orderdate"), "o_orderpriority")
+    d = str(tmp_path / "sf_null_date")
+    os.makedirs(d)
+    orders.unionByName(null_rows).write.parquet(
+        os.path.join(d, "orders.parquet"))
+    problems, got = oracle_problems(d, "q_incremental_mv")
+    assert problems == []
+    want = Counter(r.o_orderpriority for r in null_rows.collect())
+    assert {r.priority: -r.diff_rows for r in got.itertuples()
+            if r.diff_rows} == dict(want)
+
+
 def test_ml_decision_stump_replay(spark):
     """Gini grid replayed in python over the raw orders; exactly one
     best row; the best split genuinely separates (gini below the

@@ -458,6 +458,52 @@ def test_simhash_portable_replay(spark):
     assert want, "fixture should contain near-identical fingerprints"
 
 
+def test_portable_entries_match_oracle_on_edge_cases(spark, tmp_path,
+                                                     oracle_problems):
+    """dd_minhash_lsh_portable / dd_simhash_portable (dedup's cores with
+    hash="md5_32") against their DuckDB oracles on a crafted corpus:
+    exact duplicates (the collapse path), docs under 3 tokens,
+    whitespace-only, empty and NULL texts, and near-duplicate pairs —
+    then on its duplicate-free subset (the direct path). Pins that
+    dedup's xxhash64 band key selects the same candidates as the
+    oracle's m_a || ':' || m_b string key."""
+    import os
+
+    base = ("the quick brown fox jumps over the lazy dog near the old "
+            "river bank today")
+    other = "a completely different sentence about spark engines and files"
+    texts = {
+        1: base,
+        2: base.upper(),                         # exact dup (normalized)
+        3: "  " + base.replace(" ", " \t ") + "\n",  # whitespace dup
+        4: base + " again",                      # near dups of 1
+        5: base.replace("today", "tonight"),
+        6: "hello world",                        # < 3 tokens
+        7: "Hello   world",
+        8: "   ",                                # whitespace only
+        9: "\t\n",
+        10: "",
+        11: None,
+        12: other,
+        13: other,
+        14: "word",
+    }
+    distinct = (1, 4, 5, 6, 8, 12, 14)
+    for label, ids, collapsed in (("dups", sorted(texts), True),
+                                  ("distinct", distinct, False)):
+        d = str(tmp_path / label)
+        os.makedirs(d)
+        spark.createDataFrame(
+            [(i, texts[i]) for i in ids], "doc_id long, text string"
+        ).write.parquet(os.path.join(d, "documents.parquet"))
+        docs = load_table(spark, d, "documents").filter(F.length("text") > 0)
+        assert dd._dup_mass_low(docs, "text") != collapsed, label
+        for name in ("dd_minhash_lsh_portable", "dd_simhash_portable"):
+            problems, got = oracle_problems(d, name)
+            assert problems == [], (label, name, problems)
+            assert len(got), (label, name)
+
+
 def test_ngram_jaccard_components_equals_pairwise_cc(spark, sf_dir):
     """The collapsed-clique component op (exact-dedup-before-near-dedup
     fused into CC) must return EXACTLY the pairwise composition's
@@ -660,8 +706,8 @@ def test_pair_ops_collapse_path_equals_direct(spark, sf_dir):
 
     got = {(r.i, r.j, r.jac) for r in
            dd.minhash_lsh_pairs(multi, 32, 8, 0.5, 3).collect()}
-    want = {(r.i, r.j, r.jac) for r in dd._minhash_lsh_pairs_direct(
-        multi, 32, 8, 0.5, 3, "doc_id", "text").collect()}
+    want = {(r.i, r.j, r.jac) for r in dd._minhash_lsh_core(
+        multi, 32, 8, 0.5, 3, "doc_id", "text", None)[0].collect()}
     assert got == want and got
 
     got = {(r.i, r.j, r.hamming) for r in
@@ -702,10 +748,11 @@ def test_plan_pair_entries_collapse_equals_direct(spark, sf_dir, tmp_path):
     """The three SQL-oracled pair ENTRIES that wrap self-joins
     (dd_winnow, dd_minhash_lsh_portable, dd_simhash_portable) also
     collapse under duplicate mass (round 9); on a 4x-duplicated corpus
-    their output must equal the direct pipelines on the same input."""
+    their output must equal the direct pipelines on the same input —
+    for the two portable entries, dedup's direct cores in their md5_32
+    configuration."""
     import os
 
-    from sanctions_data_pipeline_spark.plans import analytics3 as a3
     from sanctions_data_pipeline_spark.plans import registry
     from sanctions_data_pipeline_spark.plans import training_data2 as td2
 
@@ -737,14 +784,15 @@ def test_plan_pair_entries_collapse_equals_direct(spark, sf_dir, tmp_path):
     nonempty = docs.filter(F.length("text") > 0)
     got = {(r.i, r.j, r.jac)
            for r in qs["dd_minhash_lsh_portable"](spark, d).collect()}
-    want = {(r.i, r.j, r.jac)
-            for r in a3._minhash_portable_pairs(nonempty).collect()}
+    want = {(r.i, r.j, r.jac) for r in dd._minhash_lsh_core(
+        nonempty, 8, 4, 0.5, 3, "doc_id", "text", None,
+        hash="md5_32")[0].collect()}
     assert got == want and got
 
     got = {(r.i, r.j, r.hamming)
            for r in qs["dd_simhash_portable"](spark, d).collect()}
-    want = {(r.i, r.j, r.hamming)
-            for r in a3._simhash_portable_pairs(nonempty).collect()}
+    want = {(r.i, r.j, r.hamming) for r in dd._simhash_pairs_direct(
+        nonempty, 3, "doc_id", "text", hash="md5_32").collect()}
     assert got == want and got
 
 

@@ -217,22 +217,6 @@ def test_mm_audio_windows_rollup_is_deterministic(spark, sf_dir):
     assert a == b and a
 
 
-def test_map_in_arrow_decode_matches_pandas_path(spark, sf_dir):
-    from sanctions_data_pipeline_spark.catalog import load_table
-    from sanctions_data_pipeline_spark.multimodal.ops import (
-        attach_media, decode_features, decode_features_arrow,
-    )
-    media = attach_media(load_table(spark, sf_dir, "documents"))
-
-    def key(r):
-        return (r.doc_id, r.media_type, r.n_bytes, r.width, r.height,
-                r.n_frames, tuple(r.features))
-
-    a = {key(r) for r in decode_features(media).collect()}
-    b = {key(r) for r in decode_features_arrow(media).collect()}
-    assert a == b and a
-
-
 def test_binary_file_source_reads_media_bytes(spark, tmp_path):
     """binaryFile is the real ingest path attach_media stands in for:
     (path, modificationTime, length, content) rows with the exact file

@@ -167,18 +167,6 @@ def test_partitioned_write_prunes_partitions_at_read(spark, sf_dir, tmp_path):
     assert back.count() == n_en
 
 
-def test_write_observed_counts_without_second_scan(spark, sf_dir, tmp_path):
-    from sanctions_data_pipeline_spark.catalog import load_table
-    from sanctions_data_pipeline_spark.sources.sinks import write_observed
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = str(tmp_path / "obs_out")
-    metrics = write_observed(docs, out)
-    assert metrics["n_rows"] == docs.count()
-    assert metrics["n_null_doc_id"] == 0
-    assert spark.read.parquet(out).count() == metrics["n_rows"]
-
-
 def test_dynamic_partition_overwrite_replaces_only_touched_partitions(
         spark, sf_dir, tmp_path):
     """The incremental-reload contract: overwriting with partition

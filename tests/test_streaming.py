@@ -293,34 +293,6 @@ def test_chained_windows_match_batch_rollup_prefix(spark, sf_dir):
     assert [ws for ws in all_starts if ws <= cutoff] == emitted_starts
 
 
-def test_tws_runner_matches_apply_in_pandas_path(spark, sf_dir):
-    import pytest
-    from sanctions_data_pipeline_spark.streaming import ops as sops
-
-    if not sops.tws_available():
-        with pytest.raises(NotImplementedError):
-            sops.user_running_stats_tws(
-                sops.read_events_stream(spark, sf_dir))
-        pytest.skip("google.protobuf absent: transformWithStateInPandas "
-                    "runner cannot start in this image")
-    ev = sops.read_events_stream(spark, sf_dir)
-    tws = sops.run_available_now(sops.user_running_stats_tws(ev),
-                                 output_mode="update")
-    # keep LAST emission per user (update mode re-emits growing counts)
-    from pyspark.sql import functions as F
-    final = (tws.groupBy("user_id")
-             .agg(F.max("n_events").alias("n_events"),
-                  F.max("max_value").alias("max_value")))
-    legacy = sops.run_available_now(
-        sops.user_running_stats(sops.read_events_stream(spark, sf_dir)),
-        output_mode="update")
-    legacy_final = (legacy.groupBy("user_id")
-                    .agg(F.max("n_events").alias("n_events"),
-                         F.max("max_value").alias("max_value")))
-    assert {tuple(r) for r in final.collect()} == \
-        {tuple(r) for r in legacy_final.collect()}
-
-
 def test_file_sink_checkpoint_recovery_is_exactly_once(spark, sf_dir, tmp_path):
     """Incremental processing across restarts: a parquet-sink stream
     drains file 1, stops, a new input file lands, and a SECOND query
