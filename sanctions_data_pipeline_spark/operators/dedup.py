@@ -969,7 +969,10 @@ def ngram_jaccard_components(docs: DataFrame, block_cols: list[str],
     # persisted; counting it materializes work the join needs anyway).
     # ~4M (id,label) longs ≈ 64 MB serialized — comfortably under the
     # 8 GB broadcast ceiling with headroom for row overhead; beyond
-    # that, fall back to a plain shuffle join on the rep key.
+    # that, fall back to a plain shuffle join on the rep key. Without
+    # the hint AQE still broadcasts at runtime, but only after it has
+    # shuffled the member-scale `mem` side (sf0.1 collapse path, 4
+    # cores: exec 2.0 -> 2.3-2.9 s, no build time saved).
     labels_side = (F.broadcast(rep_labels)
                    if groups.count() <= 4_000_000 else rep_labels)
     out = (mem.join(labels_side, "rep", "left")

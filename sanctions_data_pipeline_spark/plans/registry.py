@@ -1,25 +1,47 @@
 """Query registry: name -> (spark builder, optional DuckDB oracle SQL).
 
 Every operator in SURVEY.md §2 registers here; ``__spark_entry__.py``
-exposes the registry to the driver. Invariants for oracle-checked
-queries (the driver hash-compares values order-insensitively after
-sorting columns by name):
+exposes the registry to the driver, which hash-compares oracle-checked
+values order-insensitively after sorting columns by name. So both sides
+alias every column identically, emit no raw timestamps (format them to
+strings/dates), compute double aggregates decimal-exact and cast to
+double at the edge (bit-identical across engines and partition orders),
+and round similarity/ratio scores to the same fixed decimals.
 
-- identical column names on both sides (alias everything);
-- no raw timestamp columns in outputs (format to strings/dates);
-- double-typed aggregates are computed decimal-exact and cast to
-  double at the edge, so the value is independent of partition order
-  and bit-identical across engines;
-- similarity/ratio scores rounded to a fixed number of decimals on
-  both sides.
+Oracle rotation: each round the driver checks the first 50 entries of
+``queries()`` / ``oracle_sql()`` and writes ``CORRECTNESS_r<N>.json`` to
+the repo root. A record is green when ``hash_match``, ``rows_match`` and
+``schema_match`` are true and ``err`` is null, or when ``err`` is
+``"no_oracle"`` and the entry still has no oracle. Window order:
+
+1. SQL-oracled entries with no green round;
+2. ``REPROVE`` (plans changed since the entry's last green round);
+3. other SQL-oracled entries, oldest last green round first;
+4. rows-only entries.
+
+Ties keep registration order, as does the whole window when no evidence
+file reads. ``REGISTRY`` and ``headline_queries()`` never reorder.
 """
 
 from __future__ import annotations
 
+import importlib
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+EVIDENCE_DIR = Path(__file__).resolve().parents[2]
+
+# Entries whose plans (or Python worker code) changed since their last
+# green round; drop a name once a CORRECTNESS round re-proves it.
+REPROVE = (
+    "s_neighbor_fill", "pipeline_e2e", "tok_unigram_lm",
+    "dd_minhash_lsh_portable", "dd_simhash_portable", "q_incremental_mv",
+)
 
 
 @dataclass(frozen=True)
@@ -42,12 +64,13 @@ def register(name: str, oracle: str | None = None, headline: bool = False):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     _ensure_loaded()
-    return {name: qd.build for name, qd in REGISTRY.items()}
+    return {name: REGISTRY[name].build for name in _window}
 
 
 def oracle_sql() -> dict[str, str]:
     _ensure_loaded()
-    return {name: qd.oracle for name, qd in REGISTRY.items() if qd.oracle}
+    return {name: REGISTRY[name].oracle for name in _window
+            if REGISTRY[name].oracle}
 
 
 def headline_queries() -> dict[str, QueryDef]:
@@ -55,354 +78,63 @@ def headline_queries() -> dict[str, QueryDef]:
     return {name: qd for name, qd in REGISTRY.items() if qd.headline}
 
 
-_loaded = False
+def _green(rec: dict, oracled: bool) -> bool:
+    if rec.get("err") == "no_oracle":
+        return not oracled
+    return rec.get("err") is None and all(
+        rec.get(k) is True for k in ("hash_match", "rows_match", "schema_match"))
 
-# Every module that registers queries. A failed import must surface as a
+
+def last_green(evidence_dir: Path = EVIDENCE_DIR) -> dict[str, int] | None:
+    """Registered name -> last green round; None if no evidence file reads."""
+    rounds = {}
+    for path in Path(evidence_dir).glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        try:
+            rounds[int(m.group(1))] = json.loads(path.read_text()).items()
+        except (AttributeError, OSError, ValueError):
+            pass  # not a round file, unreadable, or not a JSON object
+    if not rounds:
+        return None
+    return {name: rnd for rnd in sorted(rounds) for name, rec in rounds[rnd]
+            if name in REGISTRY and isinstance(rec, dict)
+            and _green(rec, bool(REGISTRY[name].oracle))}
+
+
+def rotation(evidence_dir: Path = EVIDENCE_DIR) -> list[str]:
+    """Registry names in driver-window order (see module docstring)."""
+    green = last_green(evidence_dir)
+    if green is None:
+        return list(REGISTRY)
+    oracled = [n for n, qd in REGISTRY.items() if qd.oracle]
+    never = [n for n in oracled if n not in green]
+    reprove = [n for n in REPROVE if n in green]
+    stale = sorted((n for n in oracled if n in green and n not in reprove),
+                   key=green.get)
+    rows_only = [n for n, qd in REGISTRY.items()
+                 if not qd.oracle and n not in reprove]
+    return never + reprove + stale + rows_only
+
+
+_window: list[str] = []
+
+# Every module that registers queries, in import order (analytics2 reads
+# REGISTRY['dp_pack'] at import time). A failed import must surface as a
 # loud error naming the module (a silent `except ImportError: pass` here
 # once shrank the registry by 56 queries without anyone noticing).
 _PLAN_MODULES = (
-    "relational",
-    "relational_ext",
-    "tpch_shapes",
-    "tpch_shapes2",
-    "sanctions",
-    "training_data",
-    "training_data2",
-    "training_data3",
-    "streaming",
-    "multimodal",
-    "temporal",
-    "analytics",
-    "analytics2",
+    "relational", "relational_ext", "tpch_shapes", "tpch_shapes2",
+    "sanctions", "training_data", "training_data2", "training_data3",
+    "streaming", "multimodal", "temporal", "analytics", "analytics2",
     "analytics3",
 )
-
-# Queries already hash-verified by the round-1 driver (CORRECTNESS_r01.json).
-# The driver evaluates only the FIRST 50 registry entries per round, so
-# proven entries move to the back and never-evaluated ones to the front.
-_R01_PROVEN = frozenset({
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-    "q6_forecast_revenue", "q_top_customers_window", "q_priority_pivot",
-    "q_rollup_sales", "q_semi_anti", "q_distinct_union", "q_events_bucketed",
-    # q_approx_sketch was r01-checked as rows-only; it gained a SQL
-    # oracle in round 8 (exact counts + invariant booleans) and moved
-    # into the round-8 window for hash verification.
-    "q_sessionize", "q_skew_salted", "q_cube_sales",
-    "q17_small_qty", "q_grouping_sets", "q_percentile", "q_moving_avg",
-    "q_argmax", "q_intersect_except", "q_json_props", "q_gap_fill",
-    "q_unpivot", "q_stats_moments", "q_upsert_latest", "q13_custdist",
-    "q19_disjunctive", "q21_sole_returner", "q_dq_audit", "q_variant_props",
-    "q_keyset_page", "q_robust_stats", "q_period_over_period",
-    "q4_order_priority", "q7_volume_shipping", "q8_market_share",
-    "q10_returned_items", "q14_promo_revenue", "q18_large_orders",
-    "q22_idle_customers", "q15_top_supplier", "q_window_navigation",
-    "q_multi_distinct", "q_nullsafe_join", "q_pivot_native", "q_try_arith",
-    "q2_min_cost_supplier", "q9_product_profit", "q11_important_parts",
-    "q12_late_lines",
-})
-
-# Queries the round-2 driver evaluated (CORRECTNESS_r02.json): 40
-# hash-verified + 9 rows-only-verified. q_rollup_reuse is deliberately
-# NOT here — its r02 hash failure was an oracle-dtype artifact (DuckDB
-# HUGEINT -> float64 "73.0" vs Spark bigint "73"), fixed in
-# temporal.py; it leads the round-3 window to earn a green driver row.
-_R02_CHECKED = frozenset({
-    "s_clean_names", "s_clean_fixture", "s_name_variants", "s_gender_infer",
-    "s_date_reformat", "s_variant_match", "s_neighbor_fill", "s_details_agg",
-    "s_address_clean", "s_fuzzy_match", "q_asof_join", "cg_asof_pandas",
-    "q_asof_forward", "q_range_join", "q_range_frame", "q_scd2", "q_funnel",
-    "q_retention", "q16_supplier_cnt", "q20_top_share_suppliers",
-    "q_null_skew_outer", "q_array_hof", "dd_exact", "dd_ngram_jaccard",
-    "dd_embed_cosine", "dd_cluster", "dd_keep_canonical", "dd_span_dedup",
-    "sim_topk_bruteforce", "sim_ann_lsh", "st_tumbling", "st_session",
-    "st_dedup", "st_user_state", "st_stream_static", "st_sliding",
-    "st_stream_stream", "st_foreach_upsert", "tx_langid", "q_lateral_topk",
-    # rows-only rows the r02 driver recorded (still driver-checked).
-    # xml_entity_extract / xml_pysource_split / pdf_chunk_extract /
-    # xml_stream_split / pipeline_e2e gained SQL oracles in round 7 and
-    # moved back to the never-checked pool (ROUND-8 staged) for hash
-    # verification:
-    "dd_minhash_lsh", "dd_simhash", "sim_ann_ivf",
-    "sim_ann_pq", "st_chained_windows",
-})
-
-_DRIVER_CHECKED = _R01_PROVEN | _R02_CHECKED
-
-# Queries the round-3 driver hash-verified (CORRECTNESS_r03.json: 50/50
-# green, including the q_rollup_reuse re-prove after the oracle dtype fix).
-_R03_CHECKED = frozenset({
-    "q_rollup_reuse", "q_window_distinct", "q_cdc_diff", "q_ewma",
-    "q_mode_stat", "q_histogram", "q_pivot_multi", "q_new_returning",
-    "q_rank_functions", "q_bitmap_rollup", "q_recursive_walk", "q_transpose",
-    "q_markov_transitions", "q_interval_merge", "q_cms_topk",
-    "s_watchlist_screen", "st_watchlist_screen", "tx_quality", "tx_tokens",
-    "tx_fingerprint", "tx_tfidf", "tx_pii_redact", "tx_ngrams", "tx_keywords",
-    "tx_quality_filter", "tx_contamination", "tx_repetition", "tx_entropy",
-    "tx_js_divergence", "tx_perplexity", "tx_langid_eval", "tx_filter_verdict",
-    "mix_sample", "mix_temperature", "mix_dedup_priority", "mix_epochs",
-    "mix_weighted_sample", "mix_dsir_weights", "mix_budget_fill",
-    "mix_epoch_materialize", "dp_pack", "dp_cap_per_source", "dp_shuffle",
-    "dp_curriculum", "dp_balanced_shards", "dp_doc_chunks",
-    "dp_length_buckets", "dp_interleave", "dp_manifest", "tt_split",
-})
-
-_DRIVER_CHECKED = _DRIVER_CHECKED | _R03_CHECKED
-
-# Queries the round-4 driver hash-verified (CORRECTNESS_r04.json: 50/50
-# green — the embedding/similarity/graph/split/eval window).
-_R04_CHECKED = frozenset({
-    "emb_centroid", "emb_quantize", "corpus_e2e", "corpus_report",
-    "tt_leakage_check", "emb_outliers", "sim_range_search", "emb_knn_graph",
-    "dd_dup_regions", "dd_containment", "gr_triangle_count", "tok_vocab",
-    "sim_recall_eval", "tt_stratified_split", "ml_naive_bayes",
-    "emb_matryoshka_eval", "pr_item_cosine", "dd_lsh_tuning",
-    "dd_threshold_sweep", "sim_maxsim", "sim_hard_negatives", "dd_winnow",
-    "gr_link_predict", "tt_kfold", "dd_dup_stats", "tx_gopher_rules",
-    # gr_pagerank was r04-checked but its plan changed in round 7 (the
-    # fold_pagerank teleport-constant fix) — returned to the never-
-    # checked pool (ROUND-8 staged block) so the driver re-verifies it.
-    "dd_soft_dedup", "tt_dedup_aware_split", "dd_line_dedup",
-    "tx_bm25", "sim_rrf_fusion", "sim_ann_hamming", "dp_sft_format",
-    "tx_ccnet_buckets", "dp_fim_transform", "tt_bloom_contamination",
-    "gr_hits", "q_attribution", "tx_html_strip", "q_time_weighted_avg",
-    "q_ohlc_bars", "dq_k_anonymity", "mix_ccnet_sampling", "gr_kcore",
-    "s_aml_structuring", "q_benford_check", "tx_zipf_fit", "tx_readability",
-    "gr_assortativity",
-})
-
-_DRIVER_CHECKED = _DRIVER_CHECKED | _R04_CHECKED
-
-# Queries the round-5 driver hash-verified (CORRECTNESS_r05.json: 50/50
-# green — the streaming/analytics/stats straggler window).
-_R05_CHECKED = frozenset({
-    "st_scd2_lookup", "st_anomaly", "st_topk_trending", "s_velocity_check",
-    "q_funnel_ttc", "dp_rendezvous_shards", "tx_heaps_fit",
-    "dd_sorted_neighborhood", "tx_burstiness", "q_pareto_abc",
-    "q_market_basket", "q_rfm_segmentation", "q_cohort_ltv",
-    "gr_local_clustering", "q_cep_pattern", "q_skyline", "q_path_analysis",
-    "sim_ndcg_eval", "q_ab_ztest", "q_dormancy_reactivation",
-    "q_gini_coefficient", "q_weekday_seasonality", "q_lorenz_deciles",
-    "q_hhi_concentration", "q_chi_square", "q_anova_f", "q_zscore_outliers",
-    "q_winsorize", "q_islands_streaks", "q_listagg_nations", "dq_referential",
-    "tx_code_detect", "dp_span_mask", "sim_reciprocal_nn", "gr_degree_stats",
-    "tx_sentence_stats", "tok_char_coverage", "io_jsonl_roundtrip",
-    "io_partitioned_pruned", "q_mann_kendall", "q_acf", "q_ks_test",
-    "q_theil_index", "dq_uniqueness", "q_runs_test", "q_cramers_v",
-    "q_welch_ttest", "sim_mrr_eval", "q_levene_test", "io_csv_roundtrip",
-})
-
-_DRIVER_CHECKED = _DRIVER_CHECKED | _R05_CHECKED
-
-# Queries the round-6 driver hash-verified (CORRECTNESS_r06.json: 50/50
-# green — the analytics2 window).
-_R06_CHECKED = frozenset({
-    "q_seasonal_decompose", "tx_lexical_diversity", "q_bollinger_bands",
-    "q_drawdown", "q_rsi", "q_spearman_corr", "tt_reservoir_sample",
-    "q_interevent_stats", "q_user_entropy", "tx_bigram_pmi",
-    "io_orc_roundtrip", "q_pettitt_test", "s_round_amount_bias",
-    "q_business_days", "emb_norm_stats", "sim_cosine_histogram",
-    "q_quantile_bins", "q_poisson_dispersion", "gr_transitivity",
-    "tok_oov_rate", "pr_user_recs", "io_schema_evolution", "q_grubbs_test",
-    "q_hourly_heatmap", "q_asof_nearest", "q_concurrency_profile",
-    "tt_temporal_split", "tx_boilerplate", "q_durbin_watson",
-    "q_rolling_mad", "q_theil_sen", "sim_threshold_eval",
-    "emb_centroid_classify", "q_lateness_profile", "sim_roc_auc",
-    "q_growth_accounting", "st_hourly_heatmap", "dq_psi_drift",
-    "q_event_study", "q_ols_trend", "s_duplicate_payments",
-    "q_activity_distribution", "gr_powerlaw_alpha", "tx_keyness",
-    "q_price_volume_mix", "q_kaplan_meier", "q_waterfall_decomp",
-    "emb_dim_variance", "q_seasonality_strength", "q_basket_profile",
-})
-
-_DRIVER_CHECKED = _DRIVER_CHECKED | _R06_CHECKED
-
-# Queries the round-7 driver hash-verified (CORRECTNESS_r07.json: 50/50
-# green — the analytics2/analytics3 tail window).
-_R07_CHECKED = frozenset({
-    "q_price_dispersion", "tok_vocab_overlap", "q_mann_whitney",
-    "q_friedman_test", "sim_avg_precision", "q_control_chart",
-    "q_rolling_corr", "q_cumulative_unique", "q_stickiness",
-    "emb_davies_bouldin", "q_conversion_latency", "q_holiday_lift",
-    "s_risk_scorecard", "q_trade_balance", "q_sla_attainment",
-    "q_odds_ratio", "dp_pack_efficiency", "tt_rolling_origin",
-    "gr_rich_club", "q_forecast_backtest", "q_bootstrap_se",
-    "gr_temporal_density", "q_mantel_haenszel", "emb_alignment_uniformity",
-    "io_jsonl_quarantine", "q_discount_response", "q_segment_migration",
-    "q_hurst_exponent", "q_weibull_fit", "gr_degree_gini", "q_nbinom_fit",
-    "q_record_days", "q_seasonal_mann_kendall", "dq_table_manifest",
-    "q_dormancy_timeline", "q_top_share", "emb_knn_accuracy",
-    "dd_minhash_lsh_portable", "dd_simhash_portable", "q_cohens_kappa",
-    "tx_dedup_impact", "tt_group_kfold", "s_name_idf_score", "q_cagr",
-    "q_linear_interpolate", "dq_drift_fdr", "st_left_outer_join",
-    "q_ljung_box", "q_decile_lift", "q_price_elasticity",
-})
-
-_DRIVER_CHECKED = _DRIVER_CHECKED | _R07_CHECKED
-
-# Queries the round-8 driver hash-verified (CORRECTNESS_r08.json: 50/50
-# green — the analytics3 tail + XML/PDF/pipeline oracle backfills +
-# round-8 rows-only conversions window).
-_R08_CHECKED = frozenset({
-    "q_nelson_aalen", "q_group_percentiles", "tok_mincount_sweep",
-    "q_kendall_tau", "q_gk_gamma", "s_translit_match", "q_rolling_beta",
-    "q_session_stats", "ml_kmeans_step", "q_audience_overlap",
-    "io_dynamic_partition_overwrite", "q_watermark_advice",
-    "dd_minhash_est_error", "gr_label_prop", "gr_bfs_layers",
-    "q_cusum_changepoint", "pr_copurchase", "ml_group_fit",
-    "io_bucketed_join", "io_parquet_codecs", "io_compact_small_files",
-    "q_mergeable_stats", "gr_pagerank", "q_holt_forecast",
-    "xml_stream_split", "xml_pysource_split", "pdf_chunk_extract",
-    "xml_entity_extract", "io_zorder_clustering", "tx_ngram_novelty",
-    "q_bitemporal_asof", "io_stats_collect",
-    "q_join_cardinality_estimate", "dd_bloom_prejoin", "tt_purged_cv",
-    "q_incremental_mv", "ml_decision_stump", "dq_expectations",
-    "pipeline_e2e", "xml_xpath_extract", "s_phonetic_screen",
-    "s_alias_graph", "tok_wordpiece", "dp_padding_batches",
-    "q_approx_sketch", "q_sketch_merge", "dp_pack_sequences",
-    "dd_cut_regions", "tx_compress_ratio", "sim_mmr_diversify",
-})
-
-_DRIVER_CHECKED = _DRIVER_CHECKED | _R08_CHECKED
-
-# Queries the round-9 driver hash-verified (CORRECTNESS_r09.json: 50/50
-# green — the staged conversions + collapse-family re-proofs + round-1
-# backfill window).
-_R09_CHECKED = frozenset({
-    "dp_packing_bestfit", "mm_decode", "mm_frames", "mm_resize",
-    "mm_audio_windows", "mm_luma_hist", "mm_phash", "tok_fertility",
-    "emb_whiten", "emb_pca", "st_chained_windows", "tx_compress_ratio",
-    "dd_cluster", "dd_keep_canonical", "dd_ngram_jaccard", "corpus_e2e",
-    "tt_leakage_check", "dd_winnow", "dd_minhash_lsh_portable",
-    "dd_simhash_portable", "dd_embed_cosine", "dd_threshold_sweep",
-    "sim_range_search", "q1_pricing_summary", "q3_shipping_priority",
-    "q5_local_supplier", "q6_forecast_revenue", "q_top_customers_window",
-    "q_priority_pivot", "q_rollup_sales", "q_semi_anti",
-    "q_distinct_union", "q_events_bucketed", "q_sessionize",
-    "q_skew_salted", "q_cube_sales", "q17_small_qty", "q_grouping_sets",
-    "q_percentile", "q_moving_avg", "q_argmax", "q_intersect_except",
-    "q_json_props", "q_gap_fill", "q_unpivot", "q_stats_moments",
-    "q_upsert_latest", "q13_custdist", "q19_disjunctive",
-    "q21_sole_returner",
-})
-
-_DRIVER_CHECKED = _DRIVER_CHECKED | _R09_CHECKED
-
-# Queries the round-10 driver hash-verified (CORRECTNESS_r10.json:
-# 50/50 green — the 11 round-10 rows-only conversions, 11 changed-plan
-# re-proofs, and 28 round-3 backfills).
-_R10_CHECKED = frozenset({
-    "emb_kmeans_train", "sim_ann_ivf", "emb_knn_graph_ivf",
-    "emb_semantic_dedup", "mm_spectral", "sim_ann_pq", "sim_ann_ivfpq",
-    "ml_logreg", "tok_bpe_merges", "tok_bpe_encode", "emb_isotropy",
-    "tx_compress_ratio", "sim_maxsim", "tx_ngram_novelty", "tok_fertility",
-    "dd_ngram_jaccard", "dd_cluster", "dd_keep_canonical",
-    "dd_minhash_lsh_portable", "dd_simhash_portable", "corpus_e2e",
-    "tt_leakage_check", "q_rollup_reuse", "q_window_distinct", "q_cdc_diff",
-    "q_ewma", "q_mode_stat", "q_histogram", "q_pivot_multi",
-    "q_new_returning", "q_rank_functions", "q_bitmap_rollup",
-    "q_recursive_walk", "q_transpose", "q_markov_transitions",
-    "q_interval_merge", "q_cms_topk", "s_watchlist_screen",
-    "st_watchlist_screen", "tx_quality", "tx_tokens", "tx_fingerprint",
-    "tx_tfidf", "tx_pii_redact", "tx_ngrams", "tx_keywords",
-    "tx_quality_filter", "tx_contamination", "tx_repetition", "tx_entropy",
-})
-
-_DRIVER_CHECKED = _DRIVER_CHECKED | _R10_CHECKED
-
-# Queries the round-11 driver hash-verified (CORRECTNESS_r11.json:
-# 50/50 green — all 22 round-1-age backfills, the 10 round-2-age
-# sanctions entries, the round-11 rows-only conversions and the
-# round-11 changed-plan re-proofs).
-_R11_CHECKED = frozenset({
-    "q2_min_cost_supplier", "q4_order_priority", "q7_volume_shipping",
-    "q8_market_share", "q9_product_profit", "q10_returned_items",
-    "q11_important_parts", "q12_late_lines", "q14_promo_revenue",
-    "q15_top_supplier", "q18_large_orders", "q22_idle_customers",
-    "q_dq_audit", "q_keyset_page", "q_multi_distinct", "q_nullsafe_join",
-    "q_period_over_period", "q_pivot_native", "q_robust_stats",
-    "q_try_arith", "q_variant_props", "q_window_navigation",
-    "s_address_clean", "s_clean_fixture", "s_clean_names",
-    "s_date_reformat", "s_details_agg", "s_fuzzy_match", "s_gender_infer",
-    "s_name_variants", "s_neighbor_fill", "s_variant_match",
-    "tok_unigram_lm", "pr_implicit_als", "emb_procrustes_align",
-    "sim_ann_ivf", "sim_ann_pq", "sim_ann_ivfpq", "emb_knn_graph_ivf",
-    "emb_semantic_dedup", "emb_kmeans_train", "dd_cluster",
-    "dd_keep_canonical", "corpus_e2e", "s_alias_graph",
-    "emb_knn_graph", "sim_reciprocal_nn", "dd_containment",
-    "emb_centroid_classify", "dd_threshold_sweep",
-})
-
-_DRIVER_CHECKED = _DRIVER_CHECKED | _R11_CHECKED
-
-# Explicit priority for the round-12 driver 50-entry correctness
-# window. Round 12 is the second OPTIMIZATION round: ~70 builders'
-# plans changed (shared-subtree persists, single-pass rewrites, the
-# Arrow EM path, the sharded-window helper persist that touches all 16
-# call sites), so changed-plan re-proofs displace the age-based
-# backfill queue this round (VERDICT r11 next-round item 3 names the
-# round-11-touched-but-unwindowed set explicitly). Ordering within the
-# window: (a) structural rewrites whose SEMANTICS were re-derived
-# (q_kaplan_meier's one-window pivot, q_chi_square/q_cramers_v's
-# census-derived marginals, q_cms_topk's census-built sketch,
-# q_incremental_mv's is-delta regroup, q_nelson_aalen's kaplan-pattern
-# rewrite, the BM25/unigram collect merges, the bounds-threaded ntile
-# chains), then (b) the round-11/12 persist-family re-proofs. The 26
-# age-based backfills (q16_supplier_cnt, q20_top_share_suppliers,
-# q_array_hof, q_lateral_topk, q_null_skew_outer, q_retention, q_scd2,
-# sim_ann_lsh, sim_topk_bruteforce, the st_* block, tx_langid,
-# q_asof_forward, q_range_frame, q_asof_join, q_range_join,
-# cg_asof_pandas, dd_exact) defer to round 13 — q_funnel and
-# dd_span_dedup from that queue DO ride this window (both are also
-# round-12 changed-plan).
-#
-# STAGED ROTATION BLOCKS (parsed by the staging test — everything from
-# here to the priority-tuple assignment below must name exactly the
-# never-checked SQL-oracled entries not already in the priority tuple):
-# ROUND-13 WINDOW: (empty — every SQL-oracled entry is driver-checked
-# or in the round-12 priority window below; the deferred age-based
-# backfill queue above leads round 13)
-_ORACLE_PRIORITY = (
-    # (a) structural rewrites — semantics re-derived this round or
-    # round 11, highest re-proof value
-    "q_kaplan_meier", "q_chi_square", "q_cramers_v", "q_cms_topk",
-    "q_incremental_mv", "dq_referential", "q_dormancy_timeline",
-    "pr_user_recs", "q_nelson_aalen", "gr_triangle_count", "tx_bm25",
-    "sim_rrf_fusion", "tok_bpe_merges", "tok_bpe_encode",
-    "tok_unigram_lm", "gr_link_predict", "q_rfm_segmentation",
-    "dp_curriculum", "q_levene_test", "q_mantel_haenszel",
-    "q_hurst_exponent", "tx_perplexity", "io_zorder_clustering",
-    "q1_pricing_summary",
-    # (b) round-11/12 persist-family re-proofs (same results, changed
-    # plans: shared subtrees now computed once behind InMemoryRelation)
-    "tx_bigram_pmi", "tx_keyness", "dd_ngram_jaccard", "dd_winnow",
-    "dd_span_dedup", "dd_line_dedup", "dd_minhash_lsh_portable",
-    "dd_simhash_portable", "mm_phash", "q_winsorize", "tx_ngram_novelty",
-    "q_lorenz_deciles", "q_hhi_concentration", "q_mann_kendall",
-    "q_kendall_tau", "emb_davies_bouldin", "dd_minhash_est_error",
-    "dq_expectations", "tx_tfidf", "tx_keywords", "tok_vocab_overlap",
-    "ml_naive_bayes", "q_funnel", "tx_heaps_fit", "dd_dup_regions",
-    "s_gender_infer",
-)
-
-
-def _reorder_registry() -> None:
-    """Rebuild REGISTRY dict order: priority list, other unchecked, checked."""
-    front = [n for n in _ORACLE_PRIORITY if n in REGISTRY]
-    seen = set(front)
-    middle = [n for n in REGISTRY if n not in seen and n not in _DRIVER_CHECKED]
-    back = [n for n in REGISTRY if n in _DRIVER_CHECKED and n not in seen]
-    ordered = {n: REGISTRY[n] for n in (*front, *middle, *back)}
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
 
 
 def _ensure_loaded() -> None:
     """Import every module that registers queries (idempotent, loud)."""
-    global _loaded
-    if _loaded:
+    global _window
+    if _window:
         return
-    import importlib
-
     errors: list[str] = []
     for mod in _PLAN_MODULES:
         try:
@@ -413,7 +145,5 @@ def _ensure_loaded() -> None:
         raise ImportError(
             "query registry is incomplete — plan module(s) failed to import "
             "(their queries would silently vanish from the registry): "
-            + "; ".join(errors)
-        )
-    _reorder_registry()
-    _loaded = True
+            + "; ".join(errors))
+    _window = rotation()

@@ -195,25 +195,39 @@ def _shm_usable(min_free_bytes: int = 256 << 20) -> bool:
     return st.f_bavail * st.f_frsize >= min_free_bytes
 
 
+def _pid_ns() -> int | None:
+    """Inode of this process's PID namespace, or None if unreadable."""
+    try:
+        return os.stat("/proc/self/ns/pid").st_ino
+    except OSError:
+        return None
+
+
 def _reap_stale_mem_ckpt(scratch_root: str) -> None:
-    """Delete mem_ckpt dirs owned by DEAD pids under scratch_root.
+    """Delete mem_ckpt dirs owned by DEAD pids of our PID namespace.
 
     A hard-killed process never reaches the finally-rmtree, and when
     scratch_root is tmpfs the orphan holds RAM until reboot — reap on
     the next drain, mirroring helpers.reap_stale_scratch (which scans
     only the disk tmpdir root). Safe by construction: a checkpoint
     whose owning pid is gone can never be resumed (fresh bounded
-    drains, never restarted). (ADVICE r11)
+    drains, never restarted). A pid means nothing outside its PID
+    namespace (a live owner in another container looks dead to
+    ``os.kill``), so only dirs carrying our own namespace token are
+    judged, and nothing is reaped when the namespace cannot be read.
     """
     import re
 
+    ns = _pid_ns()
+    if ns is None:
+        return
     root = os.path.join(scratch_root, "spark_graft_io", "mem_ckpt")
     try:
         entries = list(os.scandir(root))
     except OSError:
         return
     me = os.getpid()
-    pat = re.compile(r"_pid(\d+)$")
+    pat = re.compile(rf"_ns{ns}_pid(\d+)$")
     for d in entries:
         m = pat.search(d.name)
         if not (d.is_dir() and m):
@@ -234,12 +248,13 @@ def _mem_ckpt_path(scratch_root: str, name: str) -> str:
     """Fresh checkpoint dir for one drain: uuid even when a table_name
     was supplied — two concurrent same-pid drains of the same table
     must not share a checkpoint (the first finisher's rmtree would
-    delete the live query's checkpoint mid-run); _pid stays LAST so
-    the stale-dir reaper's _pid<digits>$ pattern matches. (ADVICE r11)
+    delete the live query's checkpoint mid-run); the PID-namespace
+    token precedes _pid, which stays LAST so the stale-dir reaper's
+    _ns<inode>_pid<digits>$ pattern matches. (ADVICE r11)
     """
     return os.path.join(
         scratch_root, "spark_graft_io", "mem_ckpt",
-        f"{name}_{uuid.uuid4().hex[:8]}_pid{os.getpid()}")
+        f"{name}_{uuid.uuid4().hex[:8]}_ns{_pid_ns() or 0}_pid{os.getpid()}")
 
 
 def run_available_now(sdf: DataFrame, output_mode: str = "complete",

@@ -338,32 +338,91 @@ def test_dp_shuffle_scan_prunes_the_text_column(spark, sf_dir):
 def test_registry_contract_invariants():
     """Driver-contract guards: every entry callable, oracle SQL
     non-trivial where present, headline set inside the registry, and
-    the correctness window populated with round-1-unverified entries."""
+    the 50-entry correctness window derived from CORRECTNESS_r*.json:
+    all SQL-oracled, every never-green SQL-oracled entry in it, then
+    REPROVE, then the stalest evidence round in full."""
     from sanctions_data_pipeline_spark.plans import registry as reg
 
     qs = reg.queries()
     os_ = reg.oracle_sql()
     assert len(qs) >= 190 and len(os_) >= 160
-    assert set(os_) <= set(qs)
+    assert set(os_) <= set(qs) == set(reg.REGISTRY)
     for name, sql in os_.items():
         assert isinstance(sql, str) and "SELECT" in sql.upper(), name
     for name, qd in reg.headline_queries().items():
         assert name in qs and qd.headline
-    # the driver's 50-entry window must contain EVERY never-checked
-    # SQL-oracled entry (so nothing escapes driver verification);
-    # while the never-checked pool was > 50 this meant "no proven
-    # entry in the window" — now that the pool fits, surplus window
-    # slots deliberately carry re-proofs (changed plans, oldest
-    # evidence), which is the round-9+ rotation contract
+    assert list(reg.headline_queries()) == [
+        n for n, qd in reg.REGISTRY.items() if qd.headline]
+    # REPROVE names real SQL-oracled entries (a typo would drop silently)
+    assert set(reg.REPROVE) <= set(os_)
+    assert len(reg.REPROVE) <= 15
+    green = reg.last_green()
+    assert green is not None
     window = list(qs)[:50]
-    never_checked = {n for n in os_ if n not in reg._DRIVER_CHECKED}
-    if len(never_checked) <= 50:
-        assert never_checked <= set(window), (
-            sorted(never_checked - set(window)))
-    else:
-        assert not (set(window) & reg._DRIVER_CHECKED)
-    # every window entry is SQL-oracled (the driver's strongest check)
     assert set(window) <= set(os_)
+    never = [n for n in os_ if n not in green]
+    assert len(never) < 50 and window[:len(never)] == never
+    reprove = [n for n in reg.REPROVE if n in green]
+    assert window[len(never):len(never) + len(reprove)] == reprove
+    oldest = min(green[n] for n in os_ if n in green)
+    assert {n for n in os_ if green.get(n) == oldest} <= set(window)
+
+
+def _evidence(tmp_path, rounds):
+    import json
+
+    for name, records in rounds.items():
+        (tmp_path / f"CORRECTNESS_{name}.json").write_text(
+            json.dumps(records) if isinstance(records, dict) else records)
+    return tmp_path
+
+
+def test_rotation_derives_four_tier_order_from_evidence(tmp_path):
+    """The window order comes from the evidence files alone: never-green
+    SQL-oracled entries first (a failed record, and a no_oracle record
+    of an entry that has an oracle today, are not green), then REPROVE,
+    then the rest by last green round (rounds sorted numerically, r10
+    after r2), rows-only last. Nothing never-checked escapes the head."""
+    from sanctions_data_pipeline_spark.plans import registry as reg
+
+    reg.queries()
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True,
+          "err": None}
+    bad = {**ok, "hash_match": False}
+    no_oracle = {"rows_match": None, "schema_match": None,
+                 "hash_match": None, "err": "no_oracle"}
+    rep = reg.REPROVE[0]
+    ev = _evidence(tmp_path, {
+        "r1": {"q_rollup_reuse": bad, "q1_pricing_summary": bad,
+               "q3_shipping_priority": ok, "q6_forecast_revenue": ok},
+        "r2": {"xml_entity_extract": no_oracle, "dd_minhash_lsh": no_oracle,
+               rep: ok, "q6_forecast_revenue": ok},
+        "r10": {"q1_pricing_summary": ok},
+        "r11": "{not json",
+    })
+    assert reg.last_green(ev) == {
+        "q3_shipping_priority": 1, "q6_forecast_revenue": 2, rep: 2,
+        "dd_minhash_lsh": 2, "q1_pricing_summary": 10}
+    order = reg.rotation(ev)
+    assert sorted(order) == sorted(reg.REGISTRY)
+    rows_only = [n for n, qd in reg.REGISTRY.items() if not qd.oracle]
+    green = {"q3_shipping_priority", "q6_forecast_revenue", rep,
+             "q1_pricing_summary"}
+    never = [n for n, qd in reg.REGISTRY.items()
+             if qd.oracle and n not in green]
+    assert "q_rollup_reuse" in never and "xml_entity_extract" in never
+    assert order == [*never, rep, "q3_shipping_priority",
+                     "q6_forecast_revenue", "q1_pricing_summary", *rows_only]
+
+
+def test_rotation_without_evidence_is_registration_order(tmp_path):
+    from sanctions_data_pipeline_spark.plans import registry as reg
+
+    reg.queries()
+    assert reg.last_green(tmp_path / "missing") is None
+    assert reg.rotation(tmp_path / "missing") == list(reg.REGISTRY)
+    unreadable = _evidence(tmp_path, {"r1": "[1, 2]", "r2": "{"})
+    assert reg.rotation(unreadable) == list(reg.REGISTRY)
 
 
 def test_survey_registry_sync():
@@ -456,32 +515,6 @@ def test_bench_summary_line_is_last_and_bounded():
     names = set(reg.queries())
     assert bench.LEGACY_20 <= names
     assert bench.LIKE_FOR_LIKE_45 <= names
-
-
-def test_rotation_staging_covers_remaining_pool():
-    """plans/registry.py stages the round-6/7 driver windows as
-    comments; they must name EXACTLY the still-never-driver-checked
-    SQL-oracled entries (new ops must be appended there), so each
-    round's rotation stays mechanical and nothing silently escapes
-    driver verification."""
-    import os
-    import re
-
-    from sanctions_data_pipeline_spark.plans import registry as reg
-
-    reg.queries()
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    src = open(os.path.join(
-        root, "sanctions_data_pipeline_spark/plans/registry.py")).read()
-    block = src.split("STAGED ROTATION BLOCKS")[1].split("_ORACLE_PRIORITY = (")[0]
-    staged = {c for c in re.findall(r"[a-z][a-z0-9_]+", block)
-              if c in reg.REGISTRY}
-    checked = reg._DRIVER_CHECKED | set(reg._ORACLE_PRIORITY)
-    remaining = {n for n, qd in reg.REGISTRY.items()
-                 if qd.oracle and n not in checked}
-    assert staged == remaining, (
-        f"unstaged={sorted(remaining - staged)} "
-        f"stale={sorted(staged - remaining)}")
 
 
 # ---------------------------------------------------------------------------

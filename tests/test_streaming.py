@@ -500,23 +500,34 @@ def test_left_outer_join_millisecond_boundaries(spark, tmp_path):
     assert emitted == {3}  # only the click a full ms inside the cutoff
 
 
-def test_stale_mem_ckpt_reaper_removes_only_dead_pid_dirs(tmp_path):
+def test_stale_mem_ckpt_reaper_removes_only_dead_pid_dirs(tmp_path, monkeypatch):
     """Orphaned tmpfs checkpoints from hard-killed processes are reaped
     on the next drain; live-pid and own-pid dirs are untouched (ADVICE
-    r11 — tmpfs orphans hold RAM until reboot otherwise)."""
+    r11 — tmpfs orphans hold RAM until reboot otherwise). A dead-looking
+    pid under another PID namespace's token is someone else's live
+    owner and survives, and nothing is reaped when our own namespace
+    cannot be read (ADVICE r12)."""
     import sanctions_data_pipeline_spark.streaming.ops as sops
 
+    ns = sops._pid_ns()
+    assert ns is not None
     root = tmp_path / "spark_graft_io" / "mem_ckpt"
     root.mkdir(parents=True)
     # a pid beyond pid_max cannot exist -> dead
-    dead = root / "st_abc_deadbeef_pid99999999"
-    mine = root / f"st_def_cafebabe_pid{os.getpid()}"
+    dead = root / f"st_abc_deadbeef_ns{ns}_pid99999999"
+    foreign = root / f"st_abc_deadbeef_ns{ns + 1}_pid99999999"
+    mine = root / f"st_def_cafebabe_ns{ns}_pid{os.getpid()}"
     nopid = root / "not_a_checkpoint"
-    for d in (dead, mine, nopid):
+    for d in (dead, foreign, mine, nopid):
         d.mkdir()
+    with monkeypatch.context() as m:
+        m.setattr(sops, "_pid_ns", lambda: None)
+        sops._reap_stale_mem_ckpt(str(tmp_path))
+    assert dead.exists()
     sops._reap_stale_mem_ckpt(str(tmp_path))
     assert not dead.exists()
-    assert mine.exists() and nopid.exists()
+    assert foreign.exists() and mine.exists() and nopid.exists()
+    assert f"_ns{ns}_pid{os.getpid()}" in sops._mem_ckpt_path("s", "st_x")
 
 
 def test_mem_ckpt_paths_are_unique_per_call_even_with_table_name():

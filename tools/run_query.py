@@ -1,7 +1,7 @@
 """Run any registered query from the command line.
 
 Usage:
-  python tools/run_query.py --list
+  python tools/run_query.py --list    # name, check kind, last green round
   python tools/run_query.py q1_pricing_summary
   python tools/run_query.py q5_local_supplier --sf /root/testdata/sf0.01 \
       --explain --limit 10
@@ -40,9 +40,13 @@ def main() -> None:
     names = sorted(registry.queries())
     if args.list or not args.query:
         oracles = registry.oracle_sql()
+        green = registry.last_green() or {}
         for n in names:
-            print(f"{n:28s} {'SQL-oracled' if n in oracles else 'rows-only'}")
-        print(f"\n{len(names)} queries ({len(oracles)} SQL-oracled)")
+            kind = "SQL-oracled" if n in oracles else "rows-only"
+            last = f"r{green[n]:02d}" if n in green else "never"
+            print(f"{n:28s} {kind:12s} {last}")
+        print(f"\n{len(names)} queries ({len(oracles)} SQL-oracled); last "
+              f"column: last green driver round (CORRECTNESS_r*.json)")
         return
     if args.query not in names:
         import difflib
