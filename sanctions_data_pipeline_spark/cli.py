@@ -28,6 +28,7 @@ def main(argv: list[str] | None = None) -> None:
     from pyspark.sql import SparkSession
 
     from sanctions_data_pipeline_spark.pipeline import run_pipeline
+    from sanctions_data_pipeline_spark.plans.helpers import local_frame
     from sanctions_data_pipeline_spark.sources import sinks
 
     p = argparse.ArgumentParser(prog="sanctions_data_pipeline_spark")
@@ -71,7 +72,7 @@ def main(argv: list[str] | None = None) -> None:
             pdf_texts = extract_pdf_text(spark, args.pdf)
         elif args.pdf_text:
             with open(args.pdf_text, encoding="utf-8") as fh:
-                pdf_texts = spark.createDataFrame(
+                pdf_texts = local_frame(
                     [(args.pdf_text, fh.read())], "doc_path string, text string")
         table = run_pipeline(spark, args.feed, pdf_texts)
 

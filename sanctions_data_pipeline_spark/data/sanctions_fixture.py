@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sanctions_data_pipeline_spark.plans.helpers import local_frame
+
 # (entity_id, alias_idx, whole_name, gender_attr, function)
 ALIASES = [
     (1, 0, "José García-Moreno", None, "Minister of Finance"),
@@ -124,7 +126,7 @@ _DATA = {
 
 
 def spark_df(spark: SparkSession, name: str) -> DataFrame:
-    return spark.createDataFrame(_DATA[name], _SCHEMAS[name])
+    return local_frame(_DATA[name], _SCHEMAS[name])
 
 
 def _sql_lit(v) -> str:

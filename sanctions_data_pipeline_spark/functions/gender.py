@@ -13,11 +13,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from sanctions_data_pipeline_spark.data import gender_dict
+from sanctions_data_pipeline_spark.plans.helpers import local_frame
 
 
 def gender_dim(spark: SparkSession) -> DataFrame:
     """The first-name dictionary as a broadcastable dimension."""
-    return spark.createDataFrame(gender_dict.rows(), "gd_name string, gd_gender string")
+    return local_frame(gender_dict.rows(), "gd_name string, gd_gender string")
 
 
 def first_name(col: Column) -> Column:

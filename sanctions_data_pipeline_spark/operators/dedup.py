@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from sanctions_data_pipeline_spark.functions.hof import let
+from sanctions_data_pipeline_spark.plans.helpers import (
+    fetch_if_small, local_frame)
 
 
 # signature hash -> its bit width (SimHash fingerprint width)
@@ -999,25 +1001,24 @@ def ngram_jaccard_components(docs: DataFrame, block_cols: list[str],
 
 def connected_components(pairs: DataFrame, src: str = "i", dst: str = "j",
                          max_iters: int = 25,
-                         driver_max_pairs: int = 100_000) -> DataFrame:
+                         driver_max_pairs: int | None = None) -> DataFrame:
     """Connected components over an undirected pair list -> (id, cluster_id),
     cluster_id = min node id in the component. This is the "action" step
     of dedup: near-dup PAIRS become duplicate GROUPS, from which one
     canonical doc per group survives.
 
-    SMALL-GRAPH SWITCH (the CBO idiom — decide the plan from a cheap
-    statistic): the distributed loop pays 2-3 fixed-cost shuffle
-    rounds no matter how tiny the graph (measured ~2.5 s warm for a
-    79-edge graph at sf0.1 — the single biggest slice of dd_cluster),
-    while near-dup graphs AFTER collapse/exact-dedup are routinely
-    thousands of edges. Pair counts <= ``driver_max_pairs`` (bounded:
-    ~100k 16-byte edges, well under any driver limit — the same
-    size-gated pattern as the rep-label broadcast above) run
-    union-find with path compression driver-side off the persisted
-    pair table and parallelize the (id, min-id) labels back; larger
-    graphs take the unchanged distributed loop. Both paths are
-    output-identical (pinned by tests); at 100 TB a billion-edge
-    near-dup graph routes to the distributed loop by construction.
+    SMALL-GRAPH SWITCH (a size gate): the distributed loop pays 2-3
+    fixed-cost shuffle rounds no matter how tiny the graph (measured
+    ~2.5 s warm for a 79-edge graph at sf0.1 — the single biggest slice
+    of dd_cluster), while near-dup graphs AFTER collapse/exact-dedup
+    are routinely thousands of edges. Pair lists of at most
+    ``driver_max_pairs`` edges (default ``helpers.DRIVER_MAX_ROWS``)
+    come down in one :func:`fetch_if_small` and run union-find with
+    path compression driver-side; the (id, min-id) labels return as a
+    :func:`local_frame`. Larger graphs take the unchanged distributed
+    loop. Both paths are output-identical (pinned by tests); at 100 TB
+    a billion-edge near-dup graph routes to the distributed loop by
+    construction.
 
     Algorithm (distributed path): min-label propagation with pointer jumping.
     Each round every node takes the min label over itself and its
@@ -1053,10 +1054,10 @@ def connected_components(pairs: DataFrame, src: str = "i", dst: str = "j",
     base = (pairs.select(F.col(src).cast("long").alias("a"),
                          F.col(dst).cast("long").alias("b"))
             .persist())
-    # the count doubles as base's materialization (the loop's first
-    # action would have paid it) and as the path-selection statistic
-    n_pairs = base.count()
-    if n_pairs <= driver_max_pairs:
+    # one fetch answers the size gate; past the bound the partitions it
+    # computed stay cached for the loop's first action
+    edges_small = fetch_if_small(base, driver_max_pairs)
+    if edges_small is not None:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -1067,8 +1068,7 @@ def connected_components(pairs: DataFrame, src: str = "i", dst: str = "j",
                 parent[x], x = r, parent[x]
             return r
 
-        for row in base.collect():
-            a, b = row.a, row.b
+        for a, b in edges_small:
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
@@ -1082,8 +1082,7 @@ def connected_components(pairs: DataFrame, src: str = "i", dst: str = "j",
                 comp_min[r] = node
         out_rows = [(node, comp_min[find(node)]) for node in sorted(parent)]
         base.unpersist()
-        return pairs.sparkSession.createDataFrame(
-            out_rows, "id long, cluster_id long")
+        return local_frame(out_rows, "id long, cluster_id long")
     sym = (base.unionAll(base.select(F.col("b").alias("a"),
                                      F.col("a").alias("b")))
            .persist())

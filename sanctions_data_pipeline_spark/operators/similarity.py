@@ -15,6 +15,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from sanctions_data_pipeline_spark.plans.helpers import (
+    fetch_if_small, local_frame)
+
 
 def as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -265,8 +268,9 @@ def knn_graph(vecs: DataFrame, k: int, block_cols: list[str] | None = None,
             return _knn_graph_collapsed(vecs, k, id_col, vec_col,
                                         matmul_max_corpus)
         if st["n"] and st["n"] <= matmul_max_corpus:
+            corpus = _knn_corpus(vecs, id_col, vec_col)
             return _finalize_knn(
-                _knn_matmul_cand(vecs, k, id_col, vec_col), k)
+                _knn_matmul_cand(corpus, corpus.collect(), k, id_col), k)
     a = _with_norm(vecs.select(*on, F.col(id_col).alias("src_id"),
                                as_double(F.col(vec_col)).alias("va")),
                    "va", "na")
@@ -348,10 +352,10 @@ def _knn_graph_collapsed(vecs: DataFrame, k: int, id_col: str,
               .persist())
     reps = groups.select(F.col("rep").alias(id_col),
                          F.col("__v").alias(vec_col))
-    if groups.count() <= matmul_max_corpus:
-        cand = _knn_matmul_cand(reps, k + 1, id_col, vec_col)
-    else:
-        cand = _knn_crossjoin_cand(reps, id_col, vec_col)
+    corpus = _knn_corpus(reps, id_col, vec_col)
+    rows = fetch_if_small(corpus, matmul_max_corpus)
+    cand = (_knn_crossjoin_cand(reps, id_col, vec_col) if rows is None
+            else _knn_matmul_cand(corpus, rows, k + 1, id_col))
     u = as_double(F.col("__v"))
     selfcos = dot(u, u) / (F.sqrt(dot(u, u)) * F.sqrt(dot(u, u)))
     cand = cand.unionByName(
@@ -391,17 +395,20 @@ def _knn_graph_collapsed(vecs: DataFrame, k: int, id_col: str,
     return _finalize_knn(out, k)
 
 
-def _knn_matmul_cand(vecs: DataFrame, k: int, id_col: str,
-                     vec_col: str) -> DataFrame:
+def _knn_corpus(vecs: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id_col, v double array): the rows :func:`_knn_matmul_cand` scores."""
+    return vecs.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
+
+
+def _knn_matmul_cand(corpus: DataFrame, rows: list, k: int,
+                     id_col: str) -> DataFrame:
     """Broadcast-corpus exact kNN candidates (src_id, dst_id, cos_raw)
     down to the k-th raw cosine minus the margin: see
-    :func:`knn_graph`. The corpus (id, vector) ships once per
-    executor; candidate emission is n x (k + margin) rows, so no n²
-    relation ever materializes."""
+    :func:`knn_graph`. ``rows`` (``corpus`` collected by the caller)
+    ship once per executor; candidate emission is n x (k + margin)
+    rows, so no n² relation ever materializes."""
     import numpy as np
 
-    rows = (vecs.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
-            .collect())
     corpus_ids = np.array([r[0] for r in rows], dtype="int64")
     corpus_v = np.array([r.v for r in rows], dtype="float64")
     d = corpus_v.shape[1]
@@ -416,7 +423,7 @@ def _knn_matmul_cand(vecs: DataFrame, k: int, id_col: str,
 
     corpus_norm = _seq_norm(corpus_v)
     # ship the corpus ONCE per executor, not once per serialized task
-    bc = vecs.sparkSession.sparkContext.broadcast(
+    bc = corpus.sparkSession.sparkContext.broadcast(
         (corpus_ids, corpus_v, corpus_norm))
 
     def score(batches):
@@ -479,8 +486,8 @@ def _knn_matmul_cand(vecs: DataFrame, k: int, id_col: str,
                     "dst_id": pd.Series(corpus_ids[ci], dtype="int64"),
                     "cos_raw": pd.Series(exact, dtype="float64")})
 
-    return (vecs.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
-            .mapInPandas(score, "src_id long, dst_id long, cos_raw double"))
+    return corpus.mapInPandas(score,
+                              "src_id long, dst_id long, cos_raw double")
 
 
 def semantic_dedup(vecs: DataFrame, threshold: float, n_centroids: int = 16,
@@ -1002,8 +1009,7 @@ def ivfpq_topk(queries: DataFrame, corpus: DataFrame, k: int,
         d = np.array(r["v"], dtype="float64") @ carr.T
         order = sorted(range(len(cents)), key=lambda c: (-d[c], -(c + 1)))
         probe_rows += [(int(r["q"]), c + 1) for c in order[:n_probe]]
-    qcells = queries.sparkSession.createDataFrame(
-        probe_rows, "query_id long, cell int")
+    qcells = local_frame(probe_rows, "query_id long, cell int")
     # IVF restriction: each query scores only its probed cells' codes
     cand_rows = coded.join(F.broadcast(qcells), "cell")
 

@@ -23,6 +23,7 @@ import math
 from pyspark.sql import Column, functions as F
 
 from sanctions_data_pipeline_spark.functions.hof import let
+from sanctions_data_pipeline_spark.plans.helpers import local_frame
 
 _INF = 1.0e9  # cost of an out-of-vocab piece (never chosen if any path exists)
 
@@ -170,7 +171,7 @@ def segmented_words(words_df, word_col: str, model: dict[str, float],
             "*", viterbi_pieces(F.col(word_col), model).alias("__pieces"))
 
     spark = words_df.sparkSession
-    model_df = spark.createDataFrame(
+    model_df = local_frame(
         [(p, -math.log(v)) for p, v in sorted(model.items())],
         "piece string, cost double")
     w = F.col(word_col)
@@ -271,9 +272,9 @@ def em_piece_counts(words_df, word_col: str, count_col: str,
 
 
 def em_piece_counts_py(rows, model: dict[str, float]) -> dict[str, int]:
-    """Driver-side replay of :func:`em_piece_counts` over collected
-    ``(word, count)`` rows — the small-inventory switch (round 12, the
-    dd_cluster size-gate idiom). Identical counts by construction:
+    """Driver-side replay of :func:`em_piece_counts` over fetched
+    ``(word, count)`` rows — the small-inventory switch (a
+    ``helpers.fetch_if_small`` gate). Identical counts by construction:
     same lattice (:func:`_viterbi_costs_py`), and the counts are
     integer adds, which are order-free — the Arrow path's per-batch
     partials sum to exactly this."""

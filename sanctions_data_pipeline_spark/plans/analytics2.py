@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from sanctions_data_pipeline_spark.catalog import load_table, widen_small_scan
-from sanctions_data_pipeline_spark.plans.helpers import lcount, pround6
+from sanctions_data_pipeline_spark.plans.helpers import (
+    lcount, local_frame, pround6)
 from sanctions_data_pipeline_spark.plans.registry import register
 
 # Daily value series: x4 fixed-point sum of events.value per UTC day.
@@ -4170,7 +4171,7 @@ def q_holiday_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.dayofmonth("ts").cast("bigint").alias("dd"),
         (F.weekday("ts") + 1).cast("bigint").alias("dow"))
         .agg(lcount("x")))
-    hol = spark.createDataFrame(
+    hol = local_frame(
         [(1, 1, "new_year"), (7, 4, "july4"), (12, 25, "christmas")],
         "hm long, hd long, holiday string")
     tagged = daily.join(
@@ -5410,7 +5411,7 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
              .agg(lcount("x")))
     idx = daily.select(
         "x", (F.row_number().over(W.orderBy("i")) - 1).alias("r"))
-    ns = spark.createDataFrame([(n,) for n in _HURST_NS], "n long")
+    ns = local_frame([(n,) for n in _HURST_NS], "n long")
     blocks = (F.broadcast(ns).join(idx, F.lit(True))
               .groupBy("n", F.floor(F.col("r") / F.col("n")).cast("bigint")
                        .alias("blk"))
@@ -5988,7 +5989,7 @@ def q_top_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         spend, -F.col("x4"), [F.desc("x4"), F.asc("o_custkey")],
         rn="rk", count_total="n", sum_totals=[("x4", "tot4")],
         nulls="last")
-    p = spark.createDataFrame([(1,), (5,), (10,), (20,)], "pct long")
+    p = local_frame([(1,), (5,), (10,), (20,)], "pct long")
     j = F.broadcast(p).join(r, F.lit(True))
     thresh = F.ceil(F.col("n").cast("double") * F.col("pct") / 100.0)
     top4 = F.sum(F.when(F.col("rk") <= thresh, F.col("x4")).otherwise(0)) \

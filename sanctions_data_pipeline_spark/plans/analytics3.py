@@ -33,7 +33,8 @@ from sanctions_data_pipeline_spark.functions import names as nm
 from sanctions_data_pipeline_spark.operators import dedup as dd
 from sanctions_data_pipeline_spark.operators import textstats as tx
 from sanctions_data_pipeline_spark.plans.helpers import (
-    SQL_REVENUE, drate, dsum, dval, lcount, pround6, sql_dsum, sql_pround6,
+    SQL_REVENUE, drate, dsum, dval, lcount, local_frame, pround6, sql_dsum,
+    sql_pround6,
 )
 from sanctions_data_pipeline_spark.plans.registry import register
 
@@ -1036,8 +1037,8 @@ def tok_mincount_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = (docs.select(F.explode(tx.tokens(F.col("text"))).alias("tok"))
            .groupBy("tok").agg(lcount("c"))).persist()
     tot = cnt.agg(F.sum("c").cast("bigint").alias("n"))
-    thr = spark.createDataFrame([(t,) for t in _MINCOUNT_THRESHOLDS],
-                                "min_count bigint")
+    thr = local_frame([(t,) for t in _MINCOUNT_THRESHOLDS],
+                      "min_count bigint")
     return (cnt.crossJoin(F.broadcast(thr)).crossJoin(F.broadcast(tot))
             .groupBy("min_count", "n")
             .agg(F.sum(F.when(F.col("c") >= F.col("min_count"), 1)
@@ -1643,7 +1644,7 @@ def q_watermark_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").over(W.rowsBetween(W.unboundedPreceding,
                                       W.unboundedFollowing))
         .cast("bigint").alias("tot"))
-    t = spark.createDataFrame([(x,) for x in _WM_TARGETS], "target double")
+    t = local_frame([(x,) for x in _WM_TARGETS], "target double")
     share = F.col("cum").cast("double") / F.col("tot")
     return (c.crossJoin(F.broadcast(t))
             .groupBy(F.round("target", 6).alias("target"))

@@ -1,15 +1,16 @@
-"""Cross-engine determinism helpers.
+"""Cross-engine determinism helpers, and the two driver round trips.
 
 Double-typed aggregates computed naively (``SUM(double)``) depend on
 partition/accumulation order, so a Spark result and a DuckDB oracle can
 differ in the last bits and fail a value-hash compare. All money/metric
 aggregations here go through decimal (exact, order-independent) and are
 cast to double only at the output edge — bit-identical on both engines.
+Driver round trips: :func:`fetch_if_small` down, :func:`local_frame` up.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 # Canonical decimal shapes: values (prices, quantities) are < 10^12 with
 # 2-4 meaningful decimals; rates (discount/tax) are < 1 with 4 decimals.
@@ -357,3 +358,39 @@ def reap_stale_scratch(spark) -> None:
     for sf in sf_dirs:
         if sf.is_dir():
             _reap_dir(sf.path)
+
+
+# Rows a size gate may bring to the driver (~100k short rows: edges,
+# symbol arrays, words); larger inputs take the distributed path.
+DRIVER_MAX_ROWS = 100_000
+
+
+def fetch_if_small(df: DataFrame, n: int | None = None) -> list | None:
+    """``df``'s rows if it has at most ``n`` (default DRIVER_MAX_ROWS,
+    read at call time), else None: one ``limit(n + 1)`` fetch where a
+    count then a collect ran the frame twice. A caller whose other path
+    re-reads ``df`` persists it first."""
+    n = DRIVER_MAX_ROWS if n is None else n
+    rows = df.limit(n + 1).collect()
+    return rows if len(rows) <= n else None
+
+
+def local_frame(rows, schema) -> DataFrame:
+    """Driver rows as a DataFrame over an Arrow table typed by
+    ``schema`` (DDL string or StructType): a ``LocalRelation`` that
+    builds without a job, where a list is parallelized into an RDD that
+    Python workers must scan. Rows pass the list path's type verifier
+    first, since pyarrow would truncate a float given for an int."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType, _make_type_verifier
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    rows = list(rows)
+    verify = _make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    table = pa.Table.from_struct_array(
+        pa.array(rows, type=pa.struct(to_arrow_schema(schema))))
+    return SparkSession.active().createDataFrame(table, schema)

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from sanctions_data_pipeline_spark.catalog import load_table
 from sanctions_data_pipeline_spark.plans.helpers import (
-    _as_exact_double, drate, dsum, dval, lcount, sql_dsum, ts_str,
+    _as_exact_double, drate, dsum, dval, lcount, local_frame, sql_dsum, ts_str,
 )
 from sanctions_data_pipeline_spark.plans.registry import register
 
@@ -1189,7 +1189,7 @@ def q_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
     # anchor on the full language list so a language with zero docs
     # still yields its (NULL-valued) column — schema parity with the
     # oracle's fixed column set on any corpus slice
-    langs = spark.createDataFrame([(l,) for l in _LANGS], "lang string")
+    langs = local_frame([(l,) for l in _LANGS], "lang string")
     g = langs.join(agg, "lang", "left").orderBy("lang")
     return g.transpose()
 

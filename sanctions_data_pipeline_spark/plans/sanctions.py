@@ -23,6 +23,7 @@ from sanctions_data_pipeline_spark.functions.dates import reformat_dob, sql_refo
 from sanctions_data_pipeline_spark.operators.matching import (
     build_variant_mapping, neighbor_fill, variant_match,
 )
+from sanctions_data_pipeline_spark.plans.helpers import local_frame
 from sanctions_data_pipeline_spark.plans.registry import register
 
 
@@ -338,8 +339,8 @@ def pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sanctions_data_pipeline_spark.pipeline import run_pipeline
 
     with open(_fixture_path("travel_ban.txt"), encoding="utf-8") as fh:
-        texts = spark.createDataFrame([("travel_ban.pdf", fh.read())],
-                                      "doc_path string, text string")
+        texts = local_frame([("travel_ban.pdf", fh.read())],
+                            "doc_path string, text string")
     return run_pipeline(spark, _fixture_path("feed.xml"), texts)
 
 
@@ -930,9 +931,7 @@ def st_watchlist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         # drain fully into the memory sink, then localize the result so
         # nothing references the feed dir before it is removed
         out = run_available_now(hits, output_mode="append").distinct()
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema) if rows \
-            else spark.createDataFrame([], out.schema)
+        return local_frame(out.collect(), out.schema)
     finally:
         shutil.rmtree(feed_dir, ignore_errors=True)
 
@@ -1019,8 +1018,7 @@ def s_phonetic_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
           .filter(F.length("wl_name") > 0)
           .filter(F.col("wl_name").rlike("^[A-Z]"))   # codeable names only
           .withColumn("code", F.soundex(F.col("wl_name"))))
-    probes = (spark.createDataFrame([(p,) for p in _PHONETIC_PROBES],
-                                    "probe string")
+    probes = (local_frame([(p,) for p in _PHONETIC_PROBES], "probe string")
               .withColumn("code", F.soundex(F.upper(F.col("probe")))))
     return (wl.join(F.broadcast(probes), "code")
             .select("probe", "code", "entity_id", "alias_idx", "wl_name"))

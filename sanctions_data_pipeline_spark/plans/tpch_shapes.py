@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sanctions_data_pipeline_spark.catalog import load_table
 from sanctions_data_pipeline_spark.plans.helpers import (
-    SQL_REVENUE, _as_exact_double, dsum, dval, drate, lcount, sql_dsum, ts_str,
+    SQL_REVENUE, _as_exact_double, dsum, dval, drate, lcount, local_frame,
+    sql_dsum, ts_str,
 )
 from sanctions_data_pipeline_spark.plans.registry import register
 
@@ -419,7 +420,7 @@ def q_nullsafe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         F.nullif(F.col("o_orderstatus"), F.lit("P")).alias("status_key"),
         "o_orderkey")
-    dim = F.broadcast(orders.sparkSession.createDataFrame(
+    dim = F.broadcast(local_frame(
         [("O", "open"), ("F", "finished"), (None, "pending")],
         "status_key string, status_name string"))
     return (orders.join(dim, orders.status_key.eqNullSafe(dim.status_key))

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from sanctions_data_pipeline_spark.catalog import load_table
 from sanctions_data_pipeline_spark.plans.helpers import (
-    SQL_REVENUE, _as_exact_double, dsum, dval, lcount, sql_dsum,
+    SQL_REVENUE, _as_exact_double, dsum, dval, lcount, local_frame, sql_dsum,
 )
 from sanctions_data_pipeline_spark.plans.registry import register
 
@@ -362,9 +362,8 @@ def q_null_skew_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         F.nullif(F.col("o_orderstatus"), F.lit("O")).alias("status_key"),
         "o_totalprice")
-    dim = F.broadcast(orders.sparkSession.createDataFrame(
-        [("F", "finished"), ("P", "pending")],
-        "status_key string, status_name string"))
+    dim = F.broadcast(local_frame([("F", "finished"), ("P", "pending")],
+                                  "status_key string, status_name string"))
     matchable = (orders.filter(F.col("status_key").isNotNull())
                  .join(dim, "status_key", "left")
                  .select("status_name", "o_totalprice"))

@@ -14,7 +14,7 @@ from sanctions_data_pipeline_spark.catalog import load_table
 from sanctions_data_pipeline_spark.operators import dedup as dd
 from sanctions_data_pipeline_spark.operators import similarity as sim
 from sanctions_data_pipeline_spark.operators import textstats as tx
-from sanctions_data_pipeline_spark.plans.helpers import lcount
+from sanctions_data_pipeline_spark.plans.helpers import lcount, local_frame
 from sanctions_data_pipeline_spark.plans.registry import register
 
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -489,7 +489,7 @@ WHERE {_MIX_U} < w.rate
 """)
 def mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    weights = spark.createDataFrame(_MIX_WEIGHTS, "source string, rate double")
+    weights = local_frame(_MIX_WEIGHTS, "source string, rate double")
     u = (F.conv(F.substring(F.md5(F.concat(F.lit("mix:"),
                                            F.col("doc_id").cast("string"))),
                             1, 8), 16, 10)
@@ -924,7 +924,7 @@ def emb_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = ("component bigint, nonneg boolean, nonincreasing boolean,"
               " ratio_ok boolean, trace_q double, trace_ok boolean")
     if not len(pdf):
-        return spark.createDataFrame([], schema)
+        return local_frame([], schema)
     # exact cross-engine trace of the quantized covariance: one global
     # integer numerator over (dim)-keyed moments, one identical IEEE
     # division tree (see oracle note)
@@ -953,7 +953,7 @@ def emb_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
             (abs(total - trace_q) <= 1e-2 * max(1.0, trace_q)
              if ratios[0] > 0 else trace_q <= 1e-9),
         ))
-    return spark.createDataFrame(rows, schema)
+    return local_frame(rows, schema)
 
 
 def emb_pca_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1552,7 +1552,7 @@ def ml_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     finite = all(math.isfinite(x) for x in w)
     learned = loss < math.log(2.0) - 1e-3
     n_obs = docs.count()
-    return spark.createDataFrame(
+    return local_frame(
         [(i, n_obs, finite, learned) for i in range(len(w))],
         "pos int, n_obs bigint, weight_finite_ok boolean, "
         "loss_below_null_ok boolean")
@@ -1570,7 +1570,7 @@ def ml_logreg_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(tx.tokens(F.col("text"))).cast("double").alias("f_tokens"))
     w = logreg_fit(feats, "is_en", ["f_chars", "f_tokens"],
                    n_iters=25, lr=0.5)
-    return spark.createDataFrame(
+    return local_frame(
         [(i, round(float(x), 6)) for i, x in enumerate(w)],
         "pos int, weight double")
 
@@ -1783,8 +1783,7 @@ FROM h GROUP BY text_hash
 """)
 def mix_dedup_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    prio = F.broadcast(docs.sparkSession.createDataFrame(
-        _SRC_PRIO, "source string, prio int"))
+    prio = F.broadcast(local_frame(_SRC_PRIO, "source string, prio int"))
     h = docs.join(prio, "source").select(
         F.md5(dd.normalized_text(F.col("text"))).alias("text_hash"),
         F.concat(F.lpad(F.col("prio").cast("string"), 2, "0"), F.lit(":"),
@@ -1819,8 +1818,7 @@ FROM tok t JOIN w ON t.source = w.source
 """)
 def mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    weights = F.broadcast(docs.sparkSession.createDataFrame(
-        _EPOCH_W, "source string, weight int"))
+    weights = F.broadcast(local_frame(_EPOCH_W, "source string, weight int"))
     tok = (docs.groupBy("source")
            .agg(F.sum(F.size(tx.tokens(F.col("text")))).cast("bigint")
                  .alias("n_tokens")))
@@ -2847,8 +2845,7 @@ SELECT b, r, round(s, 2) AS s,
 FROM params, sims
 """)
 def dd_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    params = spark.createDataFrame([(4, 8), (8, 4), (16, 2), (32, 1)],
-                                   "b int, r int")
+    params = local_frame([(4, 8), (8, 4), (16, 2), (32, 1)], "b int, r int")
     sims = spark.range(1, 20).select((F.col("id") * 0.05).alias("s"))
     return (params.crossJoin(sims)
             .select("b", "r", F.round("s", 2).alias("s"),
@@ -2939,8 +2936,7 @@ LATERAL unnest(range(1, epochs + 1)) AS e(i)
 """)
 def mix_epoch_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    weights = F.broadcast(docs.sparkSession.createDataFrame(
-        _EPOCH_W, "source string, weight int"))
+    weights = F.broadcast(local_frame(_EPOCH_W, "source string, weight int"))
     tok = (docs.groupBy("source")
            .agg(F.sum(F.size(tx.tokens(F.col("text")))).cast("bigint")
                  .alias("n_tokens")))
@@ -2980,8 +2976,8 @@ def dd_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # duplicate-mass tier spent 59.5 s expanding pairs into a count
     vecs = load_table(spark, sf_dir, "embeddings")
     pairs = sim.cosine_pair_counts(vecs, ["label"], threshold=-1.0)
-    thr = spark.createDataFrame([(t,) for t in (0.5, 0.6, 0.7, 0.8, 0.9)],
-                                "thr double")
+    thr = local_frame([(t,) for t in (0.5, 0.6, 0.7, 0.8, 0.9)],
+                      "thr double")
     return (pairs.crossJoin(F.broadcast(thr))
             .groupBy(F.round("thr", 2).alias("threshold"))
             .agg(F.sum(F.when(F.col("cos") >= F.col("thr"), F.col("w"))

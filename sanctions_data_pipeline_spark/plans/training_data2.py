@@ -14,7 +14,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from sanctions_data_pipeline_spark.catalog import load_table, widen_small_scan
 from sanctions_data_pipeline_spark.operators import similarity as sim
 from sanctions_data_pipeline_spark.operators import textstats as tx
-from sanctions_data_pipeline_spark.plans.helpers import lcount, pround6
+from sanctions_data_pipeline_spark.plans.helpers import (
+    fetch_if_small, lcount, local_frame, pround6)
 from sanctions_data_pipeline_spark.plans.registry import register
 
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -101,9 +102,8 @@ def tx_perplexity(spark: SparkSession, sf_dir: str,
     # F.array(*literals)/array_contains probe was O(V) per token with
     # an expression tree that grew with V (a cliff at CCNet-scale
     # V≈50k; this shape is flat from V=40 to V=50k).
-    vocab_list = [r.tok for r in vocab.collect()]
-    vocab_df = spark.createDataFrame([(t,) for t in vocab_list] or [(None,)],
-                                     "tok string").filter(F.col("tok").isNotNull())
+    vocab_rows = vocab.collect()
+    vocab_df = local_frame(vocab_rows, "tok string")
 
     bg0 = (toks.select("doc_id",
                        F.explode(tx.adjacent_pairs(F.col("t"))).alias("b"))
@@ -133,7 +133,7 @@ def tx_perplexity(spark: SparkSession, sf_dir: str,
     c2 = bg.groupBy("w1", "w2").agg(lcount("c12")).persist()
     c2.count()
     c1 = c2.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    v = F.lit(len(vocab_list) + 1)  # +1 for <unk>
+    v = F.lit(len(vocab_rows) + 1)  # +1 for <unk>
 
     scored = (bg.join(F.broadcast(c2), ["w1", "w2"])
               .join(F.broadcast(c1), "w1")
@@ -519,12 +519,10 @@ def mix_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                .agg(lcount("c")).collect()}
     n_t = sum(c for (t, _), c in lm.items() if t)
     n_r = sum(c for (t, _), c in lm.items() if not t)
-    tgt = spark.createDataFrame(
-        [(b, c) for (t, b), c in lm.items() if t] or [(0, 0)],
-        "b bigint, tc bigint")
-    raw = spark.createDataFrame(
-        [(b, c) for (t, b), c in lm.items() if not t] or [(0, 0)],
-        "b bigint, rc bigint")
+    tgt = local_frame([(b, c) for (t, b), c in lm.items() if t],
+                      "b bigint, tc bigint")
+    raw = local_frame([(b, c) for (t, b), c in lm.items() if not t],
+                      "b bigint, rc bigint")
 
     lw = (F.log((F.coalesce(F.col("tc"), F.lit(0)) + 1.0)
                 / F.lit(float(n_t + _DSIR_B)))
@@ -745,22 +743,20 @@ SELECT * FROM (
 """)
 
 
-# SMALL-VOCAB SWITCH for the BPE trainers (round 12; the dd_cluster /
-# connected_components CBO idiom — decide the plan from a cheap
-# statistic). The distributed merge loop pays ~2 fixed-cost Spark jobs
-# per round (pair-count argmax + eager re-segmentation) no matter how
-# tiny the vocabulary; a vocab that fits the driver comfortably
-# (<= 100k rows of short symbol arrays, the same ~100k bound as the
-# union-find edge gate) trains all R rounds in one collect + pure
-# python — EXACTLY the replay tests/test_training_ext2.py already pins
-# the distributed loop against, so both paths are output-identical by
-# the same pin. A web-scale vocabulary (~10^7 distinct words) routes
-# to the unchanged distributed loop by construction.
-_BPE_DRIVER_MAX_VOCAB = 100_000
+# SMALL-VOCAB SWITCH for the BPE trainers. The distributed merge loop
+# pays ~2 fixed-cost Spark jobs per round (pair-count argmax + eager
+# re-segmentation) no matter how tiny the vocabulary; a vocab that
+# helpers.fetch_if_small brings to the driver (the shared
+# DRIVER_MAX_ROWS bound, as for the union-find edge gate) trains all R
+# rounds in pure python off that one fetch — EXACTLY the replay
+# tests/test_training_ext2.py already pins the distributed loop
+# against, so both paths are output-identical by the same pin. A
+# web-scale vocabulary (~10^7 distinct words) routes to the unchanged
+# distributed loop by construction.
 
 
 def _bpe_train_py(rows, rounds: int):
-    """Pure-python BPE trainer over [(symbols tuple, count)] rows —
+    """Pure-python BPE trainer over (symbols, count) rows —
     the pinned-replay algorithm verbatim. Returns (merges, final_segs)
     where merges = [(rank, a, b, count)] and final_segs maps each
     INPUT row index to its round-R segmentation (greedy left-to-right
@@ -801,13 +797,11 @@ def tok_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                               F.array(F.lit("</w>"))).alias("s"),
                      "cnt")
              .persist())
-    n_vocab = words.count()
-
-    if n_vocab <= _BPE_DRIVER_MAX_VOCAB:
-        rows = [(tuple(r.s), int(r.cnt)) for r in words.collect()]
+    rows = fetch_if_small(words)
+    if rows is not None:
         words.unpersist()
         merges, _ = _bpe_train_py(rows, _BPE_ROUNDS)
-        return spark.createDataFrame(
+        return local_frame(
             merges,
             "merge_rank int, left string, right string, pair_count bigint")
 
@@ -843,7 +837,7 @@ def tok_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         words.unpersist()
         words = nxt
     words.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
         merges, "merge_rank int, left string, right string, pair_count bigint")
 
 
@@ -902,16 +896,13 @@ def tok_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                               F.array(F.lit("</w>"))).alias("s"),
                      "cnt")
              .persist())
-    n_vocab = vocab.count()
-
-    if n_vocab <= _BPE_DRIVER_MAX_VOCAB:
-        # small-vocab switch: train + encode in one collect (the
-        # pinned python replay verbatim; see _BPE_DRIVER_MAX_VOCAB)
-        rows = vocab.collect()
+    rows = fetch_if_small(vocab)
+    if rows is not None:
+        # small-vocab switch: train + encode off one fetch (the pinned
+        # python replay verbatim; see the SMALL-VOCAB SWITCH note)
         vocab.unpersist()
-        _, segs = _bpe_train_py(
-            [(tuple(r.s), int(r.cnt)) for r in rows], _BPE_ROUNDS)
-        enc = spark.createDataFrame(
+        _, segs = _bpe_train_py([(r.s, r.cnt) for r in rows], _BPE_ROUNDS)
+        enc = local_frame(
             [(r.w, len(r.s), len(seg)) for r, seg in zip(rows, segs)],
             "w string, n_raw int, n_enc int")
     else:

@@ -17,7 +17,7 @@ from sanctions_data_pipeline_spark.catalog import load_table, widen_small_scan
 from sanctions_data_pipeline_spark.operators import similarity as sim
 from sanctions_data_pipeline_spark.operators import textstats as tx
 from sanctions_data_pipeline_spark.plans.helpers import (
-    lcount, pround6, sql_pround6,
+    fetch_if_small, lcount, local_frame, pround6, sql_pround6,
 )
 from sanctions_data_pipeline_spark.plans.registry import register
 
@@ -354,7 +354,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str, k: int = 10,
         import math
         rows.append((len(selected), best[1][0],
                      math.floor(best[2] * 1e6 + 0.5) / 1e6))
-    return spark.createDataFrame(rows, "rank int, vec_id bigint, mmr double")
+    return local_frame(rows, "rank int, vec_id bigint, mmr double")
 
 
 # ---------------------------------------------------------------------------
@@ -640,10 +640,10 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     tcached.unpersist()
     tf = postings(t)  # scoring pass: re-derives from the (uncached) scan
     if not n_docs or not qrows:   # empty corpus: no postings, no terms
-        return spark.createDataFrame(
+        return local_frame(
             [], "term string, doc_id long, tf bigint, dl bigint, bm25 double")
     avgdl = float(sum_dl) / float(n_docs)  # one IEEE division of exact ints
-    qterms = spark.createDataFrame(qrows, "term string, df bigint")
+    qterms = local_frame(qrows, "term string, df bigint")
     return (tf.join(F.broadcast(qterms), "term")
             .withColumn("n_docs", F.lit(int(n_docs)).cast("bigint"))
             .withColumn("avgdl", F.lit(avgdl))
@@ -998,8 +998,7 @@ def emb_whiten_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = cov.shape[0]
     rows = [(i, round(float(cov[i, i]), 6), round(float(cov_after[i, i]), 6))
             for i in range(d)]
-    return spark.createDataFrame(
-        rows, "dim int, var_before double, var_after double")
+    return local_frame(rows, "dim int, var_before double, var_after double")
 
 
 # ---------------------------------------------------------------------------
@@ -1288,19 +1287,19 @@ def _unigram_seed_and_words(spark: SparkSession, sf_dir: str):
     return words, seed
 
 
-# SMALL-INVENTORY SWITCH for the unigram trainer (round 12; the
-# dd_cluster / BPE size-gate idiom): a distinct-word inventory that
-# fits the driver comfortably runs the whole EM + optimality check off
-# ONE collect with the SAME pinned python lattice the Arrow path runs
-# per batch — identical counts/booleans by construction (integer adds
-# and AND are order-free; the double folds are per-word). A web-scale
-# inventory routes to the Arrow path by construction.
-_UNI_DRIVER_MAX_WORDS = 100_000
+# SMALL-INVENTORY SWITCH for the unigram trainer: a distinct-word
+# inventory that helpers.fetch_if_small brings to the driver (the
+# shared DRIVER_MAX_ROWS bound, as for dd_cluster and BPE) runs the
+# whole EM + optimality check off that one fetch with the SAME pinned
+# python lattice the Arrow path runs per batch — identical
+# counts/booleans by construction (integer adds and AND are
+# order-free; the double folds are per-word). A web-scale inventory
+# routes to the Arrow path by construction.
 
 
 def _unigram_em(words: DataFrame, seed: dict[str, int], rows=None):
     """The Viterbi-EM loop: (final model, final E-step use counts).
-    ``rows`` = collected (word, count) pairs for the small-inventory
+    ``rows`` = fetched (word, count) rows for the small-inventory
     driver path; None = the distributed Arrow path."""
     from sanctions_data_pipeline_spark.operators import unigram as ug
 
@@ -1318,8 +1317,8 @@ def _unigram_em(words: DataFrame, seed: dict[str, int], rows=None):
         # segmentations (the replay is the JVM form's test oracle), no
         # giant HOF expression tree for Catalyst to re-analyze per
         # round (guide §4; the round-12 tok_unigram_lm fix) — or, when
-        # the inventory fit one collect, the same replay driver-side
-        # (zero Spark jobs per round)
+        # fetch_if_small brought the inventory down, the same replay
+        # driver-side (zero Spark jobs per round)
         if rows is not None:
             vc = ug.em_piece_counts_py(rows, model)
         else:
@@ -1344,8 +1343,7 @@ def tok_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sanctions_data_pipeline_spark.operators import unigram as ug
 
     words, seed = _unigram_seed_and_words(spark, sf_dir)
-    rows = ([(r.w, int(r.c)) for r in words.collect()]
-            if words.count() <= _UNI_DRIVER_MAX_WORDS else None)
+    rows = fetch_if_small(words)
     model, vc = _unigram_em(words, seed, rows)
 
     prob_norm_ok = abs(sum(model.values()) - 1.0) <= 1e-9
@@ -1370,7 +1368,7 @@ def tok_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
              bool((p in model) == (len(p) == 1 or vc.get(p, 0) > 0)),
              bool(prob_norm_ok), vit_ok)
             for p, c in sorted(seed.items())]
-    return spark.createDataFrame(
+    return local_frame(
         rows, "piece string, piece_len int, seed_cnt bigint, "
               "in_model_consistent_ok boolean, "
               "prob_normalized_ok boolean, viterbi_optimal_ok boolean")
@@ -1380,9 +1378,7 @@ def tok_unigram_lm_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact (rank, piece, piece_len, n_uses, prob) rows — the pytest
     value-pin surface (the pre-round-11 registered output)."""
     words, seed = _unigram_seed_and_words(spark, sf_dir)
-    rows = ([(r.w, int(r.c)) for r in words.collect()]
-            if words.count() <= _UNI_DRIVER_MAX_WORDS else None)
-    model, vc = _unigram_em(words, seed, rows)
+    model, vc = _unigram_em(words, seed, fetch_if_small(words))
     words.unpersist()
 
     rows = sorted(((p, len(p), vc.get(p, 0), round(model[p], 6))
@@ -1390,7 +1386,7 @@ def tok_unigram_lm_full(spark: SparkSession, sf_dir: str) -> DataFrame:
                   key=lambda r: (-r[2], r[0]))
     out = [(i + 1, p, ln, c, pr)
            for i, (p, ln, c, pr) in enumerate(rows)]
-    return spark.createDataFrame(
+    return local_frame(
         out, "rank int, piece string, piece_len int, n_uses bigint, "
              "prob double")
 
@@ -1455,7 +1451,7 @@ def gr_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache, so the candidate pipeline runs once (dd_cluster lesson)
     if n_edges == 0:  # graph vanishes at some SFs (w>=3 co-occurrence)
         edges.unpersist()
-        return spark.createDataFrame(
+        return local_frame(
             [], "node long, authority double, hub double, d_in bigint")
 
     def fold(col):
@@ -1496,7 +1492,7 @@ def gr_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = out.collect()
     for c in (edges, ind, h1r, h1, a2r):
         c.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
         rows, "node long, authority double, hub double, d_in bigint")
 
 
@@ -1988,7 +1984,7 @@ WHERE {_CCS_U} < r.rate
 @register("mix_ccnet_sampling", oracle=_CCS_ORACLE)
 def mix_ccnet_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = tx_ccnet_buckets(spark, sf_dir).select("doc_id", "bucket", "ppl")
-    rates = spark.createDataFrame(list(_CCS_RATES), "bucket string, rate double")
+    rates = local_frame(list(_CCS_RATES), "bucket string, rate double")
     u = (F.conv(F.substring(F.md5(F.concat(F.lit("ccnet:"),
                                            F.col("doc_id").cast("string"))),
                             1, 8), 16, 10)
@@ -2071,7 +2067,7 @@ def gr_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("d").cast("bigint").alias("core_degree")))
     rows = out.collect()   # bounded by the filtered part domain (<100)
     edges.unpersist()
-    return spark.createDataFrame(rows, "node long, core_degree bigint")
+    return local_frame(rows, "node long, core_degree bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -2553,7 +2549,7 @@ def emb_procrustes_align(spark: SparkSession, sf_dir: str) -> DataFrame:
              bool(abs(float(w[i, i])) <= 1.0 + 1e-9),
              improved)
             for i in range(_PROC_D)]
-    return spark.createDataFrame(
+    return local_frame(
         rows, "dim int, n_vectors bigint, col_norm_ok boolean, "
               "w_diag_bounded_ok boolean, total_resid_improved_ok boolean")
 
@@ -2568,7 +2564,7 @@ def emb_procrustes_align_full(spark: SparkSession, sf_dir: str) -> DataFrame:
              round(float(np.sqrt(ra[i] / n_total)), 6),
              round(float(w[i, i]), 6))
             for i in range(_PROC_D)]
-    return spark.createDataFrame(
+    return local_frame(
         rows, "dim int, rmse_before double, rmse_aligned double, "
               "w_diag double")
 
@@ -3160,7 +3156,7 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
                            6).alias("lift")))
     rows = out.collect()   # bounded: pairs over the filtered part domain
     co.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
         rows, "ante long, cons long, s_ab bigint, support double, "
               "confidence double, lift double")
 
@@ -3376,7 +3372,7 @@ def gr_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
                            .otherwise(0.0), 6).alias("lcc")))
     rows = out.collect()   # bounded by the part domain in the filter
     e0.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
         rows, "node long, d bigint, n_triangles bigint, lcc double")
 
 
@@ -3822,7 +3818,7 @@ def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     _HOLT_SCHEMA = ("day string, n_events bigint, level double, "
                     "trend double, forecast double, is_future boolean")
     if not days:              # empty events table -> empty result, same schema
-        return spark.createDataFrame([], _HOLT_SCHEMA)
+        return local_frame([], _HOLT_SCHEMA)
     a, g = _HOLT_ALPHA, _HOLT_GAMMA
     xs = [int(r["n"]) for r in days]
     level, trend = float(xs[0]), float(xs[1] - xs[0]) if len(xs) > 1 else 0.0
@@ -3837,7 +3833,7 @@ def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     for hstep in range(1, _HOLT_HORIZON + 1):
         rows.append(((last + dt.timedelta(days=hstep)).isoformat(),
                      None, None, None, level + hstep * trend, True))
-    raw = spark.createDataFrame(rows, _HOLT_SCHEMA)
+    raw = local_frame(rows, _HOLT_SCHEMA)
     # round ENGINE-side (F.round): python round() is half-even and can
     # diverge from DuckDB's round at exact 6dp .5 ties
     return raw.select(
@@ -3891,7 +3887,7 @@ def emb_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
              bool(0.0 < r.isotropy_before <= 1.0
                   and 0.0 < r.isotropy_after <= 1.0),
              bool(0.0 < r.top_eig_share <= 1.0))]
-    return spark.createDataFrame(
+    return local_frame(
         rows, "n_vectors bigint, top_d int, abtt_improved_ok boolean, "
               "ratios_valid_ok boolean, eig_share_valid_ok boolean")
 
@@ -3930,7 +3926,7 @@ def emb_isotropy_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     after = float(keep.min() / keep.max())
     rows = [(int(n), _ISO_TOP_D, round(before, 6), round(after, 6),
              round(float(lam[-1] / max(lam.sum(), 1e-12)), 6))]
-    return spark.createDataFrame(
+    return local_frame(
         rows, "n_vectors bigint, top_d int, isotropy_before double, "
               "isotropy_after double, top_eig_share double")
 
@@ -4175,7 +4171,7 @@ def tok_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         # mirror the oracle's WHERE n_words > 0: a corpus with docs
         # but zero tokens emits no rows (ADVICE round 9 — the n_words
         # division below must never see 0)
-        return spark.createDataFrame([], schema)
+        return local_frame([], schema)
     n_words = int(full["whitespace"][0])
     n_ch = int(full["character"][0])          # chars + </w> markers
     bpe, uni = int(full["bpe"][0]), int(full["unigram_lm"][0])
@@ -4186,7 +4182,7 @@ def tok_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("bpe", None, None, n_words <= bpe <= n_ch),
         ("unigram_lm", None, None, n_words <= uni <= n_ch),
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(rows, schema)
 
 
 def tok_fertility_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4205,7 +4201,7 @@ def tok_fertility_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     _FERT_SCHEMA = "tokenizer string, n_symbols bigint, fertility double"
     if totals[0] is None:     # empty corpus -> empty result, same schema
         words.unpersist()
-        return spark.createDataFrame([], _FERT_SCHEMA)
+        return local_frame([], _FERT_SCHEMA)
     n_words, n_chars = int(totals[0]), int(totals[1])
 
     # BPE: corpus totals from the encode op's per-doc accounting
@@ -4230,7 +4226,7 @@ def tok_fertility_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("bpe", int(bpe), round(int(bpe) / n_words, 6)),
         ("unigram_lm", int(uni), round(int(uni) / n_words, 6)),
     ]
-    return spark.createDataFrame(rows, _FERT_SCHEMA)
+    return local_frame(rows, _FERT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -4267,7 +4263,7 @@ def q_weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot, nd = daily.agg(F.sum("n").cast("bigint"),
                         F.count(F.lit(1)).cast("bigint")).collect()[0]
     if tot is None:           # empty events table -> empty result, same schema
-        return spark.createDataFrame(
+        return local_frame(
             [], "dow bigint, n_days bigint, n_events bigint, "
                 "mean_daily double, seasonal_index double")
     grand = F.lit(float(tot)) / F.lit(int(nd))   # exact ints -> one div

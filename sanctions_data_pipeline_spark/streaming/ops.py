@@ -31,7 +31,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sanctions_data_pipeline_spark.plans.helpers import (
-    _as_exact_double, dsum, dval, lcount,
+    _as_exact_double, dsum, dval, lcount, local_frame,
 )
 
 
@@ -349,7 +349,7 @@ def _run_available_now_file_drain(sdf: DataFrame, output_mode: str,
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     if not os.path.isdir(out):  # zero batches ran (empty source)
-        return spark.createDataFrame([], sdf.schema)
+        return local_frame([], sdf.schema)
     return spark.read.parquet(out)
 
 

@@ -56,3 +56,21 @@ def test_statestore_reader_exposes_streaming_state(spark, sf_dir):
     # state rows carry their shuffle partition — the physical layout a
     # repair job would repartition by
     assert state.select("partition_id").distinct().count() >= 1
+
+
+def test_final_plan_explains_the_executed_plan(spark):
+    """tools/dump_plans.final_plan runs the DataFrame's own
+    QueryExecution before explaining it, so the printed adaptive plan
+    is the final one — what a noop write or ``df.count()`` (each another
+    Dataset) never gives."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools"))
+    from dump_plans import final_plan
+
+    df = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    plan = final_plan(df)
+    assert "isFinalPlan=true" in plan
+    assert "== Final Plan ==" in plan

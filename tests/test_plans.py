@@ -777,3 +777,161 @@ def test_subtree_lint_expectation_is_curated(spark, sf_dir):
             f"{name}: documented leave-alone no longer flags — "
             "update the rationale in OPTIMIZATION_r12.md")
         spark.catalog.clearCache()
+
+
+def test_fetch_if_small_bounds_and_jobs(spark, monkeypatch):
+    """One ``limit(n + 1)`` fetch answers the size gate: rows at n - 1
+    and n, None at n + 1, [] on an empty frame, the default bound read
+    at call time; on a persisted aggregate it runs fewer jobs than the
+    count-then-collect it replaces."""
+    from pyspark.sql import functions as F
+
+    from sanctions_data_pipeline_spark.plans import helpers
+    from sanctions_data_pipeline_spark.plans.helpers import fetch_if_small
+
+    n = 5
+    for size, want in ((n - 1, n - 1), (n, n), (n + 1, None)):
+        got = fetch_if_small(spark.range(size), n)
+        assert (None if got is None else len(got)) == want, size
+    assert sorted(r.id for r in fetch_if_small(spark.range(n), n)) \
+        == list(range(n))
+    assert fetch_if_small(spark.range(0), n) == []
+    monkeypatch.setattr(helpers, "DRIVER_MAX_ROWS", 2)
+    assert fetch_if_small(spark.range(3)) is None
+    assert len(fetch_if_small(spark.range(2))) == 2
+
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        agg = (spark.range(30_000)
+               .groupBy((F.col("id") % 3000).alias("k")).count().persist())
+        sc.setJobGroup(group, group)
+        try:
+            fn(agg)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            agg.unpersist()
+
+    gate = jobs("gate-count-collect",
+                lambda df: df.collect() if df.count() <= 100_000 else None)
+    fetch = jobs("gate-fetch", lambda df: fetch_if_small(df, 100_000))
+    assert fetch < gate, (fetch, gate)
+
+
+def test_local_frame_types_nulls_and_plan(spark):
+    """local_frame keeps each column's type and its NULLs, takes empty
+    rows, Row inputs, DDL strings and StructTypes, plans a LocalRelation
+    without starting a job, and rejects a float for an int column as
+    the list path's verifySchema does."""
+    from pyspark.sql import Row
+    from pyspark.sql.types import DataType
+
+    from sanctions_data_pipeline_spark.plans.helpers import local_frame
+
+    ddl = "i int, b bigint, f boolean, d double, a array<string>"
+    rows = [(1, None, True, None, ["x", None]),
+            (None, 2, None, 1.5, None)]
+    sc = spark.sparkContext
+    sc.setJobGroup("local-frame-build", "build only")
+    try:
+        df = local_frame(rows, ddl)
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "local-frame-build")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert df.schema == DataType.fromDDL(ddl)
+    assert [tuple(r) for r in df.collect()] == rows
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LocalRelation", plan.toString()
+
+    empty = local_frame([], ddl)
+    assert empty.schema == DataType.fromDDL(ddl) and empty.collect() == []
+    same = local_frame([Row(k=1, v="x"), Row(k=2, v=None)],
+                       DataType.fromDDL("k long, v string"))
+    assert [tuple(r) for r in same.collect()] == [(1, "x"), (2, None)]
+    with pytest.raises(TypeError):
+        local_frame([(1.0,)], "i int")
+    with pytest.raises(TypeError):
+        local_frame([(1.5,)], "i bigint")
+
+
+def _package_calls(attr: str):
+    """(module path, enclosing function, Call node) for every
+    ``<x>.<attr>(...)`` call in the package source."""
+    import ast
+    import pathlib
+
+    import sanctions_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        stack = [(tree, None)]
+        while stack:
+            node, fn = stack.pop()
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                fn = node.name
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == attr):
+                yield str(path.relative_to(root)), fn, node
+            stack.extend((c, fn) for c in ast.iter_child_nodes(node))
+
+
+def test_driver_round_trips_go_through_the_helpers():
+    """One path per direction: ``createDataFrame`` appears only inside
+    ``helpers.local_frame`` and at emb_pca_full's pandas input (already
+    Arrow), and no ``count()`` feeds a ``<=`` gate whose branch collects
+    — size gates fetch through ``helpers.fetch_if_small``."""
+    import ast
+    import pathlib
+
+    import sanctions_data_pipeline_spark as pkg
+
+    sites = {(mod, fn) for mod, fn, _ in _package_calls("createDataFrame")}
+    assert sites == {("plans/helpers.py", "local_frame"),
+                     ("plans/training_data.py", "emb_pca_full")}, sites
+
+    def is_count(node, counted):
+        return ((isinstance(node, ast.Call)
+                 and isinstance(node.func, ast.Attribute)
+                 and node.func.attr == "count" and not node.args)
+                or (isinstance(node, ast.Name) and node.id in counted))
+
+    def collects(nodes, collecting_fns):
+        for n in nodes:
+            for sub in ast.walk(n):
+                if isinstance(sub, ast.Call):
+                    f = sub.func
+                    if isinstance(f, ast.Attribute) and f.attr == "collect":
+                        return True
+                    if isinstance(f, ast.Name) and f.id in collecting_fns:
+                        return True
+        return False
+
+    root = pathlib.Path(pkg.__file__).parent
+    gates = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        collecting_fns = {
+            f.name for f in tree.body if isinstance(f, ast.FunctionDef)
+            and collects([f], set())}
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            counted = {t.id for a in ast.walk(fn) if isinstance(a, ast.Assign)
+                       and is_count(a.value, set())
+                       for t in a.targets if isinstance(t, ast.Name)}
+            for node in ast.walk(fn):
+                if not isinstance(node, (ast.If, ast.IfExp)):
+                    continue
+                t = node.test
+                if not (isinstance(t, ast.Compare)
+                        and any(isinstance(op, ast.LtE) for op in t.ops)
+                        and is_count(t.left, counted)):
+                    continue
+                body = node.body if isinstance(node, ast.If) else [node.body]
+                if collects(body, collecting_fns):
+                    gates.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert gates == [], gates

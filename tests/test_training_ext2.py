@@ -529,14 +529,14 @@ def test_bpe_small_vocab_switch_matches_distributed_loop(
     to the distributed merge loop on BOTH trainers (the dd_cluster
     both-paths pin): force the distributed path by zeroing the gate
     and compare against the driver path."""
-    import sanctions_data_pipeline_spark.plans.training_data2 as td2
+    from sanctions_data_pipeline_spark.plans import helpers
 
     def rows(name):
         df = registry.queries()[name](spark, sf_dir)
         return sorted(tuple(r) for r in df.collect())
 
     fast_m, fast_e = rows("tok_bpe_merges"), rows("tok_bpe_encode")
-    monkeypatch.setattr(td2, "_BPE_DRIVER_MAX_VOCAB", 0)
+    monkeypatch.setattr(helpers, "DRIVER_MAX_ROWS", 0)
     slow_m, slow_e = rows("tok_bpe_merges"), rows("tok_bpe_encode")
     assert fast_m == slow_m
     assert fast_e == slow_e

@@ -1843,14 +1843,14 @@ def test_unigram_small_inventory_switch_matches_arrow_path(
     registered lattice and the _full pin surface (the dd_cluster /
     BPE both-paths pin): force the Arrow path by zeroing the gate."""
     import sanctions_data_pipeline_spark.plans.training_data3 as td3
-    from sanctions_data_pipeline_spark.plans import registry
+    from sanctions_data_pipeline_spark.plans import helpers, registry
 
     def rows(fn):
         return sorted(tuple(r) for r in fn(spark, sf_dir).collect())
 
     fast = rows(registry.queries()["tok_unigram_lm"])
     fast_full = rows(td3.tok_unigram_lm_full)
-    monkeypatch.setattr(td3, "_UNI_DRIVER_MAX_WORDS", 0)
+    monkeypatch.setattr(helpers, "DRIVER_MAX_ROWS", 0)
     slow = rows(registry.queries()["tok_unigram_lm"])
     slow_full = rows(td3.tok_unigram_lm_full)
     assert fast == slow

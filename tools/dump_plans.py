@@ -3,8 +3,9 @@
 Usage: python tools/dump_plans.py <round_dir> <suffix> <query> [query ...]
 
 Writes plans/<round_dir>/<query>_<suffix>.txt with the AQE-final
-formatted physical plan (the query runs once via the noop sink so AQE
-settles before the plan is read — same discipline as explain_audit).
+formatted physical plan: :func:`final_plan` runs the query's own
+QueryExecution, then explains it (explain_audit and run_query --explain
+use the same function).
 """
 
 from __future__ import annotations
@@ -16,6 +17,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sanctions_data_pipeline_spark.plans import registry  # noqa: E402
 from sanctions_data_pipeline_spark.session import get_spark  # noqa: E402
+
+
+def final_plan(df, mode: str = "formatted") -> str:
+    """Execute ``df``'s own QueryExecution, then explain it.
+
+    Only an executed AdaptiveSparkPlan prints its final plan
+    (``isFinalPlan=true``). Running the query through another Dataset
+    (a noop write, ``df.count()``) executes that Dataset's plan and
+    leaves ``df``'s at the initial plan, whose joins may never run."""
+    qe = df._jdf.queryExecution()
+    qe.toRdd().count()
+    return df._sc._jvm.PythonSQLUtils.explainString(qe, mode)
 
 
 def main() -> None:
@@ -30,10 +43,7 @@ def main() -> None:
     for name in names:
         qd = registry.REGISTRY[name]
         spark.sparkContext.setJobDescription(f"dump_plans:{name}")
-        df = qd.build(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        formatted = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
+        formatted = final_plan(qd.build(spark, sf_dir))
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(f"# {name} ({suffix}) — explain('formatted'), "

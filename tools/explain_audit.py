@@ -17,6 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from dump_plans import final_plan  # noqa: E402
 from sanctions_data_pipeline_spark.plans import registry  # noqa: E402
 from sanctions_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -34,10 +35,7 @@ def main() -> None:
     for name in names:
         qd = registry.REGISTRY[name]
         df = qd.build(spark, sf_dir)
-        # run once so AQE settles on the final plan
-        df.count()
-        formatted = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
+        formatted = final_plan(df)
         # AQE defers codegen into query stages, so count subtrees on a
         # static (AQE-off) build of the same query
         import re

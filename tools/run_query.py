@@ -17,6 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from dump_plans import final_plan  # noqa: E402
 from sanctions_data_pipeline_spark.plans import registry  # noqa: E402
 from sanctions_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -30,7 +31,8 @@ def main() -> None:
     ap.add_argument("--list", action="store_true",
                     help="list registered queries and exit")
     ap.add_argument("--explain", action="store_true",
-                    help="print the formatted physical plan")
+                    help="after the run, print the AQE-final formatted "
+                         "physical plan")
     ap.add_argument("--limit", type=int, default=20,
                     help="rows to show (default 20)")
     ap.add_argument("--save", metavar="PATH",
@@ -56,8 +58,6 @@ def main() -> None:
 
     spark = get_spark("run_query")
     df = registry.queries()[args.query](spark, args.sf)
-    if args.explain:
-        df.explain("formatted")
     t0 = time.time()
     if args.save:
         df.write.mode("overwrite").parquet(args.save)
@@ -66,6 +66,8 @@ def main() -> None:
     else:
         df.show(args.limit, truncate=False)
         print(f"[{args.query} @ {args.sf}: {time.time() - t0:.2f}s]")
+    if args.explain:
+        print(final_plan(df))
 
 
 if __name__ == "__main__":
