@@ -1984,7 +1984,7 @@ WHERE {_CCS_U} < r.rate
 @register("mix_ccnet_sampling", oracle=_CCS_ORACLE)
 def mix_ccnet_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = tx_ccnet_buckets(spark, sf_dir).select("doc_id", "bucket", "ppl")
-    rates = local_frame(list(_CCS_RATES), "bucket string, rate double")
+    rates = local_frame(_CCS_RATES, "bucket string, rate double")
     u = (F.conv(F.substring(F.md5(F.concat(F.lit("ccnet:"),
                                            F.col("doc_id").cast("string"))),
                             1, 8), 16, 10)

@@ -856,29 +856,6 @@ def test_local_frame_types_nulls_and_plan(spark):
         local_frame([(1.5,)], "i bigint")
 
 
-def _package_calls(attr: str):
-    """(module path, enclosing function, Call node) for every
-    ``<x>.<attr>(...)`` call in the package source."""
-    import ast
-    import pathlib
-
-    import sanctions_data_pipeline_spark as pkg
-
-    root = pathlib.Path(pkg.__file__).parent
-    for path in sorted(root.rglob("*.py")):
-        tree = ast.parse(path.read_text(), str(path))
-        stack = [(tree, None)]
-        while stack:
-            node, fn = stack.pop()
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                fn = node.name
-            if (isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == attr):
-                yield str(path.relative_to(root)), fn, node
-            stack.extend((c, fn) for c in ast.iter_child_nodes(node))
-
-
 def test_driver_round_trips_go_through_the_helpers():
     """One path per direction: ``createDataFrame`` appears only inside
     ``helpers.local_frame`` and at emb_pca_full's pandas input (already
@@ -889,49 +866,45 @@ def test_driver_round_trips_go_through_the_helpers():
 
     import sanctions_data_pipeline_spark as pkg
 
-    sites = {(mod, fn) for mod, fn, _ in _package_calls("createDataFrame")}
-    assert sites == {("plans/helpers.py", "local_frame"),
-                     ("plans/training_data.py", "emb_pca_full")}, sites
+    def calls(node, attr):
+        return [c for c in ast.walk(node) if isinstance(c, ast.Call)
+                and isinstance(c.func, ast.Attribute) and c.func.attr == attr]
 
-    def is_count(node, counted):
-        return ((isinstance(node, ast.Call)
-                 and isinstance(node.func, ast.Attribute)
-                 and node.func.attr == "count" and not node.args)
-                or (isinstance(node, ast.Name) and node.id in counted))
-
-    def collects(nodes, collecting_fns):
-        for n in nodes:
-            for sub in ast.walk(n):
-                if isinstance(sub, ast.Call):
-                    f = sub.func
-                    if isinstance(f, ast.Attribute) and f.attr == "collect":
-                        return True
-                    if isinstance(f, ast.Name) and f.id in collecting_fns:
-                        return True
-        return False
+    def is_count(node, counted=()):
+        return (node in calls(node, "count") and not node.args
+                or isinstance(node, ast.Name) and node.id in counted)
 
     root = pathlib.Path(pkg.__file__).parent
-    gates = []
+    sites, gates = set(), []
     for path in sorted(root.rglob("*.py")):
-        tree = ast.parse(path.read_text(), str(path))
-        collecting_fns = {
-            f.name for f in tree.body if isinstance(f, ast.FunctionDef)
-            and collects([f], set())}
+        mod = str(path.relative_to(root))
+        tree = ast.parse(path.read_text(), mod)
+        fns = [f for f in tree.body if isinstance(f, ast.FunctionDef)]
+        for c in calls(tree, "createDataFrame"):
+            sites.add((mod, next((f.name for f in fns
+                                  if f.lineno <= c.lineno <= f.end_lineno),
+                                 None)))
+        # a branch collects directly or through a module function that does
+        collecting = {f.name for f in fns if calls(f, "collect")}
         for fn in ast.walk(tree):
-            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if not isinstance(fn, ast.FunctionDef):
                 continue
             counted = {t.id for a in ast.walk(fn) if isinstance(a, ast.Assign)
-                       and is_count(a.value, set())
+                       and is_count(a.value)
                        for t in a.targets if isinstance(t, ast.Name)}
             for node in ast.walk(fn):
-                if not isinstance(node, (ast.If, ast.IfExp)):
-                    continue
-                t = node.test
-                if not (isinstance(t, ast.Compare)
+                t = getattr(node, "test", None)
+                if not (isinstance(node, (ast.If, ast.IfExp))
+                        and isinstance(t, ast.Compare)
                         and any(isinstance(op, ast.LtE) for op in t.ops)
                         and is_count(t.left, counted)):
                     continue
                 body = node.body if isinstance(node, ast.If) else [node.body]
-                if collects(body, collecting_fns):
-                    gates.append(f"{path.relative_to(root)}:{node.lineno}")
+                if any(calls(b, "collect") or any(
+                        isinstance(c, ast.Call)
+                        and getattr(c.func, "id", None) in collecting
+                        for c in ast.walk(b)) for b in body):
+                    gates.append(f"{mod}:{node.lineno}")
+    assert sites == {("plans/helpers.py", "local_frame"),
+                     ("plans/training_data.py", "emb_pca_full")}, sites
     assert gates == [], gates
