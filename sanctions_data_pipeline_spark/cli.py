@@ -28,7 +28,8 @@ def main(argv: list[str] | None = None) -> None:
     from pyspark.sql import SparkSession
 
     from sanctions_data_pipeline_spark.pipeline import run_pipeline
-    from sanctions_data_pipeline_spark.plans.helpers import local_frame
+    from sanctions_data_pipeline_spark.plans.helpers import (
+        local_frame, persist, query_scope)
     from sanctions_data_pipeline_spark.sources import sinks
 
     p = argparse.ArgumentParser(prog="sanctions_data_pipeline_spark")
@@ -60,24 +61,23 @@ def main(argv: list[str] | None = None) -> None:
         spark = (SparkSession.builder.master(args.master)
                  .appName("sanctions_data_pipeline").getOrCreate())
 
-    if args.scrape:
-        from sanctions_data_pipeline_spark.sources.fetch import (
-            run_scrape_pipeline)
-        table = run_scrape_pipeline(spark, args.scrape, args.workdir)
-    else:
-        pdf_texts = None
-        if args.pdf:
-            from sanctions_data_pipeline_spark.sources.pdf_source import (
-                extract_pdf_text)
-            pdf_texts = extract_pdf_text(spark, args.pdf)
-        elif args.pdf_text:
-            with open(args.pdf_text, encoding="utf-8") as fh:
-                pdf_texts = local_frame(
-                    [(args.pdf_text, fh.read())], "doc_path string, text string")
-        table = run_pipeline(spark, args.feed, pdf_texts)
-
-    table = table.persist()  # count + write share one pipeline run
-    try:
+    with query_scope():
+        if args.scrape:
+            from sanctions_data_pipeline_spark.sources.fetch import (
+                run_scrape_pipeline)
+            table = run_scrape_pipeline(spark, args.scrape, args.workdir)
+        else:
+            pdf_texts = None
+            if args.pdf:
+                from sanctions_data_pipeline_spark.sources.pdf_source import (
+                    extract_pdf_text)
+                pdf_texts = extract_pdf_text(spark, args.pdf)
+            elif args.pdf_text:
+                with open(args.pdf_text, encoding="utf-8") as fh:
+                    pdf_texts = local_frame([(args.pdf_text, fh.read())],
+                                            "doc_path string, text string")
+            table = run_pipeline(spark, args.feed, pdf_texts)
+        table = persist(table)  # count + write share one pipeline run
         n = table.count()
         if args.out.endswith(".xlsx"):
             sinks.write_xlsx_quality(table, args.out)
@@ -85,8 +85,6 @@ def main(argv: list[str] | None = None) -> None:
             sinks.write_output(table, args.out, fmt="csv")
         else:
             sinks.write_output(table, args.out, fmt="parquet")
-    finally:
-        table.unpersist()
     print(f"wrote {n} rows -> {args.out}")
 
 

@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from sanctions_data_pipeline_spark.functions.hof import let
 from sanctions_data_pipeline_spark.plans.helpers import (
-    fetch_if_small, local_frame)
+    fetch_if_small, local_frame, persist)
 
 
 # signature hash -> its bit width (SimHash fingerprint width)
@@ -181,14 +181,12 @@ def _dup_mass_low(docs: DataFrame, text_col: str) -> bool:
 
 
 def _text_groups(docs: DataFrame, block_cols: list[str], id_col: str,
-                 text_col: str, persist: bool = True) -> DataFrame:
+                 text_col: str, cached: bool = True) -> DataFrame:
     """(block..., __key, rep, rep_text, members) — one row per
     identical-normalized-text group, re-widened after the groupBy (AQE
     coalesces the small shuffle, which would serialize the CPU-heavy
-    signature stage downstream). Persisted by default and deliberately
-    NOT unpersisted (the cache-aliasing discipline documented at
-    ngram_jaccard_components: repeats share one entry, distinct plans
-    evict LRU)."""
+    signature stage downstream). Persisted by default; the returned
+    plan reads it lazily (see plans.helpers.query_scope)."""
     from sanctions_data_pipeline_spark.catalog import widen_small_scan
     par = docs.sparkSession.sparkContext.defaultParallelism
     # normalize+md5 is the CPU-heavy map side of the group shuffle: a
@@ -204,7 +202,7 @@ def _text_groups(docs: DataFrame, block_cols: list[str], id_col: str,
               F.min_by("__t", "i").alias("rep_text"),
               F.collect_list("i").alias("members"))
          .repartition(par, "rep"))
-    return g.persist() if persist else g
+    return persist(g) if cached else g
 
 
 def cap_hot_buckets(rows: DataFrame, keys: list[str],
@@ -317,13 +315,13 @@ def ngram_jaccard_pairs_quarantined(
         # sets feeds the prefix pipeline AND both verify sides —
         # persist so the CPU-heavy shingling map stage runs once,
         # not three times (shared-subtree discipline, see _allpairs_core)
-        sets = _shingle_sets(docs, block_cols, k, id_col, text_col).persist()
+        sets = persist(_shingle_sets(docs, block_cols, k, id_col, text_col))
         return _allpairs_core(sets, block_cols, threshold, max_bucket)
-    groups = (_text_groups(docs, block_cols, id_col, text_col, persist=False)
-              .withColumn("shh", shingle_hashes(F.col("rep_text"), k))
-              .withColumn("n", F.size("shh"))
-              .drop("rep_text")
-              .persist())
+    groups = persist(_text_groups(docs, block_cols, id_col, text_col,
+                                  cached=False)
+                     .withColumn("shh", shingle_hashes(F.col("rep_text"), k))
+                     .withColumn("n", F.size("shh"))
+                     .drop("rep_text"))
     rep_sets = groups.filter(F.col("n") > 0).select(
         *block_cols, F.col("rep").alias("i"), "shh", "n")
     rep_pairs, quarantine = _allpairs_core(rep_sets, block_cols, threshold,
@@ -389,11 +387,11 @@ def _allpairs_core(sets: DataFrame, block_cols: list[str],
     # capped, the bucket-depth agg + anti join too): Spark does not
     # dedupe common subplans, so without the persist the whole
     # shingle -> doc-frequency -> rarity-resort pipeline runs once per
-    # consumer (2-4x). Narrow (~24-byte) keyed rows; same cache-
-    # aliasing discipline as _text_groups.
-    pref = ordered.select(
+    # consumer (2-4x). Narrow (~24-byte) keyed rows; the returned plan
+    # reads it lazily (see plans.helpers.query_scope).
+    pref = persist(ordered.select(
         "i", *block_cols, "n",
-        F.explode(F.slice("shh", F.lit(1), plen)).alias("ph")).persist()
+        F.explode(F.slice("shh", F.lit(1), plen)).alias("ph")))
     quarantine = None
     if max_bucket is not None:
         pref, quarantine = cap_hot_buckets(
@@ -453,12 +451,11 @@ def containment_pairs(docs: DataFrame, block_cols: list[str],
         return _containment_core(
             _shingle_sets(docs, block_cols, k, id_col, text_col),
             block_cols, threshold)
-    groups = (_text_groups(docs, block_cols, id_col, text_col,
-                           persist=False)
-              .withColumn("shh", shingle_hashes(F.col("rep_text"), k))
-              .withColumn("n", F.size("shh"))
-              .drop("rep_text")
-              .persist())
+    groups = persist(_text_groups(docs, block_cols, id_col, text_col,
+                                  cached=False)
+                     .withColumn("shh", shingle_hashes(F.col("rep_text"), k))
+                     .withColumn("n", F.size("shh"))
+                     .drop("rep_text"))
     ne = groups.filter(F.col("n") > 0)
     rep_pairs = _containment_core(
         ne.select(*block_cols, F.col("rep").alias("i"), "shh", "n"),
@@ -630,7 +627,7 @@ def _minhash_lsh_core(docs: DataFrame, n_hashes: int, bands: int,
     # the hot-bucket depth agg + anti join when capped): persist the
     # signature table so the shingle explode + n_hashes min-aggregates
     # run once, not 2-4x (shared-subtree discipline, |docs| x 33 longs)
-    wide = _minhash_wide(docs, n_hashes, k, id_col, text_col, hash).persist()
+    wide = persist(_minhash_wide(docs, n_hashes, k, id_col, text_col, hash))
     # band sig = one codegen'd xxhash64 over the band's r minhash
     # columns; the explode ships (band_id, 8-byte sig) rows only
     banded = wide.select(
@@ -658,9 +655,8 @@ def _minhash_lsh_core(docs: DataFrame, n_hashes: int, bands: int,
     needed = docs.join(F.broadcast(cand_ids), id_col, "left_semi")
     # both verify joins read sh — persist so the candidate re-shingle
     # pass (semi-join + shingle_hashes) runs once, not twice
-    sh = needed.select(F.col(id_col),
-                       shingle_hashes(F.col(text_col), k, hash).alias("sh")
-                       ).persist()
+    sh = persist(needed.select(
+        F.col(id_col), shingle_hashes(F.col(text_col), k, hash).alias("sh")))
     verified = (
         cand.join(sh.withColumnRenamed(id_col, "i").withColumnRenamed("sh", "sh_i"), "i")
         .join(sh.withColumnRenamed(id_col, "j").withColumnRenamed("sh", "sh_j"), "j")
@@ -851,7 +847,7 @@ def _simhash_pairs_direct(docs: DataFrame, max_hamming: int,
     # chunked (below) feeds both sides of the bucket self-join: persist
     # the fingerprint table so the token explode + 16 packed-lane sums
     # run once, not twice (shared-subtree discipline, |docs| x 2 longs)
-    sh = simhash_fingerprints(docs, id_col, text_col, hash).persist()
+    sh = persist(simhash_fingerprints(docs, id_col, text_col, hash))
     chunked = sh.select(
         id_col, "sh",
         F.posexplode(F.array(*simhash_chunk_keys(max_hamming,
@@ -937,20 +933,18 @@ def ngram_jaccard_components(docs: DataFrame, block_cols: list[str],
     # ONE normalization+md5 pass over the corpus, persisted narrow
     # (16-byte key + id); both the group table and the member table
     # derive from it — no second text scan pays the regex+hash again
-    keyed = (docs
-             .select(*block_cols, F.col(id_col).alias("id"),
-                     F.md5(normalized_text(F.col(text_col))).alias("__key"))
-             .persist())
+    keyed = persist(docs.select(
+        *block_cols, F.col(id_col).alias("id"),
+        F.md5(normalized_text(F.col(text_col))).alias("__key")))
     grp = (keyed.groupBy(*block_cols, "__key")
            .agg(F.min("id").alias("rep"), F.count(F.lit(1)).alias("gsz")))
     # fetch each rep's text by id (grp is group-count-sized, so AQE
     # broadcasts it into the scan) and shingle the DISTINCT texts only
-    groups = (grp.join(docs.select(F.col(id_col).alias("rep"),
-                                   F.col(text_col).alias("__t")), "rep")
-              .withColumn("shh", shingle_hashes(F.col("__t"), k))
-              .withColumn("n_sh", F.size("shh"))
-              .drop("__t")
-              .persist())
+    groups = persist(grp.join(docs.select(F.col(id_col).alias("rep"),
+                                          F.col(text_col).alias("__t")), "rep")
+                     .withColumn("shh", shingle_hashes(F.col("__t"), k))
+                     .withColumn("n_sh", F.size("shh"))
+                     .drop("__t"))
     rep_sets = (groups
                 .select(*block_cols, F.col("rep").alias("i"), "shh",
                         F.col("n_sh").alias("n"))
@@ -982,20 +976,7 @@ def ngram_jaccard_components(docs: DataFrame, block_cols: list[str],
                    | F.col("cluster_id").isNotNull())
            .select("id",
                    F.coalesce("cluster_id", "rep").alias("cluster_id")))
-    # the result is consumed lazily downstream, so groups must stay
-    # persisted past this return. Releasing it on the NEXT invocation
-    # is a measured anti-pattern: Spark's cache manager keys entries by
-    # CANONICALIZED plan, so consecutive identical invocations (bench
-    # best-of-N, repeated driver checks) share ONE entry — unpersisting
-    # the "previous" table evicts the current run's cache and the final
-    # join recomputes the whole pipeline (measured 6 s -> 39 s warm).
-    # The same aliasing means repeats do NOT leak; distinct plans leak
-    # one small (id, label)-scale table each. MEMORY blocks evict LRU
-    # under pressure, but blocks already spilled to disk are only freed
-    # by unpersist — a long-lived session sweeping many DISTINCT inputs
-    # through these operators should call spark.catalog.clearCache()
-    # between input generations to bound disk growth (ADVICE r11; the
-    # bench/driver processes are short-lived, so they never accrete).
+    # the result reads groups lazily (see plans.helpers.query_scope)
     return out
 
 
@@ -1051,9 +1032,8 @@ def connected_components(pairs: DataFrame, src: str = "i", dst: str = "j",
     # here would shuffle the largest intermediate of the whole
     # algorithm for nothing (pair producers already emit unique i<j
     # pairs).
-    base = (pairs.select(F.col(src).cast("long").alias("a"),
-                         F.col(dst).cast("long").alias("b"))
-            .persist())
+    base = persist(pairs.select(F.col(src).cast("long").alias("a"),
+                                F.col(dst).cast("long").alias("b")))
     # one fetch answers the size gate; past the bound the partitions it
     # computed stay cached for the loop's first action
     edges_small = fetch_if_small(base, driver_max_pairs)
@@ -1083,13 +1063,11 @@ def connected_components(pairs: DataFrame, src: str = "i", dst: str = "j",
         out_rows = [(node, comp_min[find(node)]) for node in sorted(parent)]
         base.unpersist()
         return local_frame(out_rows, "id long, cluster_id long")
-    sym = (base.unionAll(base.select(F.col("b").alias("a"),
-                                     F.col("a").alias("b")))
-           .persist())
+    sym = persist(base.unionAll(base.select(F.col("b").alias("a"),
+                                            F.col("a").alias("b"))))
     nodes = sym.select(F.col("a").alias("id")).distinct()
-    edges = (sym.unionAll(nodes.select(F.col("id").alias("a"),
-                                       F.col("id").alias("b")))
-             .persist())
+    edges = persist(sym.unionAll(nodes.select(F.col("id").alias("a"),
+                                              F.col("id").alias("b"))))
     # (initial labels are consumed exactly once, by the warm-start
     # lineage below — nothing to persist)
     labels = nodes.withColumn("label", F.col("id"))
@@ -1158,10 +1136,10 @@ def dup_regions(docs: DataFrame, k: int = 8, min_tokens: int = 10,
     # ex feeds the df census AND the dup join: persist the narrow
     # (doc, pos, fingerprint) rows so the CPU-heavy span-hash explode
     # runs once — the dd_span_dedup discipline (round-12 subtree lint)
-    ex = widen_small_scan(docs, id_col).select(
+    ex = persist(widen_small_scan(docs, id_col).select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(span_hashes(F.col(text_col), k)).alias("pos", "h")
-    ).persist()
+    ))
     dup_spans = (ex.groupBy("h")
                  .agg(F.count_distinct("doc_id").alias("df"))
                  .filter(F.col("df") >= 2)

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from sanctions_data_pipeline_spark.plans.helpers import lcount, persist
+
 
 def fold_pagerank(edges: DataFrame, iters: int = 2,
                   damping: float = 0.85,
@@ -38,9 +40,7 @@ def fold_pagerank(edges: DataFrame, iters: int = 2,
     (bounded: one row per node); the edge cache is released before
     returning (the gr_label_prop persist/unpersist discipline).
     """
-    from sanctions_data_pipeline_spark.plans.helpers import lcount
-
-    e = edges.select("src", "dst").persist()
+    e = persist(edges.select("src", "dst"))
     deg = e.groupBy("src").agg(lcount("d"))
     n = float(deg.count())  # bounded driver scalar (node count)
     fold = F.aggregate(F.array_sort(F.collect_list("contrib")),
@@ -56,9 +56,8 @@ def fold_pagerank(edges: DataFrame, iters: int = 2,
         pr = (contribs.groupBy("node")
               .agg((F.lit(teleport) / F.lit(n)
                     + F.lit(damping) * fold).alias("pr")))
-    out = (pr.join(deg.withColumnRenamed("src", "node"), "node")
-           .select("node", F.col("d").cast("bigint").alias("d"), "pr")
-           .persist())
+    out = persist(pr.join(deg.withColumnRenamed("src", "node"), "node")
+                  .select("node", F.col("d").cast("bigint").alias("d"), "pr"))
     out.count()  # bounded action: one row per node
     e.unpersist()  # out is materialized; result no longer depends on e
     return out
@@ -98,14 +97,13 @@ def bfs_layers(edges: DataFrame, seeds: DataFrame, max_hops: int = 6,
     """
     from pyspark.sql import functions as F
 
-    sym = (edges.select(F.col(src).cast("long").alias("a"),
-                        F.col(dst).cast("long").alias("b"))
-           .unionAll(edges.select(F.col(dst).cast("long").alias("a"),
-                                  F.col(src).cast("long").alias("b")))
-           .persist())
-    visited = (seeds.select(F.col(id_col).cast("long").alias("id"))
-               .distinct()
-               .withColumn("layer", F.lit(0)).persist())
+    sym = persist(edges.select(F.col(src).cast("long").alias("a"),
+                               F.col(dst).cast("long").alias("b"))
+                  .unionAll(edges.select(F.col(dst).cast("long").alias("a"),
+                                         F.col(src).cast("long").alias("b"))))
+    visited = persist(seeds.select(F.col(id_col).cast("long").alias("id"))
+                      .distinct()
+                      .withColumn("layer", F.lit(0)))
     n_visited = visited.count()
     frontier = visited
 
@@ -130,7 +128,7 @@ def bfs_layers(edges: DataFrame, seeds: DataFrame, max_hops: int = 6,
             added = g1.unionAll(g2)
         else:
             g2, added = None, g1
-        nxt = visited.unionAll(added).persist()
+        nxt = persist(visited.unionAll(added))
         n_next = nxt.count()
         if n_next == n_visited:
             nxt.unpersist()
@@ -142,8 +140,8 @@ def bfs_layers(edges: DataFrame, seeds: DataFrame, max_hops: int = 6,
             frontier.unpersist()
         # next frontier: the DEEPEST newly-added layer (rows of the
         # shallower layer have already expanded inside this chain)
-        new_frontier = (nxt.filter(F.col("layer") == (hop + 1 if g2 is not None
-                                                      else hop)).persist())
+        new_frontier = persist(nxt.filter(
+            F.col("layer") == (hop + 1 if g2 is not None else hop)))
         visited, frontier, n_visited = nxt, new_frontier, n_next
         hop += 2 if g2 is not None else 1
     sym.unpersist()

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from sanctions_data_pipeline_spark.plans.helpers import (
-    fetch_if_small, local_frame)
+    fetch_if_small, local_frame, persist)
 
 
 def as_double(col: Column) -> Column:
@@ -71,14 +71,13 @@ def cosine_pairs(vecs: DataFrame, block_cols: list[str], threshold: float,
     from sanctions_data_pipeline_spark.operators import dedup as dd
 
     par = vecs.sparkSession.sparkContext.defaultParallelism
-    groups = (vecs
-              .select(*block_cols, F.col(id_col).alias("i"),
-                      F.col(vec_col).alias("__v"))
-              .groupBy(*block_cols, "__v")
-              .agg(F.min("i").alias("rep"),
-                   F.collect_list("i").alias("members"))
-              .repartition(par, "rep")
-              .persist())
+    groups = persist(vecs
+                     .select(*block_cols, F.col(id_col).alias("i"),
+                             F.col(vec_col).alias("__v"))
+                     .groupBy(*block_cols, "__v")
+                     .agg(F.min("i").alias("rep"),
+                          F.collect_list("i").alias("members"))
+                     .repartition(par, "rep"))
     reps = groups.select(*block_cols, F.col("rep").alias(id_col),
                          F.col("__v").alias(vec_col))
     rep_pairs = _cosine_pairs_direct(reps, block_cols, threshold,
@@ -123,14 +122,13 @@ def cosine_pair_counts(vecs: DataFrame, block_cols: list[str],
                                      id_col, vec_col)
                 .select("cos", F.lit(1).cast("bigint").alias("w")))
     par = vecs.sparkSession.sparkContext.defaultParallelism
-    groups = (vecs
-              .select(*block_cols, F.col(id_col).alias("i"),
-                      F.col(vec_col).alias("__v"))
-              .groupBy(*block_cols, "__v")
-              .agg(F.min("i").alias("rep"),
-                   F.count(F.lit(1)).alias("k"))
-              .repartition(par, "rep")
-              .persist())
+    groups = persist(vecs
+                     .select(*block_cols, F.col(id_col).alias("i"),
+                             F.col(vec_col).alias("__v"))
+                     .groupBy(*block_cols, "__v")
+                     .agg(F.min("i").alias("rep"),
+                          F.count(F.lit(1)).alias("k"))
+                     .repartition(par, "rep"))
     reps = groups.select(*block_cols, F.col("rep").alias(id_col),
                          F.col("__v").alias(vec_col))
     sizes = groups.select(F.col("rep"), F.col("k"))
@@ -344,12 +342,11 @@ def _knn_graph_collapsed(vecs: DataFrame, k: int, id_col: str,
     3. src-side member expansion of the <= k+1 group rows, self
        filter, and the shared final rank — n x (k+1) narrow rows, the
        only term that scales with duplicate multiplicity."""
-    groups = (vecs.select(F.col(id_col).alias("__i"),
-                          F.col(vec_col).alias("__v"))
-              .groupBy("__v")
-              .agg(F.min("__i").alias("rep"),
-                   F.collect_list("__i").alias("members"))
-              .persist())
+    groups = persist(vecs.select(F.col(id_col).alias("__i"),
+                                 F.col(vec_col).alias("__v"))
+                     .groupBy("__v")
+                     .agg(F.min("__i").alias("rep"),
+                          F.collect_list("__i").alias("members")))
     reps = groups.select(F.col("rep").alias(id_col),
                          F.col("__v").alias(vec_col))
     corpus = _knn_corpus(reps, id_col, vec_col)
@@ -521,9 +518,9 @@ def semantic_dedup(vecs: DataFrame, threshold: float, n_centroids: int = 16,
     # pairs, both sc probe joins, and the final keep join): persist so
     # the assignment + centroid-dot map runs once, not per consumer
     # (round-12 subtree lint; corpus-linear rows, the r11 persist class)
-    scored = base.withColumn(
+    scored = persist(base.withColumn(
         "cdot", F.round(dot(F.col("v"), F.element_at(cent_arr, F.col("cell")))
-                        / F.sqrt(dot(F.col("v"), F.col("v"))), 6)).persist()
+                        / F.sqrt(dot(F.col("v"), F.col("v"))), 6)))
     pairs = cosine_pairs(scored.select("cell", F.col(id_col), F.col("v")),
                          ["cell"], threshold, id_col=id_col, vec_col="v")
     # a row is dropped if ANY over-threshold partner is more

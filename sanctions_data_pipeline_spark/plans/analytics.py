@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from sanctions_data_pipeline_spark.catalog import load_table, widen_small_scan
 from sanctions_data_pipeline_spark.plans.helpers import (
-    SQL_REVENUE, dval, lcount,
+    SQL_REVENUE, dval, lcount, persist,
 )
 from sanctions_data_pipeline_spark.plans.registry import register
 
@@ -72,8 +72,8 @@ def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-execute their input lineage (the helper's documented cost
     # note): persist the bounded per-customer spend so the scan + agg
     # run once, not three times
-    spend = (orders.groupBy("o_custkey")
-             .agg(_spend_x4_col().alias("x4")).persist())
+    spend = persist(orders.groupBy("o_custkey")
+                    .agg(_spend_x4_col().alias("x4")))
     from sanctions_data_pipeline_spark.plans.helpers import sharded_ntile
 
     # sharded NTILE(10) over customer spend — no one-task sort; the
@@ -215,7 +215,7 @@ def q_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = (orders.join(cust, orders.o_custkey == cust.c_custkey)
          .select(F.col("o_orderpriority").alias("pri"),
                  F.col("c_mktsegment").alias("seg")))
-    obs = j.groupBy("pri", "seg").agg(lcount("o")).persist()
+    obs = persist(j.groupBy("pri", "seg").agg(lcount("o")))
     rm = obs.groupBy("pri").agg(F.sum("o").cast("bigint").alias("rc"))
     cm = obs.groupBy("seg").agg(F.sum("o").cast("bigint").alias("cc"))
     t = rm.agg(F.sum("rc").cast("bigint").alias("n"))
@@ -444,10 +444,10 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     wn = W.partitionBy("event_type")
     # r feeds the percentile agg AND the clamp join: persist so the
     # per-type window sort runs once, not twice
-    r = x.select("event_type", "x4",
-                 F.row_number().over(wr).alias("rn"),
-                 F.count(F.lit(1)).over(wn).cast("bigint").alias("n")
-                 ).persist()
+    r = persist(x.select("event_type", "x4",
+                         F.row_number().over(wr).alias("rn"),
+                         F.count(F.lit(1)).over(wn).cast("bigint").alias("n")
+                         ))
     p = r.groupBy("event_type").agg(
         F.max("n").cast("bigint").alias("n_ev"),
         F.min(F.when(F.col("rn") == F.ceil(0.05 * F.col("n")).cast("bigint"),
@@ -591,7 +591,7 @@ def dq_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one count-star per CHILD table, shared across its audits — the
     # lineitem count ran once per FK (3x) before (round-12 subtree
     # lint; the anti-joins stay separate: each prunes to its own key)
-    li_n = li.agg(lcount("n_child")).persist()
+    li_n = persist(li.agg(lcount("n_child")))
     orders_n = orders.agg(lcount("n_child"))
 
     def audit(fk: str, child: DataFrame, key: str, parent: DataFrame,
@@ -774,8 +774,8 @@ def sim_reciprocal_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpersisted, the whole quadratic scoring pass ran twice per job
     # (measured 30 s vs 20 s for one emb_knn_graph at the ×10 tier).
     # The cached table is n×k narrow rows.
-    top = (sim.knn_graph(vecs, k=_RNN_K)
-           .select("src_id", "dst_id", "cos").persist())
+    top = persist(sim.knn_graph(vecs, k=_RNN_K)
+                  .select("src_id", "dst_id", "cos"))
     back = top.select(F.col("src_id").alias("dst_id"),
                       F.col("dst_id").alias("src_id"))
     return (top.join(back, ["src_id", "dst_id"])
@@ -1184,20 +1184,20 @@ def dd_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     arr = docs.select("doc_id", tx.tokens(F.col("text")).alias("t")) \
               .filter(F.size("t") >= _MHE_K)
-    sh = arr.select(
+    sh = persist(arr.select(
         "doc_id",
         F.explode(F.expr(
             "transform(sequence(0, size(t) - 3),"
             " i -> concat(t[i], ' ', t[i+1], ' ', t[i+2]))")).alias("s"),
-    ).select("doc_id", md5_32(F.col("s")).alias("hs")).distinct().persist()
+    ).select("doc_id", md5_32(F.col("s")).alias("hs")).distinct())
     # sh feeds the signature agg AND the exact-set agg; sig feeds the
     # banding AND two probe-join sides; sets feeds two join sides —
     # persist all three so the shingle pipeline runs once instead of
     # up to 7x (round-12 subtree lint; the dd_minhash_lsh discipline)
-    sig = sh.groupBy("doc_id").agg(*[
+    sig = persist(sh.groupBy("doc_id").agg(*[
         F.min(md5_32(F.concat_ws(":", F.lit(h), F.col("hs")))).alias(f"m{h}")
         for h in range(_MHE_N)
-    ]).persist()
+    ]))
     banded = sig.select(
         "doc_id",
         F.posexplode(F.array(*[
@@ -1211,7 +1211,7 @@ def dd_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
                   ["b", "bsig"])
             .filter(F.col("i") < F.col("j"))
             .select("i", "j").distinct())
-    sets = sh.groupBy("doc_id").agg(F.collect_set("hs").alias("ls")).persist()
+    sets = persist(sh.groupBy("doc_id").agg(F.collect_set("hs").alias("ls")))
     jac = F.round(
         F.size(F.array_intersect("ls_i", "ls_j")).cast("double")
         / F.size(F.array_union("ls_i", "ls_j")).cast("double"), 6)
@@ -1351,8 +1351,8 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # daily feeds both self-join sides, the series count AND the tie
     # census (4 consumers): persist the bounded one-row-per-day census
     # so the orders scan + agg runs once (round-12 subtree lint)
-    daily = (orders.groupBy(F.to_date("o_orderdate").alias("d"))
-             .agg(lcount("x"))).persist()
+    daily = persist(orders.groupBy(F.to_date("o_orderdate").alias("d"))
+                    .agg(lcount("x")))
     b = daily.select(F.col("d").alias("d2"), F.col("x").alias("x2"))
     s = (daily.join(b, F.col("d") < F.col("d2"))
          .agg(F.sum(F.when(F.col("x2") > F.col("x"), 1)
@@ -1429,10 +1429,10 @@ def q_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # daily feeds three consumers (g, dg, the lag probe b): persist the
     # bounded day-count census so the events scan + agg runs once
     # (round-12 subtree lint; one row per calendar day at any scale)
-    daily = (ev.groupBy((F.floor(F.unix_micros(F.date_trunc("day", "ts"))
-                                 / F.lit(86400000000)).cast("bigint"))
-                        .alias("i"))
-             .agg(lcount("x"))).persist()
+    daily = persist(ev.groupBy(
+        (F.floor(F.unix_micros(F.date_trunc("day", "ts"))
+                 / F.lit(86400000000)).cast("bigint")).alias("i"))
+        .agg(lcount("x")))
     g = daily.agg(lcount("m"), F.sum("x").cast("bigint").alias("sx"))
     dg = daily.crossJoin(F.broadcast(g))
     mean = F.col("sx").cast("double") / F.col("m").cast("double")
@@ -1775,7 +1775,7 @@ def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = (orders.join(cust, orders.o_custkey == cust.c_custkey)
          .select(F.col("o_orderpriority").alias("pri"),
                  F.col("c_mktsegment").alias("seg")))
-    obs = j.groupBy("pri", "seg").agg(lcount("o")).persist()
+    obs = persist(j.groupBy("pri", "seg").agg(lcount("o")))
     rm = obs.groupBy("pri").agg(F.sum("o").cast("bigint").alias("rc"))
     cm = obs.groupBy("seg").agg(F.sum("o").cast("bigint").alias("cc"))
     t = rm.agg(F.sum("rc").cast("bigint").alias("n"))
@@ -2011,8 +2011,8 @@ def q_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.col("x4"))).cast("bigint").alias("m")))
     # z feeds two aggregations (grp and tot): persist the narrow
     # (g, z) frame so the scan + median join runs once (round-12 lint)
-    z = (x.join(F.broadcast(med), "g")
-         .select("g", F.abs(F.col("x4") - F.col("m")).alias("z"))).persist()
+    z = persist(x.join(F.broadcast(med), "g")
+                .select("g", F.abs(F.col("x4") - F.col("m")).alias("z")))
     grp = z.groupBy("g").agg(lcount("n_g"),
                              F.sum("z").cast("bigint").alias("s_g"))
     tot = z.agg(lcount("n"), F.sum("z").cast("bigint").alias("s"),

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from sanctions_data_pipeline_spark.catalog import load_table, widen_small_scan
 from sanctions_data_pipeline_spark.plans.helpers import (
-    lcount, local_frame, pround6)
+    lcount, local_frame, persist, pround6)
 from sanctions_data_pipeline_spark.plans.registry import register
 
 # Daily value series: x4 fixed-point sum of events.value per UTC day.
@@ -497,16 +497,17 @@ def tx_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # local split; no-op at cluster scale).
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"),
                             "doc_id").filter(F.length("text") > 0)
-    t = docs.select(tx.tokens(F.col("text")).alias("toks")).persist()
-    uni = (t.select(F.explode("toks").alias("w"))
-           .groupBy("w").agg(lcount("c")).persist())
+    t = persist(docs.select(tx.tokens(F.col("text")).alias("toks")))
+    uni = persist(t.select(F.explode("toks").alias("w"))
+                  .groupBy("w").agg(lcount("c")))
     n = uni.agg(F.sum("c").cast("bigint").alias("n_tokens"))
-    bi = (t.filter(F.size("toks") >= 2)
-          .select(F.explode(F.expr(
-              "transform(sequence(1, size(toks) - 1),"
-              " i -> struct(toks[i - 1] AS w1, toks[i] AS w2))")).alias("b"))
-          .groupBy(F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-          .agg(lcount("c_xy")).persist())
+    bi = persist(t.filter(F.size("toks") >= 2)
+                 .select(F.explode(F.expr(
+                     "transform(sequence(1, size(toks) - 1),"
+                     " i -> struct(toks[i - 1] AS w1, toks[i] AS w2))"))
+                     .alias("b"))
+                 .groupBy(F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
+                 .agg(lcount("c_xy")))
     nb = bi.agg(F.sum("c_xy").cast("bigint").alias("n_bigrams"))
     u1 = uni.select(F.col("w").alias("w1"), F.col("c").alias("c_x"))
     u2 = uni.select(F.col("w").alias("w2"), F.col("c").alias("c_y"))
@@ -1024,8 +1025,8 @@ def gr_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct + wedge-join pipeline runs once (round-12 subtree
     # lint), and emit both degree endpoints with one explode instead
     # of a doubled union subtree.
-    e0 = (a.join(b, "o").filter(F.col("u") < F.col("v"))
-          .select("u", "v").distinct().persist())
+    e0 = persist(a.join(b, "o").filter(F.col("u") < F.col("v"))
+                 .select("u", "v").distinct())
     e1 = e0.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = e0.select(F.col("u").alias("b"), F.col("v").alias("c"))
     e3 = e0.select(F.col("u").alias("a"), F.col("v").alias("c"))
@@ -1157,11 +1158,10 @@ def pr_user_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # degree agg, the candidate expansion and the owned anti join):
     # persist the bounded (l_orderkey < 4000) distinct slice so the
     # scan + distinct shuffle run once, not five times
-    li = (load_table(spark, sf_dir, "lineitem")
-          .filter(F.col("l_orderkey") < 4000)
-          .select(F.col("l_orderkey").alias("o"),
-                  F.col("l_partkey").alias("p")).distinct()
-          .persist())
+    li = persist(load_table(spark, sf_dir, "lineitem")
+                 .filter(F.col("l_orderkey") < 4000)
+                 .select(F.col("l_orderkey").alias("o"),
+                         F.col("l_partkey").alias("p")).distinct())
     a = li.select("o", F.col("p").alias("i"))
     b = li.select("o", F.col("p").alias("j"))
     cooc = (a.join(b, "o").filter(F.col("i") < F.col("j"))
@@ -1170,7 +1170,7 @@ def pr_user_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the di/dj broadcast sides below both consume this agg: persist so
     # it runs once, not twice (round-12 subtree lint; bounded by the
     # slice's distinct parts)
-    deg = li.groupBy("p").agg(lcount("d")).persist()
+    deg = persist(li.groupBy("p").agg(lcount("d")))
     # symmetrize with one map-side explode instead of unionAll of two
     # copies of the co-occurrence subtree (Spark does not dedupe
     # common subplans — the union form ran the wedge join twice)
@@ -1625,17 +1625,18 @@ def s_alias_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers of the variant-key pipeline); members feeds the size
     # census AND the final join — persist both narrow keyed frames
     # (round-12 subtree lint)
-    variants = REGISTRY["s_name_variants"].build(spark, sf_dir) \
-        .select("entity_id", "variant_key").distinct().persist()
+    variants = persist(REGISTRY["s_name_variants"].build(spark, sf_dir)
+                       .select("entity_id", "variant_key").distinct())
     a = variants.select(F.col("variant_key"), F.col("entity_id").alias("i"))
     b = variants.select(F.col("variant_key"), F.col("entity_id").alias("j"))
     pairs = (a.join(b, "variant_key").filter(F.col("i") < F.col("j"))
              .select("i", "j").distinct())
     cc = connected_components(pairs)
-    members = variants.select(F.col("entity_id").alias("id")).distinct() \
-        .join(cc, "id", "left") \
-        .select("id", F.coalesce("cluster_id", F.col("id"))
-                .alias("cluster_id")).persist()
+    members = persist(variants.select(F.col("entity_id").alias("id"))
+                      .distinct()
+                      .join(cc, "id", "left")
+                      .select("id", F.coalesce("cluster_id", F.col("id"))
+                              .alias("cluster_id")))
     sizes = members.groupBy("cluster_id").agg(lcount("cluster_size"))
     return (members.join(sizes, "cluster_id")
             .select(F.col("id").alias("entity_id"), "cluster_id",
@@ -1866,10 +1867,10 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # daily feeds both sides of the slope-pair self-join: persist the
     # bounded one-row-per-day census so the events scan + agg runs
     # once (round-12 subtree lint)
-    daily = (ev.groupBy(F.floor(F.unix_micros(F.date_trunc("day", "ts"))
-                                / F.lit(86400000000)).cast("bigint")
-                        .alias("i"))
-             .agg(lcount("x"))).persist()
+    daily = persist(ev.groupBy(F.floor(F.unix_micros(F.date_trunc("day", "ts"))
+                                       / F.lit(86400000000)).cast("bigint")
+                               .alias("i"))
+                    .agg(lcount("x")))
     b = daily.select(F.col("i").alias("i2"), F.col("x").alias("x2"))
     p = (daily.join(b, F.col("i2") > F.col("i"))
          .select(F.round((F.col("x2") - F.col("x")).cast("double")
@@ -2034,11 +2035,11 @@ def emb_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame so it computes once, not twice
     emb = widen_small_scan(load_table(spark, sf_dir, "embeddings"),
                            "vec_id")
-    x = emb.select(
+    x = persist(emb.select(
         "vec_id", "label",
         F.posexplode("embedding").alias("p", "valf")).select(
         "vec_id", "label", (F.col("p") + 1).alias("dim"),
-        F.col("valf").cast("double").alias("val")).persist()
+        F.col("valf").cast("double").alias("val")))
 
     def fold_sorted(struct_col):
         return F.aggregate(
@@ -2486,10 +2487,10 @@ def q_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
     # daily feeds three consumers (both sides of the Pettitt-style
     # self-join + the panel probe): persist the bounded day census so
     # the events scan + agg runs once (round-12 subtree lint)
-    daily = (ev.groupBy(F.floor(F.unix_micros(F.date_trunc("day", "ts"))
-                                / F.lit(86400000000)).cast("bigint")
-                        .alias("i"))
-             .agg(lcount("x"))).persist()
+    daily = persist(ev.groupBy(F.floor(F.unix_micros(F.date_trunc("day", "ts"))
+                                       / F.lit(86400000000)).cast("bigint")
+                               .alias("i"))
+                    .agg(lcount("x")))
     b = daily.select(F.col("i").alias("i2"), F.col("x").alias("x2"))
     v = (daily.join(b, F.col("i") != F.col("i2"))
          .groupBy("i")
@@ -2735,8 +2736,8 @@ def gr_powerlaw_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both degree union branches consumed e0: persist the narrow edge
     # list and emit both endpoints with one explode instead of the
     # doubled union subtree (round-12 subtree lint)
-    e0 = (a.join(b, "o").filter(F.col("u") < F.col("v"))
-          .select("u", "v").distinct().persist())
+    e0 = persist(a.join(b, "o").filter(F.col("u") < F.col("v"))
+                 .select("u", "v").distinct())
     deg = (e0.select(F.explode(F.array("u", "v")).alias("node"))
            .groupBy("node").agg(lcount("d")))
     s = deg.agg(
@@ -2816,9 +2817,8 @@ def tx_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"),
                             "doc_id").filter(F.length("text") > 0)
     t = docs.select("source", tx.tokens(F.col("text")).alias("toks"))
-    w = (t.select("source", F.explode("toks").alias("word"))
-         .groupBy("source", "word").agg(F.count(F.lit(1)).alias("a"))
-         .persist())
+    w = persist(t.select("source", F.explode("toks").alias("word"))
+                .groupBy("source", "word").agg(F.count(F.lit(1)).alias("a")))
     tot = w.groupBy("source").agg(F.sum("a").cast("bigint").alias("n_src"))
     gw = w.groupBy("word").agg(F.sum("a").cast("bigint").alias("g"))
     n = w.agg(F.sum("a").cast("bigint").alias("n_all"))
@@ -2997,14 +2997,14 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 29-node duplicate). Both frames are bounded — one row per
     # distinct duration day — so the persists are driver-small state
     # at any scale.
-    grid = u.groupBy(F.col("dur").alias("t")).agg(
+    grid = persist(u.groupBy(F.col("dur").alias("t")).agg(
         F.sum("observed").cast("bigint").alias("d_events"),
-        lcount("ending")).persist()
+        lcount("ending")))
     g2 = grid.select(F.col("t").alias("t2"), F.col("ending").alias("e2"))
-    risk = (grid.join(F.broadcast(g2), F.col("t2") >= F.col("t"))
-            .groupBy("t", "d_events")
-            .agg(F.sum("e2").cast("bigint").alias("n_risk"))
-            .filter(F.col("d_events") > 0)).persist()
+    risk = persist(grid.join(F.broadcast(g2), F.col("t2") >= F.col("t"))
+                   .groupBy("t", "d_events")
+                   .agg(F.sum("e2").cast("bigint").alias("n_risk"))
+                   .filter(F.col("d_events") > 0))
     r2 = risk.select(F.col("t").alias("t2"),
                      F.col("d_events").alias("d2"),
                      F.col("n_risk").alias("n2"))
@@ -3228,10 +3228,10 @@ def q_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tr feeds the per-dow seasonal agg AND the component join: persist
     # the bounded one-row-per-day frame so the events scan + agg +
     # trend window runs once (round-12 subtree lint)
-    tr = daily.select(
+    tr = persist(daily.select(
         "i", "dow", "x",
         (F.sum("x").over(w).cast("double")
-         / F.count("x").over(w).cast("double")).alias("trend")).persist()
+         / F.count("x").over(w).cast("double")).alias("trend")))
 
     def fold_i(val_expr):
         return F.aggregate(
@@ -3421,16 +3421,16 @@ def tok_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v feeds both self-join sides AND the vocab-size census (3
     # consumers): persist the bounded top-K-per-source vocab so the
     # tokenize + census + rank window runs once (round-12 subtree lint)
-    v = (w.withColumn("rk", F.row_number().over(
+    v = persist(w.withColumn("rk", F.row_number().over(
         W.partitionBy("source").orderBy(F.desc("c"), "word")))
         .filter(F.col("rk") <= _VOCAB_K2)
-        .select("source", "word")).persist()
+        .select("source", "word"))
     a = v.select(F.col("source").alias("src_a"), "word")
     b = v.select(F.col("source").alias("src_b"), "word")
     p = (a.join(b, "word").filter(F.col("src_a") < F.col("src_b"))
          .groupBy("src_a", "src_b").agg(lcount("n_shared")))
     # sz feeds both broadcast sides — persist the tiny per-source census
-    sz = v.groupBy("source").agg(lcount("k")).persist()
+    sz = persist(v.groupBy("source").agg(lcount("k")))
     sa = sz.select(F.col("source").alias("src_a"), F.col("k").alias("ka"))
     sb = sz.select(F.col("source").alias("src_b"), F.col("k").alias("kb"))
     j = p.join(F.broadcast(sa), "src_a").join(F.broadcast(sb), "src_b")
@@ -4020,11 +4020,11 @@ def emb_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides — persist the shared frames so each pipeline stage runs
     # once (round-12 subtree lint; the emb_centroid_classify
     # dim-explode discipline)
-    x = emb.select(
+    x = persist(emb.select(
         "vec_id", "label",
         F.posexplode("embedding").alias("p", "valf")).select(
         "vec_id", "label", (F.col("p") + 1).alias("dim"),
-        F.col("valf").cast("double").alias("val")).persist()
+        F.col("valf").cast("double").alias("val")))
 
     def fold(key_col, val_expr):
         return F.aggregate(
@@ -4033,17 +4033,17 @@ def emb_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda u: u["v"]),
             F.lit(0.0), lambda acc, v: acc + v)
 
-    cent = (x.groupBy("label", "dim")
-            .agg((fold(F.col("vec_id"), F.col("val"))
-                  / F.count(F.lit(1))).alias("c"))).persist()
+    cent = persist(x.groupBy("label", "dim")
+                   .agg((fold(F.col("vec_id"), F.col("val"))
+                         / F.count(F.lit(1))).alias("c")))
     dist = (x.join(F.broadcast(cent), ["label", "dim"])
             .groupBy("vec_id", "label")
             .agg(F.sqrt(fold(F.col("dim"),
                              (F.col("val") - F.col("c"))
                              * (F.col("val") - F.col("c")))).alias("d")))
-    s = dist.groupBy("label").agg(
+    s = persist(dist.groupBy("label").agg(
         (fold(F.col("vec_id"), F.col("d")) / F.count(F.lit(1))).alias("si"),
-        lcount("n")).persist()
+        lcount("n")))
     ca = cent.select(F.col("label").alias("la"), "dim", F.col("c").alias("cva"))
     cb = cent.select(F.col("label").alias("lb"), "dim", F.col("c").alias("cvb"))
     cd = (ca.join(cb, "dim").filter(F.col("la") != F.col("lb"))
@@ -4627,10 +4627,10 @@ def gr_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frames so the wedge pipeline and the degree census run once
     # (round-12 subtree lint); the degree endpoints emit with one
     # explode instead of a doubled union subtree.
-    e0 = (a.join(b, "o").filter(F.col("u") < F.col("v"))
-          .select("u", "v").distinct().persist())
-    deg = (e0.select(F.explode(F.array("u", "v")).alias("node"))
-           .groupBy("node").agg(lcount("d")).persist())
+    e0 = persist(a.join(b, "o").filter(F.col("u") < F.col("v"))
+                 .select("u", "v").distinct())
+    deg = persist(e0.select(F.explode(F.array("u", "v")).alias("node"))
+                  .groupBy("node").agg(lcount("d")))
     ks = spark.range(1, 11).select(F.col("id").cast("bigint").alias("k"))
     nk = (F.broadcast(ks).join(deg, deg["d"] > F.col("k"))
           .groupBy("k").agg(lcount("n_k")))
@@ -4732,11 +4732,11 @@ def q_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # naive/snaive/mom — and test x3 prediction probes): persist the
     # bounded (day, dow) census so the events scan + agg runs once
     # (round-12 subtree lint flagged this builder x4)
-    daily = (ev.groupBy(
+    daily = persist(ev.groupBy(
         F.floor(F.unix_micros(F.date_trunc("day", "ts"))
                 / F.lit(86400000000)).cast("bigint").alias("i"),
         (F.weekday("ts") + 1).cast("bigint").alias("dow"))
-        .agg(lcount("x"))).persist()
+        .agg(lcount("x")))
     b = daily.agg(
         F.min("i").cast("bigint").alias("lo"),
         (F.min("i") + F.floor((F.max("i") + 1 - F.min("i")) * 0.8))
@@ -4860,10 +4860,10 @@ def q_bootstrap_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grid feeds the m probe AND the resample join: persist the bounded
     # ranked day series so the events scan + agg + rank window runs
     # once (round-12 subtree lint)
-    grid = daily.select(
+    grid = persist(daily.select(
         "x", F.row_number().over(W.orderBy("i")).alias("rk"),
-        F.count(F.lit(1)).over(wall).cast("bigint").alias("m")).persist()
-    m_row = grid.agg(F.max("m").cast("int").alias("m")).persist()
+        F.count(F.lit(1)).over(wall).cast("bigint").alias("m")))
+    m_row = persist(grid.agg(F.max("m").cast("int").alias("m")))
     bs = spark.range(1, _BOOTSTRAP_B + 1).select(
         F.col("id").cast("bigint").alias("b"))
     js = (F.broadcast(m_row).crossJoin(spark.range(1, 10_000).select(
@@ -4964,8 +4964,8 @@ def gr_temporal_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count): persist the narrow per-month edge list so the join +
     # distinct pipeline runs once, and emit both endpoints with one
     # explode instead of the doubled union subtree (round-12 lint)
-    e0 = (a.join(b, ["mo", "o"]).filter(F.col("u") < F.col("v"))
-          .select("mo", "u", "v").distinct().persist())
+    e0 = persist(a.join(b, ["mo", "o"]).filter(F.col("u") < F.col("v"))
+                 .select("mo", "u", "v").distinct())
     nodes = (e0.select("mo", F.explode(F.array("u", "v")).alias("node"))
              .groupBy("mo")
              .agg(F.countDistinct("node").cast("bigint").alias("n_nodes")))
@@ -5042,14 +5042,14 @@ def q_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((1 - F.col("exp")) * (1 - F.col("outc"))).cast("bigint")
         .alias("d"))
     n = (F.col("a") + F.col("b") + F.col("c") + F.col("d")).cast("double")
-    t = s.select(
+    t = persist(s.select(
         "yr", "a", "b", "c", "d",
         F.when((F.col("b") > 0) & (F.col("c") > 0),
                F.round(F.col("a").cast("double") * F.col("d")
                        / (F.col("b").cast("double") * F.col("c")), 6))
         .alias("stratum_or"),
         (F.col("a").cast("double") * F.col("d") / n).alias("num_t"),
-        (F.col("b").cast("double") * F.col("c") / n).alias("den_t")).persist()
+        (F.col("b").cast("double") * F.col("c") / n).alias("den_t")))
     # ^ t feeds the pooled fold AND the final probe: persist the
     # bounded one-row-per-year table so the orders x lineitem join +
     # stratum agg runs once (round-12 subtree lint)
@@ -5188,7 +5188,7 @@ def io_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         " _corrupt_record string"
     ).option("mode", "PERMISSIVE") \
      .option("columnNameOfCorruptRecord", "_corrupt_record").json(path)
-    back = back.cache()
+    back = persist(back)
     good = back.filter(F.col("_corrupt_record").isNull())
     return good.agg(
         lcount("n_good"),
@@ -5303,10 +5303,10 @@ def q_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # seg feeds both half-filters of the migration join: persist the
     # narrow per-customer segment table so the orders scan + spend agg
     # + ntile window runs once (round-12 subtree lint)
-    seg = spend.select(
+    seg = persist(spend.select(
         "half", "o_custkey",
         F.ntile(4).over(W.partitionBy("half").orderBy("s4", "o_custkey"))
-        .cast("bigint").alias("segment")).persist()
+        .cast("bigint").alias("segment")))
     a = seg.filter(F.col("half") == 1).select(
         F.col("o_custkey").alias("custkey"), F.col("segment").alias("s1"))
     c = seg.filter(F.col("half") == 2).select(
@@ -5446,12 +5446,12 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per_n feeds the regression fit AND the final probe: persist the
     # bounded one-row-per-block-size table so the R/S block pipeline
     # runs once (round-12 subtree lint)
-    per_n = (rs2.filter((F.col("sd") > 0) & (F.col("rng") > 0))
-             .groupBy("n")
-             .agg(lcount("n_blocks"),
-                  (fold_by(F.col("blk"),
-                           F.log(F.col("rng") / F.col("sd")))
-                   / F.count(F.lit(1))).alias("mean_ln_rs"))).persist()
+    per_n = persist(rs2.filter((F.col("sd") > 0) & (F.col("rng") > 0))
+                    .groupBy("n")
+                    .agg(lcount("n_blocks"),
+                         (fold_by(F.col("blk"),
+                                  F.log(F.col("rng") / F.col("sd")))
+                          / F.count(F.lit(1))).alias("mean_ln_rs")))
     lnn = F.log(F.col("n").cast("double"))
     fit = per_n.agg(
         lcount("k"),

@@ -33,8 +33,8 @@ from sanctions_data_pipeline_spark.functions import names as nm
 from sanctions_data_pipeline_spark.operators import dedup as dd
 from sanctions_data_pipeline_spark.operators import textstats as tx
 from sanctions_data_pipeline_spark.plans.helpers import (
-    SQL_REVENUE, drate, dsum, dval, lcount, local_frame, pround6, sql_dsum,
-    sql_pround6,
+    SQL_REVENUE, drate, dsum, dval, lcount, local_frame, persist, pround6,
+    sql_dsum, sql_pround6,
 )
 from sanctions_data_pipeline_spark.plans.registry import register
 
@@ -341,11 +341,11 @@ def s_name_idf_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     al = fx.spark_df(spark, "aliases")
     # toks feeds the df census AND the scored join: persist the narrow
     # distinct token rows so the explode runs once (round-12 lint)
-    toks = al.select(
+    toks = persist(al.select(
         "entity_id", "alias_idx",
         F.explode(F.split(F.trim(F.regexp_replace(
             F.lower("whole_name"), r"\s+", " ")), " ")).alias("tok"),
-    ).distinct().persist()
+    ).distinct())
     n_al = al.count()  # bounded driver scalar: fixture corpus size
     dfq = toks.groupBy("tok").agg(lcount("df"))
     scored = toks.join(F.broadcast(dfq), "tok").select(
@@ -687,10 +687,10 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     # daily feeds three consumers (g, dg, the lag probe b): persist the
     # bounded day-count census so the events scan + agg runs once
     # (round-12 subtree lint; one row per calendar day at any scale)
-    daily = (ev.groupBy((F.floor(F.unix_micros(F.date_trunc("day", "ts"))
-                                 / F.lit(86400000000)).cast("bigint"))
-                        .alias("i"))
-             .agg(lcount("x"))).persist()
+    daily = persist(ev.groupBy(
+        (F.floor(F.unix_micros(F.date_trunc("day", "ts"))
+                 / F.lit(86400000000)).cast("bigint")).alias("i"))
+        .agg(lcount("x")))
     g = daily.agg(lcount("m"), F.sum("x").cast("bigint").alias("sx"))
     dg = daily.crossJoin(F.broadcast(g))
     mean = F.col("sx").cast("double") / F.col("m").cast("double")
@@ -938,14 +938,14 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grid/risk each feed both sides of their triangular self-joins
     # (round-12 subtree lint: one x2 45-node duplicate here) — persist;
     # both are bounded, one row per distinct duration day.
-    grid = u.groupBy(F.col("dur").alias("t")).agg(
+    grid = persist(u.groupBy(F.col("dur").alias("t")).agg(
         F.sum("observed").cast("bigint").alias("d_events"),
-        lcount("ending")).persist()
+        lcount("ending")))
     g2 = grid.select(F.col("t").alias("t2"), F.col("ending").alias("e2"))
-    risk = (grid.join(F.broadcast(g2), F.col("t2") >= F.col("t"))
-            .groupBy("t", "d_events")
-            .agg(F.sum("e2").cast("bigint").alias("n_risk"))
-            .filter(F.col("d_events") > 0)).persist()
+    risk = persist(grid.join(F.broadcast(g2), F.col("t2") >= F.col("t"))
+                   .groupBy("t", "d_events")
+                   .agg(F.sum("e2").cast("bigint").alias("n_risk"))
+                   .filter(F.col("d_events") > 0))
     r2 = risk.select(F.col("t").alias("tb"), F.col("d_events").alias("db"),
                      F.col("n_risk").alias("nb"))
     fold = F.aggregate(
@@ -1034,8 +1034,8 @@ def tok_mincount_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     # cnt feeds the total-token agg AND the threshold sweep: persist
     # the vocab-scale census so tokenization runs once (round-12 lint)
-    cnt = (docs.select(F.explode(tx.tokens(F.col("text"))).alias("tok"))
-           .groupBy("tok").agg(lcount("c"))).persist()
+    cnt = persist(docs.select(F.explode(tx.tokens(F.col("text"))).alias("tok"))
+                  .groupBy("tok").agg(lcount("c")))
     tot = cnt.agg(F.sum("c").cast("bigint").alias("n"))
     thr = local_frame([(t,) for t in _MINCOUNT_THRESHOLDS],
                       "min_count bigint")
@@ -1088,8 +1088,8 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     # daily feeds both self-join sides, the series count AND the tie
     # census (4 consumers) — persist the bounded per-day census, the
     # q_mann_kendall discipline (round-12 subtree lint)
-    daily = (orders.groupBy(F.to_date("o_orderdate").alias("d"))
-             .agg(lcount("x"))).persist()
+    daily = persist(orders.groupBy(F.to_date("o_orderdate").alias("d"))
+                    .agg(lcount("x")))
     b = daily.select(F.col("d").alias("d2"), F.col("x").alias("x2"))
     s = (daily.join(b, F.col("d") < F.col("d2"))
          .agg(F.sum(F.when(F.col("x2") > F.col("x"), 1)
@@ -1154,7 +1154,7 @@ def q_gk_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cells feeds both sides of the concordance cross: persist the
     # tiny cell grid so the orders x lineitem join + agg runs once
     # (round-12 subtree lint)
-    cells = per_order.groupBy("p", "q").agg(lcount("n")).persist()
+    cells = persist(per_order.groupBy("p", "q").agg(lcount("n")))
     b = cells.select(F.col("p").alias("p2"), F.col("q").alias("q2"),
                      F.col("n").alias("n2"))
     conc = (((F.col("p") < F.col("p2")) & (F.col("q") < F.col("q2")))
@@ -1442,10 +1442,10 @@ def ml_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame so it computes once, not twice
     emb = widen_small_scan(load_table(spark, sf_dir, "embeddings"),
                            "vec_id")
-    x = emb.select(
+    x = persist(emb.select(
         "vec_id", F.posexplode("embedding").alias("p", "valf")).select(
         "vec_id", (F.col("p") + 1).alias("dim"),
-        F.col("valf").cast("double").alias("val")).persist()
+        F.col("valf").cast("double").alias("val")))
     seeds = (x.filter(F.col("vec_id") < _KMEANS_STEP_K)
              .select(F.col("vec_id").alias("cid"), "dim",
                      F.col("val").alias("c")))
@@ -1504,10 +1504,10 @@ def q_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # ut feeds the size agg AND both self-join sides: persist so the
     # distinct shuffle runs once, not three times
-    ut = ev.select("user_id", "event_type").distinct().persist()
+    ut = persist(ev.select("user_id", "event_type").distinct())
     # sizes feeds both broadcast sides: persist the tiny per-type
     # census so its agg over ut runs once (round-12 subtree lint)
-    sizes = ut.groupBy("event_type").agg(lcount("n")).persist()
+    sizes = persist(ut.groupBy("event_type").agg(lcount("n")))
     b = ut.select(F.col("user_id").alias("u2"),
                   F.col("event_type").alias("type_b"))
     inter = (ut.join(b, (ut.user_id == b.u2)
@@ -2056,11 +2056,10 @@ def tx_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # members are narrow (key, id) rows — no member arrays
     keyed = docs.select(
         "doc_id", F.md5(dd.normalized_text(F.col("text"))).alias("__key"))
-    grp = (docs.groupBy(
+    grp = persist(docs.groupBy(
                F.md5(dd.normalized_text(F.col("text"))).alias("__key"))
            .agg(F.min("doc_id").alias("rep"),
-                F.min_by("text", "doc_id").alias("rep_text"))
-           .persist())
+                F.min_by("text", "doc_id").alias("rep_text")))
     rep_res = _ngram_novelty_direct(
         grp.select(F.col("rep").alias("doc_id"),
                    F.col("rep_text").alias("text")))
@@ -2082,11 +2081,11 @@ def _ngram_novelty_direct(docs: DataFrame) -> DataFrame:
     t = docs.select("doc_id", tx.tokens(F.col("text")).alias("toks"))
     # g feeds the first-doc agg AND the scoring join: persist so the
     # tokenize + gram explode + distinct shuffle run once, not twice
-    g = (t.filter(F.size("toks") >= 3)
-         .select("doc_id", F.explode(F.expr(
-             "transform(sequence(1, size(toks) - 2), "
-             "i -> concat_ws(' ', slice(toks, i, 3)))")).alias("gram"))
-         .distinct().persist())
+    g = persist(t.filter(F.size("toks") >= 3)
+                .select("doc_id", F.explode(F.expr(
+                    "transform(sequence(1, size(toks) - 2), "
+                    "i -> concat_ws(' ', slice(toks, i, 3)))")).alias("gram"))
+                .distinct())
     first = g.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     return (g.join(first, "gram")
             .groupBy("doc_id")
@@ -2330,22 +2329,21 @@ def dd_bloom_prejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the passed count): persist the narrow key frames so the filters,
     # distincts and the k-bit membership join run once each
     # (round-12 subtree lint — one x2 16-node duplicate here)
-    sel = (sup.filter(F.col("s_acctbal") > 9000)
-           .select(F.col("s_suppkey").alias("key")).distinct().persist())
+    sel = persist(sup.filter(F.col("s_acctbal") > 9000)
+                  .select(F.col("s_suppkey").alias("key")).distinct())
     hexpr = ("cast(conv(substring(md5(concat('b', cast(i as string), ':', "
              "cast(key as string))), 1, 8), 16, 10) as bigint) % "
              f"{_BLOOM_M}")
     bits = (sel.select("key", F.explode(F.expr(
         f"sequence(0, {_BLOOM_K - 1})")).alias("i"))
         .selectExpr(f"{hexpr} as bit").distinct())
-    probe = li.select(F.col("l_suppkey").alias("key")).distinct().persist()
+    probe = persist(li.select(F.col("l_suppkey").alias("key")).distinct())
     pb = probe.select("key", F.explode(F.expr(
         f"sequence(0, {_BLOOM_K - 1})")).alias("i")) \
         .selectExpr("key", "i", f"{hexpr} as bit")
     hit = (pb.join(F.broadcast(bits), "bit")
            .groupBy("key").agg(F.countDistinct("i").alias("n_hit")))
-    passed = (hit.filter(F.col("n_hit") == _BLOOM_K).select("key")
-              .persist())
+    passed = persist(hit.filter(F.col("n_hit") == _BLOOM_K).select("key"))
     truth = passed.join(sel, "key", "left_semi")
     fp = passed.join(sel, "key", "left_anti")
     n_probed = probe.agg(lcount("n")).withColumnRenamed("n", "n_probed")
@@ -2704,7 +2702,7 @@ def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # w feeds one select PER CHECK (6 consumers — each re-ran both
     # lineitem scans): persist the one-row metrics frame (round-12
     # subtree lint)
-    w = wide.crossJoin(orphans).persist()
+    w = persist(wide.crossJoin(orphans))
     checks = [
         ("row_count_positive", F.col("n_rows"), F.col("n_rows") > 0),
         ("quantity_in_1_50", F.col("qty_out"), F.col("qty_out") == 0),

@@ -6,10 +6,15 @@ differ in the last bits and fail a value-hash compare. All money/metric
 aggregations here go through decimal (exact, order-independent) and are
 cast to double only at the output edge — bit-identical on both engines.
 Driver round trips: :func:`fetch_if_small` down, :func:`local_frame` up.
+Cache lifetime: :func:`persist` inside :func:`query_scope`.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
+
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 # Canonical decimal shapes: values (prices, quantities) are < 10^12 with
@@ -174,10 +179,9 @@ def sharded_global_window(df, key, order, *, rn=None, sums=(),
     # without precomputed bounds, the eager bounds job too): persist so
     # the caller's upstream lineage computes ONCE — chained calls
     # (q_rfm's three ntiles) otherwise recompute each predecessor per
-    # consumer. The bounds job doubles as the cache materializer.
-    # Same never-unpersist cache-aliasing discipline as _text_groups
-    # (the returned plan references the cache lazily; repeats alias).
-    d = df.withColumn("__skey", key.cast("double")).persist()
+    # consumer. The bounds job doubles as the cache materializer. The
+    # returned plan reads it lazily (see query_scope).
+    d = persist(df.withColumn("__skey", key.cast("double")))
     if bounds is None:
         mn, mx = d.agg(F.min("__skey"), F.max("__skey")).first()
     else:
@@ -277,10 +281,10 @@ def sharded_lateness_hours(ev):
     width = max(1, (int(mx) - int(mn)) // n_shards + 1)
     # e feeds the per-shard window AND the carry census: persist the
     # 3-long rows so the events scan runs once (round-12 subtree lint)
-    e = ev.select(
+    e = persist(ev.select(
         "event_id", F.unix_micros("ts").alias("us"),
         ((F.col("event_id") - F.lit(int(mn))) / F.lit(width))
-        .cast("bigint").alias("shard")).persist()
+        .cast("bigint").alias("shard")))
     local = e.withColumn(
         "local_hwm",
         F.max("us").over(
@@ -394,3 +398,37 @@ def local_frame(rows, schema) -> DataFrame:
     table = pa.Table.from_struct_array(
         pa.array(rows, type=pa.struct(to_arrow_schema(schema))))
     return SparkSession.active().createDataFrame(table, schema)
+
+
+# the entries the innermost open query_scope created; None outside one
+_SCOPE: ContextVar[list | None] = ContextVar("query_scope", default=None)
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``; inside a :func:`query_scope` it also records
+    ``df`` for release if no entry held its plan yet."""
+    owned = _SCOPE.get()
+    if owned is not None and df.storageLevel == StorageLevel.NONE:
+        owned.append(df)
+    return df.persist()
+
+
+@contextmanager
+def query_scope():
+    """Unpersist, on exit or error, the entries :func:`persist` created
+    in the block. Builders return lazy frames that read their persisted
+    intermediates when the sink runs, so run the build AND the sink in
+    one scope; a long-lived session that does not leaks one entry per
+    distinct plan. Spark keys entries by canonicalized plan: a repeat
+    shares the entry, and one cached before the scope (another owner's)
+    survives it, since evicting it made the next dd_cluster run
+    recompute everything (6 s -> 39 s). Nested scopes release only
+    their own entries."""
+    owned: list[DataFrame] = []
+    token = _SCOPE.set(owned)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for df in reversed(owned):
+            df.unpersist()

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sanctions_data_pipeline_spark.catalog import load_table
 from sanctions_data_pipeline_spark.multimodal.ops import attach_media, decode_features
-from sanctions_data_pipeline_spark.plans.helpers import pround6
+from sanctions_data_pipeline_spark.plans.helpers import persist, pround6
 from sanctions_data_pipeline_spark.plans.registry import register
 
 _R6 = "FLOOR(({x}) * 1000000 + 0.5) / 1000000.0"
@@ -287,9 +287,8 @@ def mm_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the mapInPandas stage is one Arrow-batched pass over
     distinct payloads (image bytes never shuffle); the self-join
     shuffles only (combo, bucket, 8-byte hash) rep rows; expansion
-    joins key on the rep id. `groups` stays persisted past the return
-    (cache-aliasing discipline documented at operators/dedup.py —
-    repeats share ONE entry, distinct plans evict LRU).
+    joins key on the rep id. `groups` stays persisted past the return;
+    the returned plan reads it lazily (see plans.helpers.query_scope).
 
     Oracle (round 8, unchanged by the rewrite): every quantity in the
     hash is EXACT — the PNG round-trip is lossless, block means are
@@ -340,21 +339,19 @@ def mm_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
     # md5 of the payload is the group shuffle's map side: parallelize
     # an under-split local scan (no-op at cluster scale)
-    groups = (widen_small_scan(src, "doc_id")
-              .groupBy(F.md5("text").alias("__key"))
-              .agg(F.min("doc_id").alias("rep"),
-                   F.min_by("text", "doc_id").alias("rep_text"),
-                   F.collect_list("doc_id").alias("members"))
-              .repartition(par, "rep")
-              .persist())
+    groups = persist(widen_small_scan(src, "doc_id")
+                     .groupBy(F.md5("text").alias("__key"))
+                     .agg(F.min("doc_id").alias("rep"),
+                          F.min_by("text", "doc_id").alias("rep_text"),
+                          F.collect_list("doc_id").alias("members"))
+                     .repartition(par, "rep"))
     # chunked (below) feeds both sides of the bucket self-join: persist
     # the hash table so the Arrow codec pass (PNG encode+decode per
     # distinct payload) runs once, not twice — |groups| x 2 longs
-    hashed = (groups
-              .select(F.col("rep").alias("doc_id"),
-                      F.col("rep_text").alias("text"))
-              .mapInPandas(ahash, "doc_id long, phash long")
-              .persist())
+    hashed = persist(groups
+                     .select(F.col("rep").alias("doc_id"),
+                             F.col("rep_text").alias("text"))
+                     .mapInPandas(ahash, "doc_id long, phash long"))
     chunked = hashed.select(
         "doc_id", "phash",
         F.posexplode(F.array(*simhash_chunk_keys(4, col="phash")))

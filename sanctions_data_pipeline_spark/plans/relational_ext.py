@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from sanctions_data_pipeline_spark.catalog import load_table
 from sanctions_data_pipeline_spark.plans.helpers import (
-    _as_exact_double, drate, dsum, dval, lcount, local_frame, sql_dsum, ts_str,
+    _as_exact_double, drate, dsum, dval, lcount, local_frame, persist,
+    sql_dsum, ts_str,
 )
 from sanctions_data_pipeline_spark.plans.registry import register
 
@@ -208,10 +209,12 @@ def q_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cn/sn each feed the intersect AND the except branch: persist the
     # single-column join projections so each scan + broadcast join runs
     # once (round-12 subtree lint)
-    cn = (cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-          .select("n_name")).persist()
-    sn = (supp.join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-          .select("n_name")).persist()
+    cn = persist(cust.join(F.broadcast(nation),
+                           cust.c_nationkey == nation.n_nationkey)
+                 .select("n_name"))
+    sn = persist(supp.join(F.broadcast(nation),
+                           supp.s_nationkey == nation.n_nationkey)
+                 .select("n_name"))
     both = cn.intersect(sn).select("n_name", F.lit("both").alias("kind"))
     cust_only = (cn.distinct().exceptAll(sn.distinct())
                  .select("n_name", F.lit("customers_only").alias("kind")))
@@ -663,10 +666,9 @@ def q_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dev feeds the MAD percentile AND the outlier count: persist the
     # narrow 3-double frame so the scan + median cross-join runs once
     # (round-12 subtree lint)
-    dev = (cust.crossJoin(F.broadcast(med))
-           .select("c_acctbal", "med",
-                   F.abs(F.col("c_acctbal") - F.col("med")).alias("adev"))
-           ).persist()
+    dev = persist(cust.crossJoin(F.broadcast(med)).select(
+        "c_acctbal", "med",
+        F.abs(F.col("c_acctbal") - F.col("med")).alias("adev")))
     mad = (dev.groupBy("med")
            .agg(F.expr("percentile(adev, 0.5)").alias("mad")))
     return (dev.join(F.broadcast(mad), "med")

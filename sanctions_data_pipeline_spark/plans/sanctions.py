@@ -23,7 +23,7 @@ from sanctions_data_pipeline_spark.functions.dates import reformat_dob, sql_refo
 from sanctions_data_pipeline_spark.operators.matching import (
     build_variant_mapping, neighbor_fill, variant_match,
 )
-from sanctions_data_pipeline_spark.plans.helpers import local_frame
+from sanctions_data_pipeline_spark.plans.helpers import local_frame, persist
 from sanctions_data_pipeline_spark.plans.registry import register
 
 
@@ -127,8 +127,8 @@ def s_gender_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sel feeds the name-selection join AND the gender-attr window
     # join: persist the narrow (entity_id, sel_idx) frame so the
     # latin-filter + min agg runs once (round-12 subtree lint)
-    sel = (lat.groupBy("entity_id")
-           .agg(F.min("alias_idx").alias("sel_idx"))).persist()
+    sel = persist(lat.groupBy("entity_id")
+                  .agg(F.min("alias_idx").alias("sel_idx")))
     named = (
         sel.join(lat.select("entity_id", "alias_idx", "whole_name"),
                  (lat.entity_id == sel.entity_id) & (lat.alias_idx == sel.sel_idx))

@@ -17,7 +17,7 @@ from sanctions_data_pipeline_spark.catalog import load_table
 from sanctions_data_pipeline_spark.operators.temporal import (
     asof_join, range_join_count,
 )
-from sanctions_data_pipeline_spark.plans.helpers import lcount
+from sanctions_data_pipeline_spark.plans.helpers import lcount, persist
 from sanctions_data_pipeline_spark.plans.registry import register
 
 
@@ -156,12 +156,12 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v and c each feed the next funnel stage's join AND a final count:
     # persist the narrow user-keyed stage frames so each stage's
     # events scan + agg runs once (round-12 subtree lint)
-    v = (ev.filter(F.col("event_type") == "view")
-         .groupBy("user_id").agg(F.min(us).alias("t_view"))).persist()
-    c = (ev.filter(F.col("event_type") == "click").alias("e")
-         .join(v, "user_id")
-         .filter(us > F.col("t_view"))
-         .groupBy("user_id").agg(F.min(us).alias("t_click"))).persist()
+    v = persist(ev.filter(F.col("event_type") == "view")
+                .groupBy("user_id").agg(F.min(us).alias("t_view")))
+    c = persist(ev.filter(F.col("event_type") == "click").alias("e")
+                .join(v, "user_id")
+                .filter(us > F.col("t_view"))
+                .groupBy("user_id").agg(F.min(us).alias("t_click")))
     p = (ev.filter(F.col("event_type") == "purchase").alias("e")
          .join(c, "user_id")
          .filter(us > F.col("t_click"))

@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from sanctions_data_pipeline_spark.catalog import load_table
 from sanctions_data_pipeline_spark.plans.helpers import (
-    SQL_REVENUE, _as_exact_double, dsum, dval, lcount, local_frame, sql_dsum,
+    SQL_REVENUE, _as_exact_double, dsum, dval, lcount, local_frame, persist,
+    sql_dsum,
 )
 from sanctions_data_pipeline_spark.plans.registry import register
 
@@ -191,10 +192,10 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pv feeds the grand-total agg AND the final threshold probe:
     # persist the narrow per-part census so the lineitem x supplier
     # join+agg runs once (round-12 subtree lint)
-    pv = (li.join(F.broadcast(sup_f), li.l_suppkey == sup_f.s_suppkey)
-          .groupBy("l_partkey")
-          .agg(_scaled_bigint(F.sum(dval("l_extendedprice")))
-               .alias("value_s"))).persist()
+    pv = persist(li.join(F.broadcast(sup_f), li.l_suppkey == sup_f.s_suppkey)
+                 .groupBy("l_partkey")
+                 .agg(_scaled_bigint(F.sum(dval("l_extendedprice")))
+                      .alias("value_s")))
     total = pv.agg(F.sum("value_s").alias("total_s"), lcount("n_parts"))
     # cross-multiply as decimal(38,0): value_s is already ×10^4, so the
     # int64 product overflows near 10^19 (≈ the 100 TB lineitem total);

@@ -14,7 +14,7 @@ from sanctions_data_pipeline_spark.catalog import load_table
 from sanctions_data_pipeline_spark.operators import dedup as dd
 from sanctions_data_pipeline_spark.operators import similarity as sim
 from sanctions_data_pipeline_spark.operators import textstats as tx
-from sanctions_data_pipeline_spark.plans.helpers import lcount, local_frame
+from sanctions_data_pipeline_spark.plans.helpers import lcount, local_frame, persist
 from sanctions_data_pipeline_spark.plans.registry import register
 
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -315,8 +315,8 @@ def tx_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("term") != "")
     # tf feeds the doc-frequency census AND the final join: persist so
     # the tokenize + explode + per-doc agg runs once (round-12 lint)
-    tf = (toks.groupBy("doc_id", "term")
-          .agg(F.count(F.lit(1)).alias("tf"))).persist()
+    tf = persist(toks.groupBy("doc_id", "term")
+                 .agg(F.count(F.lit(1)).alias("tf")))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     nd = docs.agg(F.count(F.lit(1)).alias("nd"))
     return (
@@ -1078,8 +1078,8 @@ def tx_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("term") != ""))
     # same shape as tx_tfidf: tf feeds the df census AND the scored
     # join — persist so tokenization runs once (round-12 lint)
-    tf = (toks.groupBy("doc_id", "term")
-          .agg(F.count(F.lit(1)).alias("tf"))).persist()
+    tf = persist(toks.groupBy("doc_id", "term")
+                 .agg(F.count(F.lit(1)).alias("tf")))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     nd = docs.agg(F.count(F.lit(1)).alias("nd"))
     scored = (tf.join(df_, "term")
@@ -1266,9 +1266,9 @@ def dd_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     # ex feeds the span-df agg AND the scoring join: persist so the
     # span-hash explode runs once, not twice
-    ex = docs.select(
+    ex = persist(docs.select(
         "doc_id",
-        F.explode(dd.span_hashes(F.col("text"), 8)).alias("h")).persist()
+        F.explode(dd.span_hashes(F.col("text"), 8)).alias("h")))
     sdf = ex.groupBy("h").agg(F.count_distinct("doc_id").alias("df"))
     dup = F.sum(F.when(F.col("df") >= 2, 1).otherwise(0)).cast("bigint")
     return (ex.join(sdf, "h")
@@ -1910,10 +1910,10 @@ def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_arr = F.array(*[sim._centroid_lit(c) for c in cents])
     # the checker's own lattice consumes scored four ways too (pairs +
     # both di/dj probes): persist, mirroring the semantic_dedup fix
-    scored = base.withColumn(
+    scored = persist(base.withColumn(
         "cdot",
         F.round(sim.dot(F.col("v"), F.element_at(cent_arr, F.col("cell")))
-                / F.sqrt(sim.dot(F.col("v"), F.col("v"))), 6)).persist()
+                / F.sqrt(sim.dot(F.col("v"), F.col("v"))), 6)))
     pairs = sim.cosine_pairs(
         scored.select("cell", "vec_id", "v"), ["cell"], 0.85,
         id_col="vec_id", vec_col="v")
@@ -2041,7 +2041,7 @@ def dp_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ntile's bounds job and its window/carry branches each re-ran the
     # tokenize over the full text otherwise — the same discipline as
     # q_lorenz_deciles' spend persist, 2 tokenize passes -> 1
-    scored = docs.select("doc_id", score.alias("__raw")).persist()
+    scored = persist(docs.select("doc_id", score.alias("__raw")))
     # sharded NTILE(4): range-shard on the raw score, per-shard rank,
     # broadcast count carry-in — no single-partition corpus sort
     t = sharded_ntile(scored,
@@ -2259,8 +2259,8 @@ def gr_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge list once and emit the three triangle corners with one
     # map-side explode instead of a tripled union subtree (the
     # pr_user_recs symmetrize idiom; same rows, order-free pre-groupBy).
-    e0 = (a.join(b, "o").filter(F.col("u") < F.col("v"))
-          .select("u", "v").distinct().persist())
+    e0 = persist(a.join(b, "o").filter(F.col("u") < F.col("v"))
+                 .select("u", "v").distinct())
     e1 = e0.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = e0.select(F.col("u").alias("b"), F.col("v").alias("c"))
     e3 = e0.select(F.col("u").alias("a"), F.col("v").alias("c"))
@@ -2483,20 +2483,21 @@ def tx_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist both so tokenize runs once and the census twice-consumed
     # subtree once (round-12 subtree lint; the tx_bigram_pmi r11
     # tokenized-corpus persist class / a <= 2x(V+1)-row census)
-    t = docs.select(
+    t = persist(docs.select(
         F.when(F.col("lang") == "en", "p").otherwise("q").alias("side"),
-        F.explode(tx.tokens(F.col("text"))).alias("tok")).persist()
+        F.explode(tx.tokens(F.col("text"))).alias("tok")))
     vocab = (t.groupBy("tok").agg(lcount("__c"))
              .withColumn("__rk", F.row_number().over(
                  W.orderBy(F.desc("__c"), F.asc("tok"))))
              .filter(F.col("__rk") <= 50).select("tok"))
-    bucketed = (t.join(F.broadcast(vocab.withColumn("__inv", F.lit(1))),
-                       "tok", "left")
-                .select("side",
-                        F.when(F.col("__inv").isNotNull(), F.col("tok"))
-                         .otherwise(F.concat(F.lit("\x01"), F.lit("OOV")))
-                         .alias("term"))
-                .groupBy("side", "term").agg(lcount("c")).persist())
+    bucketed = persist(t.join(F.broadcast(vocab.withColumn("__inv", F.lit(1))),
+                              "tok", "left")
+                       .select("side",
+                               F.when(F.col("__inv").isNotNull(), F.col("tok"))
+                                .otherwise(F.concat(F.lit("\x01"),
+                                                    F.lit("OOV")))
+                                .alias("term"))
+                       .groupBy("side", "term").agg(lcount("c")))
     tot = bucketed.groupBy("side").agg(F.sum("c").alias("n"))
     dist = (bucketed.join(tot, "side")
             .groupBy("term")
@@ -2606,9 +2607,9 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # t feeds the class-count census, the vocab count AND the contrib
     # join (3 consumers): persist so the tokenize + per-doc-token agg
     # runs once (round-12 subtree lint)
-    t = (docs.select("doc_id", "lang",
-                     F.explode(tx.tokens(F.col("text"))).alias("tok"))
-         .groupBy("doc_id", "lang", "tok").agg(lcount("m"))).persist()
+    t = persist(docs.select("doc_id", "lang",
+                            F.explode(tx.tokens(F.col("text"))).alias("tok"))
+                .groupBy("doc_id", "lang", "tok").agg(lcount("m")))
     classes = docs.select(F.col("lang").alias("c")).distinct()
     ct = (t.groupBy(F.col("lang").alias("c"), "tok")
           .agg(F.sum("m").cast("bigint").alias("cnt")))
@@ -2811,16 +2812,16 @@ def pr_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # li feeds both self-join sides AND the degree census (3
     # consumers); deg feeds both broadcast sides — persist the bounded
     # distinct slice and the degree table (round-12 subtree lint)
-    li = (load_table(spark, sf_dir, "lineitem")
-          .filter(F.col("l_orderkey") < 4000)
-          .select(F.col("l_orderkey").alias("o"),
-                  F.col("l_partkey").alias("p")).distinct()).persist()
+    li = persist(load_table(spark, sf_dir, "lineitem")
+                 .filter(F.col("l_orderkey") < 4000)
+                 .select(F.col("l_orderkey").alias("o"),
+                         F.col("l_partkey").alias("p")).distinct())
     a = li.select("o", F.col("p").alias("i"))
     b = li.select("o", F.col("p").alias("j"))
     cooc = (a.join(b, "o").filter(F.col("i") < F.col("j"))
             .groupBy("i", "j").agg(lcount("c"))
             .filter(F.col("c") >= 2))
-    deg = li.groupBy(F.col("p")).agg(lcount("d")).persist()
+    deg = persist(li.groupBy(F.col("p")).agg(lcount("d")))
     di = deg.select(F.col("p").alias("i"), F.col("d").alias("__di"))
     dj = deg.select(F.col("p").alias("j"), F.col("d").alias("__dj"))
     return (cooc.join(F.broadcast(di), "i").join(F.broadcast(dj), "j")

@@ -15,7 +15,7 @@ from sanctions_data_pipeline_spark.catalog import load_table, widen_small_scan
 from sanctions_data_pipeline_spark.operators import similarity as sim
 from sanctions_data_pipeline_spark.operators import textstats as tx
 from sanctions_data_pipeline_spark.plans.helpers import (
-    fetch_if_small, lcount, local_frame, pround6)
+    fetch_if_small, lcount, local_frame, persist, pround6)
 from sanctions_data_pipeline_spark.plans.registry import register
 
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -130,7 +130,7 @@ def tx_perplexity(spark: SparkSession, sf_dir: str,
     # the true 3-pass floor (vocab -> model counts -> scoring) instead
     # of paying the bigram pipeline 3x. Persisting the corpus-scale bg
     # itself stays rejected (r11): broadcast-safe c2 is the right size.
-    c2 = bg.groupBy("w1", "w2").agg(lcount("c12")).persist()
+    c2 = persist(bg.groupBy("w1", "w2").agg(lcount("c12")))
     c2.count()
     c1 = c2.groupBy("w1").agg(F.sum("c12").alias("c1"))
     v = F.lit(len(vocab_rows) + 1)  # +1 for <unk>
@@ -281,21 +281,19 @@ def gr_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (a.join(b, "o").filter(F.col("src") != F.col("dst"))
              .groupBy("src", "dst").agg(lcount("w"))
              .filter(F.col("w") >= 3).select("src", "dst"))
-    sym = edges.persist()
-    labels = (sym.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node"))
-              .persist())
+    sym = persist(edges)
+    labels = persist(sym.select(F.col("src").alias("node")).distinct()
+                     .withColumn("label", F.col("node")))
     labels.count()
     for _ in range(_LP_ROUNDS):
         votes = (sym.join(labels.withColumnRenamed("node", "dst"), "dst")
                  .groupBy("src", "label").agg(lcount("cnt")))
-        nxt = (votes.groupBy("src")
-               .agg(F.min_by(
-                   "label",
-                   F.struct((-F.col("cnt")).alias("nc"),
-                            F.col("label").alias("lb"))).alias("label"))
-               .withColumnRenamed("src", "node")
-               .persist())
+        nxt = persist(votes.groupBy("src")
+                      .agg(F.min_by(
+                          "label",
+                          F.struct((-F.col("cnt")).alias("nc"),
+                                   F.col("label").alias("lb"))).alias("label"))
+                      .withColumnRenamed("src", "node"))
         nxt.count()
         labels.unpersist()
         labels = nxt
@@ -416,7 +414,7 @@ def q_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(F.explode(tx.tokens(F.col("text"))).alias("tok"))
     # exact feeds the top-10 probe AND the sketch cells: persist the
     # vocab-scale census so tokenization runs once (round-12 lint)
-    exact = toks.groupBy("tok").agg(lcount("exact_cnt")).persist()
+    exact = persist(toks.groupBy("tok").agg(lcount("exact_cnt")))
     top10 = exact.orderBy(F.desc("exact_cnt"), F.asc("tok")).limit(10)
 
     rows_ = spark.range(_CMS_D).select(F.col("id").cast("int").alias("d"))
@@ -786,31 +784,30 @@ def _bpe_train_py(rows, rounds: int):
     return merges, segs
 
 
-@register("tok_bpe_merges", headline=True, oracle=_BPE_MERGES_ORACLE)
-def tok_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # tokenize+explode is the CPU-heavy map stage of the vocab build:
-    # parallelize an under-split local scan (no-op at scale)
-    docs = widen_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-    words = (docs.select(F.explode(tx.tokens(F.col("text"))).alias("w"))
-             .groupBy("w").agg(lcount("cnt"))
-             .select(F.concat(F.split("w", ""),
-                              F.array(F.lit("</w>"))).alias("s"),
-                     "cnt")
-             .persist())
-    rows = fetch_if_small(words)
-    if rows is not None:
-        words.unpersist()
-        merges, _ = _bpe_train_py(rows, _BPE_ROUNDS)
-        return local_frame(
-            merges,
-            "merge_rank int, left string, right string, pair_count bigint")
+def _bpe_merge(col, a: str, b: str):
+    """``col``'s symbols re-segmented by the merge (a, b): BPE's greedy
+    left-to-right rule as one interpreted fold."""
+    ab = a + b
 
-    merges = []
+    def step(acc, x):  # PySpark's HOF arity check wants exactly (acc, x)
+        return F.when(
+            (F.size(acc) > 0)
+            & (F.element_at(acc, -1) == F.lit(a)) & (x == F.lit(b)),
+            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(ab)))
+        ).otherwise(F.concat(acc, F.array(x)))
+    return F.aggregate(col, F.array().cast("array<string>"), step)
+
+
+def _bpe_train_distributed(words: DataFrame) -> list:
+    """The distributed BPE trainer over a persisted (s, cnt) frame: per
+    round one pair-count argmax job and one persisted re-segmentation.
+    Returns [(rank, a, b, count)] like :func:`_bpe_train_py`."""
+    merges, seg = [], words
     for rnd in range(_BPE_ROUNDS):
         # adjacent_pairs yields [] for words merged down to ONE symbol
         # (s[i+1] on a size-1 array would throw under ANSI mode)
-        pairs = (words.select(F.explode(tx.adjacent_pairs(F.col("s")))
-                              .alias("p"), "cnt")
+        pairs = (seg.select(F.explode(tx.adjacent_pairs(F.col("s")))
+                            .alias("p"), "cnt")
                  .groupBy(F.col("p.w1").alias("a"), F.col("p.w2").alias("b"))
                  .agg(F.sum("cnt").alias("n")))
         best = (pairs.orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
@@ -820,22 +817,32 @@ def tok_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         a, b, n = best[0].a, best[0].b, int(best[0].n)
         merges.append((rnd + 1, a, b, n))
         if rnd + 1 == _BPE_ROUNDS:
-            break  # the final round's re-segmentation is never read —
-            # materializing it (fold + persist + count) was pure waste
-        ab = a + b
-        fold = F.aggregate(
-            F.col("s"),
-            F.array().cast("array<string>"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(a)) & (x == F.lit(b)),
-                F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                         F.array(F.lit(ab)))
-            ).otherwise(F.concat(acc, F.array(x))))
-        nxt = words.select(fold.alias("s"), "cnt").persist()
+            break  # the final round's re-segmentation is never read
+        nxt = persist(seg.select(_bpe_merge(F.col("s"), a, b).alias("s"),
+                                 "cnt"))
         nxt.count()
-        words.unpersist()
-        words = nxt
+        if seg is not words:  # the caller owns words
+            seg.unpersist()
+        seg = nxt
+    if seg is not words:
+        seg.unpersist()
+    return merges
+
+
+@register("tok_bpe_merges", headline=True, oracle=_BPE_MERGES_ORACLE)
+def tok_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # tokenize+explode is the CPU-heavy map stage of the vocab build:
+    # parallelize an under-split local scan (no-op at scale)
+    docs = widen_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    words = persist(docs.select(F.explode(tx.tokens(F.col("text")))
+                                .alias("w"))
+                    .groupBy("w").agg(lcount("cnt"))
+                    .select(F.concat(F.split("w", ""),
+                                     F.array(F.lit("</w>"))).alias("s"),
+                            "cnt"))
+    rows = fetch_if_small(words)
+    merges = (_bpe_train_distributed(words) if rows is None
+              else _bpe_train_py(rows, _BPE_ROUNDS)[0])
     words.unpersist()
     return local_frame(
         merges, "merge_rank int, left string, right string, pair_count bigint")
@@ -890,12 +897,11 @@ def tok_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     word = docs.select("doc_id",
                        F.explode(tx.tokens(F.col("text"))).alias("w"))
-    vocab = (word.groupBy("w").agg(lcount("cnt"))
-             .select("w",
-                     F.concat(F.split("w", ""),
-                              F.array(F.lit("</w>"))).alias("s"),
-                     "cnt")
-             .persist())
+    vocab = persist(word.groupBy("w").agg(lcount("cnt"))
+                    .select("w",
+                            F.concat(F.split("w", ""),
+                                     F.array(F.lit("</w>"))).alias("s"),
+                            "cnt"))
     rows = fetch_if_small(vocab)
     if rows is not None:
         # small-vocab switch: train + encode off one fetch (the pinned
@@ -906,28 +912,10 @@ def tok_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(r.w, len(r.s), len(seg)) for r, seg in zip(rows, segs)],
             "w string, n_raw int, n_enc int")
     else:
-        merges = [(r.left, r.right)
-                  for r in tok_bpe_merges(spark, sf_dir)
-                  .orderBy("merge_rank").collect()]
-
-        def apply_merge(a: str, b: str):
-            # closure factory: PySpark requires the HOF lambda to take
-            # exactly (acc, x) — defaults would inflate the arity check
-            ab = a + b
-
-            def step(acc, x):
-                return F.when(
-                    (F.size(acc) > 0)
-                    & (F.element_at(acc, -1) == F.lit(a)) & (x == F.lit(b)),
-                    F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                             F.array(F.lit(ab)))
-                ).otherwise(F.concat(acc, F.array(x)))
-            return step
-
+        # train on this census: the merges are tok_bpe_merges' own
         col = F.col("s")
-        for a, b in merges:
-            col = F.aggregate(col, F.array().cast("array<string>"),
-                              apply_merge(a, b))
+        for _, a, b, _ in _bpe_train_distributed(vocab.select("s", "cnt")):
+            col = _bpe_merge(col, a, b)
         enc = vocab.select("w", F.size("s").alias("n_raw"),
                            F.size(col).alias("n_enc"))
     per_word = word.join(enc, "w").select("doc_id", "n_raw", "n_enc")
@@ -1005,7 +993,7 @@ def dd_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sel feeds the size agg AND both sides of the shared-fp join:
         # persist so the k-gram window + distinct pipeline runs once,
         # not three times (same discipline as the collapse branch below)
-        return _winnow_pairs_from(_winnow_sel(docs).persist())
+        return _winnow_pairs_from(persist(_winnow_sel(docs)))
     # collapse-first (round 9, the operators/dedup.py pair-family
     # discipline): identical normalized text -> identical fingerprint
     # SET and count, so within-group pairs are (shared = nfp, sim = 1.0)
@@ -1015,7 +1003,7 @@ def dd_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups = dd._text_groups(docs, [], "doc_id", "text")
     reps = groups.select(F.col("rep").alias("doc_id"),
                          F.col("rep_text").alias("text"))
-    sel = _winnow_sel(reps).persist()
+    sel = persist(_winnow_sel(reps))
     rep_pairs = _winnow_pairs_from(sel)
     sizes = (sel.groupBy("doc_id").agg(lcount("nfp"))
              .withColumnRenamed("doc_id", "rep"))
@@ -1057,7 +1045,7 @@ def _winnow_pairs_from(sel: DataFrame) -> DataFrame:
     # both broadcast sides below consume this agg: persist so it runs
     # once, not twice (round-12 subtree lint; narrow (doc_id, nfp)
     # rows, the corpus-linear-narrow persist class of round 11)
-    sizes = sel.groupBy("doc_id").agg(lcount("nfp")).persist()
+    sizes = persist(sel.groupBy("doc_id").agg(lcount("nfp")))
     a = sel.select(F.col("doc_id").alias("i"), "fp")
     b = sel.select(F.col("doc_id").alias("j"), "fp")
     cnt = (a.join(b, "fp").filter(F.col("i") < F.col("j"))
@@ -1143,9 +1131,9 @@ def gr_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     # note was measured false — the AQE-final physical plan held 20
     # distinct Exchanges, 10 lineitem scans and ZERO ReusedExchange
     # (reuse does not fire across differently-projected consumers).
-    inst = (li.join(b, "o").filter(F.col("p") != F.col("p2"))
-            .groupBy(F.col("p").alias("src"), F.col("p2").alias("dst"))
-            .agg(lcount("c"))).persist()
+    inst = persist(li.join(b, "o").filter(F.col("p") != F.col("p2"))
+                   .groupBy(F.col("p").alias("src"), F.col("p2").alias("dst"))
+                   .agg(lcount("c")))
     # Poisson-tail edge threshold from ONE bounded scalar (sum of
     # co-occurrence instances); float math is the same IEEE sequence
     # as the oracle's FLOOR(lam + 2*sqrt(lam)) + 1
@@ -1155,8 +1143,7 @@ def gr_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = inst.filter(F.col("c") >= thr).select("src", "dst")
     # both degree broadcasts (da/db) consume this agg: persist the
     # bounded node-degree table so it aggregates once
-    deg = (e.groupBy(F.col("src").alias("node")).agg(lcount("d"))
-           .persist())
+    deg = persist(e.groupBy(F.col("src").alias("node")).agg(lcount("d")))
     e1 = e.select(F.col("src").alias("a"), "dst")
     e2 = e.select(F.col("src").alias("b"), "dst")
     wedge = (e1.join(e2, "dst").filter(F.col("a") < F.col("b"))

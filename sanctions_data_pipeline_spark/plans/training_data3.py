@@ -17,7 +17,7 @@ from sanctions_data_pipeline_spark.catalog import load_table, widen_small_scan
 from sanctions_data_pipeline_spark.operators import similarity as sim
 from sanctions_data_pipeline_spark.operators import textstats as tx
 from sanctions_data_pipeline_spark.plans.helpers import (
-    fetch_if_small, lcount, local_frame, pround6, sql_pround6,
+    fetch_if_small, lcount, local_frame, persist, pround6, sql_pround6,
 )
 from sanctions_data_pipeline_spark.plans.registry import register
 
@@ -517,15 +517,15 @@ def dd_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     t = docs.select("doc_id", tx.tokens(F.col("text")).alias("toks"))
     n_chunks = F.ceil(F.size("toks") / F.lit(float(_LD_W))).cast("long")
-    c = (t.select("doc_id", "toks",
-                  F.explode(F.sequence(F.lit(0).cast("long"),
-                                       n_chunks - 1)).alias("idx"))
-         .select("doc_id", "idx",
-                 F.md5(F.concat_ws(
-                     " ", F.slice(F.col("toks"),
-                                  (F.col("idx") * _LD_W + 1).cast("int"),
-                                  _LD_W))).alias("ck"))
-         .persist())
+    c = persist(t.select("doc_id", "toks",
+                         F.explode(F.sequence(F.lit(0).cast("long"),
+                                              n_chunks - 1)).alias("idx"))
+                .select("doc_id", "idx",
+                        F.md5(F.concat_ws(
+                            " ", F.slice(
+                                F.col("toks"),
+                                (F.col("idx") * _LD_W + 1).cast("int"),
+                                _LD_W))).alias("ck")))
     first = c.groupBy("ck").agg(
         F.min(F.struct(F.col("doc_id"), F.col("idx"))).alias("first"))
     kept = (c.join(first, "ck")
@@ -621,7 +621,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (d.groupBy("term", "doc_id")
                 .agg(lcount("tf"), F.min("dl").cast("bigint").alias("dl")))
 
-    tcached = t.persist()
+    tcached = persist(t)
     df = postings(tcached).groupBy("term").agg(lcount("df"))
     # the top-Q term list and the two corpus scalars ride ONE collect
     # (a tagged union — the tok_unigram_lm seed idiom), so the
@@ -905,7 +905,7 @@ def tx_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mix_ccnet_sampling, composing this op, inherits the same single
     # materialization. The cached table is (doc_id, n_bigrams, ppl) —
     # corpus-linear and 3 columns wide, never the bigram stream.
-    p = tx_perplexity(spark, sf_dir).persist()
+    p = persist(tx_perplexity(spark, sf_dir))
     # sharded NTILE(3) on perplexity — no single-partition corpus sort
     # (mix_ccnet_sampling composes this, so it scales out too)
     return (sharded_ntile(p, F.col("ppl"),
@@ -1257,9 +1257,8 @@ def _unigram_seed_and_words(spark: SparkSession, sf_dir: str):
     # tokenize+explode is the CPU-heavy map stage of the word census:
     # parallelize an under-split local scan (no-op at scale)
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-    words = (docs.select(F.explode(tx.tokens(F.col("text"))).alias("w"))
-             .groupBy("w").agg(lcount("c"))
-             .persist())
+    words = persist(docs.select(F.explode(tx.tokens(F.col("text"))).alias("w"))
+                    .groupBy("w").agg(lcount("c")))
 
     # candidate substrings, lengths 1..MAX_PIECE_LEN, weighted by word
     # count (shared generator with the broadcast-join segmentation path).
@@ -1267,10 +1266,9 @@ def _unigram_seed_and_words(spark: SparkSession, sf_dir: str):
     # tags each side), so the substring explode + count + the persisted
     # words table materialize in a single Spark job instead of three;
     # persist so the two union branches share one computation of cand.
-    cand = (words.select(
+    cand = persist(words.select(
         "c", F.explode(ug.substrings_up_to_max(F.col("w"))).alias("piece"))
-        .groupBy("piece").agg(F.sum("c").alias("cnt"))
-        .persist())
+        .groupBy("piece").agg(F.sum("c").alias("cnt")))
 
     rows = (cand.orderBy(F.desc("cnt"), F.asc("piece")).limit(_UNI_SEED)
             .select("piece", "cnt", F.lit(True).alias("is_top"))
@@ -1442,11 +1440,11 @@ def gr_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_partkey") < 200)
     co = li.select(F.col("l_orderkey").alias("o"),
                    F.col("l_partkey").alias("p")).distinct()
-    edges = (co.join(co.withColumnRenamed("p", "q"), "o")
-             .filter(F.col("p") != F.col("q"))
-             .groupBy(F.col("p").alias("src"), F.col("q").alias("dst"))
-             .agg(lcount("w")).filter(F.col("w") >= 3)
-             .select("src", "dst").persist())
+    edges = persist(co.join(co.withColumnRenamed("p", "q"), "o")
+                    .filter(F.col("p") != F.col("q"))
+                    .groupBy(F.col("p").alias("src"), F.col("q").alias("dst"))
+                    .agg(lcount("w")).filter(F.col("w") >= 3)
+                    .select("src", "dst"))
     n_edges = edges.count()  # materialize: every half-step reuses the
     # cache, so the candidate pipeline runs once (dd_cluster lesson)
     if n_edges == 0:  # graph vanishes at some SFs (w>=3 co-occurrence)
@@ -1464,20 +1462,20 @@ def gr_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         # instead of re-deriving the whole graph per crossJoin branch
         return float(df.collect()[0][0])
 
-    ind = edges.groupBy("dst").agg(lcount("d_in")).persist()
+    ind = persist(edges.groupBy("dst").agg(lcount("d_in")))
     # norm of the integer in-degree vector: exact bigint sum -> sqrt
     z1 = scalar(ind.agg(F.sqrt((F.sum(F.col("d_in") * F.col("d_in")))
                                .cast("bigint").cast("double"))))
     a1 = ind.select(F.col("dst").alias("node"),
                     (F.col("d_in").cast("double") / F.lit(z1)).alias("a"))
-    h1r = (edges.join(a1.withColumnRenamed("node", "dst"), "dst")
-           .groupBy(F.col("src").alias("node")).agg(fold("a").alias("h"))
-           .persist())
+    h1r = persist(edges.join(a1.withColumnRenamed("node", "dst"), "dst")
+                  .groupBy(F.col("src").alias("node"))
+                  .agg(fold("a").alias("h")))
     zh = scalar(h1r.agg(F.sqrt(fold(F.col("h") * F.col("h")))))
-    h1 = h1r.select("node", (F.col("h") / F.lit(zh)).alias("h")).persist()
-    a2r = (edges.join(h1.withColumnRenamed("node", "src"), "src")
-           .groupBy(F.col("dst").alias("node")).agg(fold("h").alias("a"))
-           .persist())
+    h1 = persist(h1r.select("node", (F.col("h") / F.lit(zh)).alias("h")))
+    a2r = persist(edges.join(h1.withColumnRenamed("node", "src"), "src")
+                  .groupBy(F.col("dst").alias("node"))
+                  .agg(fold("h").alias("a")))
     za = scalar(a2r.agg(F.sqrt(fold(F.col("a") * F.col("a")))))
     a2 = a2r.select("node", (F.col("a") / F.lit(za)).alias("a"))
     out = (a2.join(ind.withColumnRenamed("dst", "node"), "node")
@@ -2047,10 +2045,10 @@ def gr_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_partkey") < 100)
     co = li.select(F.col("l_orderkey").alias("o"),
                    F.col("l_partkey").alias("p")).distinct()
-    edges = (co.join(co.withColumnRenamed("p", "q"), "o")
-             .filter(F.col("p") != F.col("q"))
-             .select(F.col("p").alias("src"), F.col("q").alias("dst"))
-             .distinct().persist())
+    edges = persist(co.join(co.withColumnRenamed("p", "q"), "o")
+                    .filter(F.col("p") != F.col("q"))
+                    .select(F.col("p").alias("src"), F.col("q").alias("dst"))
+                    .distinct())
     edges.count()
 
     alive = edges.select(F.col("src").alias("v")).distinct()
@@ -2347,10 +2345,10 @@ def gr_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edges feeds three consumers (the degree census + both pair-join
     # probes): persist the narrow (src, dst) list so the co-occurrence
     # self-join + distinct runs once (round-12 subtree lint)
-    edges = (co.join(co.withColumnRenamed("p", "q"), "o")
-             .filter(F.col("p") != F.col("q"))
-             .select(F.col("p").alias("src"), F.col("q").alias("dst"))
-             .distinct().persist())
+    edges = persist(co.join(co.withColumnRenamed("p", "q"), "o")
+                    .filter(F.col("p") != F.col("q"))
+                    .select(F.col("p").alias("src"), F.col("q").alias("dst"))
+                    .distinct())
     deg = edges.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d"))
     pairs = (edges
@@ -3133,8 +3131,8 @@ FROM pair JOIN item ia ON pair.ante = ia.p
 @register("q_market_basket", oracle=_MB_ORACLE)
 def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_partkey") < 200)
-    co = li.select(F.col("l_orderkey").alias("o"),
-                   F.col("l_partkey").alias("p")).distinct().persist()
+    co = persist(li.select(F.col("l_orderkey").alias("o"),
+                           F.col("l_partkey").alias("p")).distinct())
     n_orders = co.select("o").distinct().count()  # bounded driver scalar
     item = co.groupBy("p").agg(lcount("s"))
     pair = (co.join(co.withColumnRenamed("p", "q"), "o")
@@ -3211,13 +3209,8 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persist the per-customer rollup first: each ntile runs a
     # key-bounds job, and without the persist each bounds job would
     # re-execute the orders aggregation plus every preceding ntile.
-    # DELIBERATELY not unpersisted: the returned lazy plan references
-    # this subtree 8x (2 scans per chained ntile), so dropping the
-    # cache before the caller materializes would multiply the orders
-    # agg. One per-customer table stays cached per invocation — the
-    # same single-bounded-table retention as gr_label_prop's final
-    # labels; Spark evicts it LRU under memory pressure.
-    o = o.persist()
+    # The returned plan reads it 8x, lazily (see query_scope).
+    o = persist(o)
     # ONE bounds job for all three axes (round-12): each chained ntile
     # used to run its own min/max job over the cached frame (3 jobs);
     # min/max of every key ride a single agg and thread through via
@@ -3345,10 +3338,10 @@ def gr_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
           .filter(F.col("l_orderkey") < 2000)
           .select(F.col("l_orderkey").alias("o"),
                   F.col("l_partkey").alias("p")).distinct())
-    e0 = (li.select("o", F.col("p").alias("u"))
-          .join(li.select("o", F.col("p").alias("v")), "o")
-          .filter(F.col("u") < F.col("v"))
-          .select("u", "v").distinct().persist())
+    e0 = persist(li.select("o", F.col("p").alias("u"))
+                 .join(li.select("o", F.col("p").alias("v")), "o")
+                 .filter(F.col("u") < F.col("v"))
+                 .select("u", "v").distinct())
     deg = (e0.select(F.col("u").alias("node"))
            .union(e0.select(F.col("v").alias("node")))
            .groupBy("node").agg(lcount("d")))
@@ -4193,8 +4186,8 @@ def tok_fertility_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         tok_bpe_encode)
 
     docs = load_table(spark, sf_dir, "documents")
-    words = (docs.select(F.explode(tx.tokens(F.col("text"))).alias("w"))
-             .groupBy("w").agg(lcount("c")).persist())
+    words = persist(docs.select(F.explode(tx.tokens(F.col("text"))).alias("w"))
+                    .groupBy("w").agg(lcount("c")))
     totals = words.agg(
         F.sum("c").cast("bigint"),
         F.sum(F.col("c") * F.length("w")).cast("bigint")).collect()[0]

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from sanctions_data_pipeline_spark.plans.helpers import persist
+
 DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("text", T.StringType()),
@@ -44,11 +46,11 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     PERMISSIVE-mode caveat: Spark refuses to run a query that touches
     ``_corrupt_record`` on the raw source
     (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the parsed result must be
-    materialized first. We ``cache()`` here, which is right for a
+    materialized first. We persist here, which is right for a
     one-pass split; an ingest pipeline at 100 TB lands the parsed frame
     to parquet once and splits from there instead of caching.
     """
-    df = df.cache()
+    df = persist(df)
     clean = (df.filter(F.col("_corrupt_record").isNull())
              .drop("_corrupt_record"))
     bad = (df.filter(F.col("_corrupt_record").isNotNull())

@@ -29,6 +29,7 @@ def oracle_problems(spark):
     import os
 
     from sanctions_data_pipeline_spark.plans import registry
+    from sanctions_data_pipeline_spark.plans.helpers import query_scope
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
@@ -37,7 +38,8 @@ def oracle_problems(spark):
     spec.loader.exec_module(co)
 
     def run(sf_dir: str, name: str):
-        got = registry.queries()[name](spark, sf_dir).toPandas()
+        with query_scope():
+            got = registry.queries()[name](spark, sf_dir).toPandas()
         want = co.duck_con(sf_dir).execute(
             registry.oracle_sql()[name]).fetchdf()
         return co.compare(name, got, want), got

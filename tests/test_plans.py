@@ -13,6 +13,7 @@ import io
 
 import pytest
 
+from sanctions_data_pipeline_spark.plans.helpers import persist, query_scope
 from sanctions_data_pipeline_spark.plans.registry import REGISTRY, queries
 
 queries()  # force lazy registry load before REGISTRY is inspected
@@ -768,15 +769,14 @@ def test_subtree_lint_expectation_is_curated(spark, sf_dir):
                     "q_forecast_backtest"}
     qs = queries()
     for name in must_be_clean:
-        df = qs[name](spark, sf_dir)
-        assert lint.lint_plan(df) == [], f"{name} regressed: lost a persist"
-        spark.catalog.clearCache()
+        with query_scope():
+            assert lint.lint_plan(qs[name](spark, sf_dir)) == [], (
+                f"{name} regressed: lost a persist")
     for name in sorted(leave_alones):
-        df = qs[name](spark, sf_dir)
-        assert lint.lint_plan(df), (
-            f"{name}: documented leave-alone no longer flags — "
-            "update the rationale in OPTIMIZATION_r12.md")
-        spark.catalog.clearCache()
+        with query_scope():
+            assert lint.lint_plan(qs[name](spark, sf_dir)), (
+                f"{name}: documented leave-alone no longer flags — "
+                "update the rationale in OPTIMIZATION_r12.md")
 
 
 def test_fetch_if_small_bounds_and_jobs(spark, monkeypatch):
@@ -817,6 +817,64 @@ def test_fetch_if_small_bounds_and_jobs(spark, monkeypatch):
                 lambda df: df.collect() if df.count() <= 100_000 else None)
     fetch = jobs("gate-fetch", lambda df: fetch_if_small(df, 100_000))
     assert fetch < gate, (fetch, gate)
+
+
+def test_query_scope_releases_only_its_own_entries(spark):
+    """A scope unpersists the entries ``persist`` created inside it, on
+    exit and on error; an entry cached before it under the same
+    canonical plan survives; a nested scope releases only its own; and
+    ``persist`` outside a scope leaves its entry to the caller."""
+    from pyspark.sql import functions as F
+
+    entries = spark._jsparkSession.sharedState().cacheManager() \
+        .numCachedEntries
+
+    def agg(k):
+        return spark.range(1000).groupBy((F.col("id") % k).alias("g")).count()
+
+    def cached(k):
+        return agg(k).storageLevel.useMemory
+
+    base = entries()
+    owner = persist(agg(7))  # no scope open: the caller owns it
+    with query_scope():
+        persist(agg(7)).count()  # aliases owner's entry
+        persist(agg(11)).count()
+        assert entries() == base + 2
+    assert cached(7) and not cached(11) and entries() == base + 1
+    with pytest.raises(ValueError), query_scope():
+        persist(agg(13)).count()
+        raise ValueError
+    assert not cached(13) and entries() == base + 1
+    with query_scope():
+        persist(agg(17))
+        with query_scope():
+            persist(agg(19))
+            assert entries() == base + 3
+        assert cached(17) and not cached(19)
+    assert not cached(17) and entries() == base + 1
+    owner.unpersist()
+    assert entries() == base
+
+
+def test_query_scope_releases_what_builders_leave(spark, sf_dir, tmp_path):
+    """Registry entries whose returned frames read persisted
+    intermediates leave nothing cached once built and sunk inside a
+    scope. The tables are read through a fresh path, so no entry an
+    earlier test left under the same plan can hide a leak."""
+    entries = spark._jsparkSession.sharedState().cacheManager() \
+        .numCachedEntries
+    sf = tmp_path / "sf0.001"
+    sf.symlink_to(sf_dir)
+    qs = queries()
+    for name in ("dd_minhash_lsh", "tx_bigram_pmi", "q_kaplan_meier",
+                 "mm_phash"):
+        before = entries()
+        with query_scope():
+            qs[name](spark, str(sf)).write.format("noop") \
+                .mode("overwrite").save()
+            assert entries() > before, name
+        assert entries() == before, name
 
 
 def test_local_frame_types_nulls_and_plan(spark):
@@ -860,7 +918,9 @@ def test_driver_round_trips_go_through_the_helpers():
     """One path per direction: ``createDataFrame`` appears only inside
     ``helpers.local_frame`` and at emb_pca_full's pandas input (already
     Arrow), and no ``count()`` feeds a ``<=`` gate whose branch collects
-    — size gates fetch through ``helpers.fetch_if_small``."""
+    — size gates fetch through ``helpers.fetch_if_small``. One owner of
+    cache lifetime: ``persist()``/``cache()`` appear only inside
+    ``helpers.persist``, and no module calls ``clearCache``."""
     import ast
     import pathlib
 
@@ -875,15 +935,21 @@ def test_driver_round_trips_go_through_the_helpers():
                 or isinstance(node, ast.Name) and node.id in counted)
 
     root = pathlib.Path(pkg.__file__).parent
-    sites, gates = set(), []
+    sites, persists, clears, gates = set(), set(), [], []
     for path in sorted(root.rglob("*.py")):
         mod = str(path.relative_to(root))
-        tree = ast.parse(path.read_text(), mod)
+        src = path.read_text()
+        tree = ast.parse(src, mod)
         fns = [f for f in tree.body if isinstance(f, ast.FunctionDef)]
-        for c in calls(tree, "createDataFrame"):
-            sites.add((mod, next((f.name for f in fns
-                                  if f.lineno <= c.lineno <= f.end_lineno),
-                                 None)))
+
+        def site(c):
+            return (mod, next((f.name for f in fns
+                               if f.lineno <= c.lineno <= f.end_lineno), None))
+        sites |= {site(c) for c in calls(tree, "createDataFrame")}
+        persists |= {site(c) for a in ("persist", "cache")
+                     for c in calls(tree, a)}
+        if "clearCache(" in src:
+            clears.append(mod)
         # a branch collects directly or through a module function that does
         collecting = {f.name for f in fns if calls(f, "collect")}
         for fn in ast.walk(tree):
@@ -908,3 +974,5 @@ def test_driver_round_trips_go_through_the_helpers():
     assert sites == {("plans/helpers.py", "local_frame"),
                      ("plans/training_data.py", "emb_pca_full")}, sites
     assert gates == [], gates
+    assert persists == {("plans/helpers.py", "persist")}, persists
+    assert clears == [], clears

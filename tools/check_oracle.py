@@ -21,7 +21,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sanctions_data_pipeline_spark.catalog import TABLES  # noqa: E402
-from sanctions_data_pipeline_spark.plans import registry  # noqa: E402
+from sanctions_data_pipeline_spark.plans import helpers, registry  # noqa: E402
 from sanctions_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -104,8 +104,8 @@ def main() -> int:
     for name in names:
         t0 = time.time()
         try:
-            sdf = qs[name](spark, sf_dir)
-            spark_pdf = sdf.toPandas()
+            with helpers.query_scope():
+                spark_pdf = qs[name](spark, sf_dir).toPandas()
         except Exception:
             print(f"FAIL  {name}: spark error\n{traceback.format_exc()}")
             failures += 1

@@ -15,7 +15,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sanctions_data_pipeline_spark.plans import registry  # noqa: E402
+from sanctions_data_pipeline_spark.plans import helpers, registry  # noqa: E402
 from sanctions_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -43,7 +43,8 @@ def main() -> None:
     for name in names:
         qd = registry.REGISTRY[name]
         spark.sparkContext.setJobDescription(f"dump_plans:{name}")
-        formatted = final_plan(qd.build(spark, sf_dir))
+        with helpers.query_scope():
+            formatted = final_plan(qd.build(spark, sf_dir))
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(f"# {name} ({suffix}) — explain('formatted'), "

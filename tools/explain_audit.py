@@ -13,12 +13,13 @@ Usage: python tools/explain_audit.py [sf_dir] > PLANS.md
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dump_plans import final_plan  # noqa: E402
-from sanctions_data_pipeline_spark.plans import registry  # noqa: E402
+from sanctions_data_pipeline_spark.plans import helpers, registry  # noqa: E402
 from sanctions_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -34,19 +35,19 @@ def main() -> None:
     print()
     for name in names:
         qd = registry.REGISTRY[name]
-        df = qd.build(spark, sf_dir)
-        formatted = final_plan(df)
-        # AQE defers codegen into query stages, so count subtrees on a
-        # static (AQE-off) build of the same query
-        import re
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            cg = df._sc._jvm.PythonSQLUtils.explainString(
-                qd.build(spark, sf_dir)._jdf.queryExecution(), "codegen")
-        except Exception:
-            cg = ""
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
+        with helpers.query_scope():
+            df = qd.build(spark, sf_dir)
+            formatted = final_plan(df)
+            # AQE defers codegen into query stages, so count subtrees on
+            # a static (AQE-off) build of the same query
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+            try:
+                cg = df._sc._jvm.PythonSQLUtils.explainString(
+                    qd.build(spark, sf_dir)._jdf.queryExecution(), "codegen")
+            except Exception:
+                cg = ""
+            finally:
+                spark.conf.set("spark.sql.adaptive.enabled", "true")
         m = re.search(r"Found (\d+) WholeStageCodegen subtrees", cg)
         n_codegen = int(m.group(1)) if m else 0
         n_exchange = formatted.count("Exchange")

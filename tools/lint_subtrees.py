@@ -37,7 +37,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sanctions_data_pipeline_spark.plans import registry  # noqa: E402
+from sanctions_data_pipeline_spark.plans import helpers, registry  # noqa: E402
 from sanctions_data_pipeline_spark.session import get_spark  # noqa: E402
 
 HEAVY = (
@@ -112,17 +112,14 @@ def main() -> None:
     for name in names:
         spark.sparkContext.setJobDescription(f"lint:{name}")
         try:
-            df = qs[name](spark, sf_dir)
-            hits = lint_plan(df)
+            with helpers.query_scope():
+                hits = lint_plan(qs[name](spark, sf_dir))
         except Exception as exc:  # noqa: BLE001 - audit must finish
             print(f"ERR   {name}: {type(exc).__name__}: {exc}")
             continue
         for count, n, root, s in hits:
             n_flagged += 1
             print(f"DUP   {name}: x{count} nodes={n} root={root} :: {s}")
-        # keep the cache manager clean between builders so one query's
-        # persists never mask (or alias into) the next one's plan
-        spark.catalog.clearCache()
     print(f"done: {len(names)} queries, {n_flagged} duplicated heavy "
           f"subtrees flagged")
 

@@ -18,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dump_plans import final_plan  # noqa: E402
-from sanctions_data_pipeline_spark.plans import registry  # noqa: E402
+from sanctions_data_pipeline_spark.plans import helpers, registry  # noqa: E402
 from sanctions_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -57,17 +57,18 @@ def main() -> None:
                  + (f"; did you mean {', '.join(near)}?" if near else ""))
 
     spark = get_spark("run_query")
-    df = registry.queries()[args.query](spark, args.sf)
-    t0 = time.time()
-    if args.save:
-        df.write.mode("overwrite").parquet(args.save)
-        print(f"wrote {spark.read.parquet(args.save).count()} rows "
-              f"to {args.save} in {time.time() - t0:.2f}s")
-    else:
-        df.show(args.limit, truncate=False)
-        print(f"[{args.query} @ {args.sf}: {time.time() - t0:.2f}s]")
-    if args.explain:
-        print(final_plan(df))
+    with helpers.query_scope():
+        df = registry.queries()[args.query](spark, args.sf)
+        t0 = time.time()
+        if args.save:
+            df.write.mode("overwrite").parquet(args.save)
+            print(f"wrote {spark.read.parquet(args.save).count()} rows "
+                  f"to {args.save} in {time.time() - t0:.2f}s")
+        else:
+            df.show(args.limit, truncate=False)
+            print(f"[{args.query} @ {args.sf}: {time.time() - t0:.2f}s]")
+        if args.explain:
+            print(final_plan(df))
 
 
 if __name__ == "__main__":
